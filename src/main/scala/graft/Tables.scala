@@ -59,14 +59,21 @@ object Tables {
       }
     } catch { case _: Throwable => (-1L, -1L) }
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    stamped(spark, sfDir, name)._1
+
+  /** [[table]] plus the (bytes, newest mtime) stamp its reader is keyed
+    * by — the staleness fingerprint for artifacts DERIVED from the
+    * table (the IVF index memos key on it), taken from the same single
+    * directory walk. (-1, -1) when the stat fails. */
+  def stamped(spark: SparkSession, sfDir: String, name: String): (DataFrame, (Long, Long)) = {
     val path = s"$sfDir/$name.parquet"
     graft.functions.SessionEvict.hook(spark)
     readers.keys.filter(_._1.sparkContext.isStopped).foreach(readers.remove)
     val (bytes, mtime) = dirStat(path)
     // a failed stat must not pin a reader under the sentinel key
     // across distinct error states (ADVICE r17)
-    if (bytes < 0) return spark.read.parquet(path)
+    if (bytes < 0) return (spark.read.parquet(path), (bytes, mtime))
     // drop superseded (size, mtime) generations of this (session,
     // path) so a session that regenerates testdata repeatedly doesn't
     // leak one logical plan + file index per generation (ADVICE r17)
@@ -74,8 +81,8 @@ object Tables {
       .filter(k => (k._1 eq spark) && k._2 == path &&
         (k._3 != bytes || k._4 != mtime))
       .foreach(readers.remove)
-    readers.getOrElseUpdate((spark, path, bytes, mtime),
-      spark.read.parquet(path))
+    (readers.getOrElseUpdate((spark, path, bytes, mtime),
+      spark.read.parquet(path)), (bytes, mtime))
   }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")

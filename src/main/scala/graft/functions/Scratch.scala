@@ -9,10 +9,17 @@ package graft.functions
   */
 object Scratch {
 
+  /** One spelling per input dir, absolute and normalized, so `sf`,
+    * `sf/` and `./x/../sf` name one location and one memo entry. A key,
+    * not a path to read through. */
+  def canonicalDir(dir: String): String =
+    java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
+
   /** Deterministic path for (name, dir) — no filesystem side effects,
-    * so oracle SQL bindings can derive the same location. */
+    * so oracle SQL bindings can derive the same location. The dir is
+    * hashed in its [[canonicalDir]] form. */
   def pathOf(name: String, dir: String): String = {
-    val key = java.lang.Integer.toHexString(dir.hashCode)
+    val key = java.lang.Integer.toHexString(canonicalDir(dir).hashCode)
     java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
       "graft_scratch", s"${name}_$key").toString
   }

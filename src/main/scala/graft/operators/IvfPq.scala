@@ -264,8 +264,8 @@ object IvfPq {
     *  - probe ranking is the shared [[IvfIndex.probePairs]] (broadcast
     *    centroid dictionary, bounded top-nprobe agg, codegen kernel);
     *  - candidates are one equi-join of the (qid, probed-centroid)
-    *    pairs against the centroid-partitioned assignment table —
-    *    partition pruning expressed as a join key, candidate volume
+    *    pairs against the assigned index — the cell restriction
+    *    expressed as a join key, candidate volume
     *    |queries| × nprobe/nlist × N;
     *  - each query's 8×16 ADC lookup table is computed as a ROW of an
     *    answer-sized frame ([[PqIndex.adcTable]]) and broadcast; the

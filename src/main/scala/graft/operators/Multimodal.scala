@@ -294,7 +294,7 @@ object Multimodal {
     *
     * Plan shape: centroid dictionary broadcast against the anchor
     * scan; (anchor → probed cell) pairs equi-join the
-    * centroid-partitioned index on centroid_id; the wrong-source mask
+    * assigned index on centroid_id; the wrong-source mask
     * sits inside the scoring join before the bounded top-k. */
   def pairMiningIvf(s: SparkSession, dir: String): DataFrame = {
     // BLOCKING geometry, not the capped serving default: past the

@@ -21,6 +21,20 @@ object GraftColumnBridge {
   def analyzed(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
+  /** `df`'s rows computed once into an RDD persisted at `level`, and a
+    * frame over that RDD (`Scan ExistingRDD`). The RDD is returned so
+    * the owner can unpersist it. The frame keeps full lineage (a lost
+    * block is recomputed, unlike `localCheckpoint`) and carries `df`'s
+    * optimizer statistics, so joins over it plan as they did over
+    * `df`. Lazy: the first action over either fills the cache. */
+  def persisted(df: DataFrame, level: org.apache.spark.storage.StorageLevel)
+      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val rdd = ds.queryExecution.toRdd.map(_.copy()).persist(level)
+    (classic.Dataset.ofRows(ds.sparkSession,
+      execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false)), rdd)
+  }
+
   /** Register a scalar function on a live session (the
     * non-.withExtensions path; sessionState is private[sql]). */
   def registerFunction(spark: SparkSession, name: String,

@@ -422,12 +422,79 @@ class AnnSpec extends AnyFunSuite {
 
   test("index cache is evictable: clearCache drops entries, rebuild still works") {
     import graft.operators.IvfIndex
+    IvfIndex.clearCache()
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.size
     IvfIndex.build(spark, sf)
     assert(IvfIndex.cacheSize >= 1)
+    assert(spark.sparkContext.getPersistentRDDs.size > persistedBefore,
+      "build must hold the assigned rows")
     IvfIndex.clearCache()
     assert(IvfIndex.cacheSize == 0)
+    assert(spark.sparkContext.getPersistentRDDs.size == persistedBefore,
+      "clearCache must release the held rows")
     val (_, centroids) = IvfIndex.build(spark, sf)
     assert(centroids.length == IvfIndex.defaultNlist(IvfIndex.corpusCount(spark, sf)))
+  }
+
+  test("warm probe reads the held index: no exchange, no re-assignment, same answer") {
+    import org.apache.spark.sql.functions.col
+    val (index, centroids) = IvfIndex.build(spark, sf)
+    val query = Tables.embeddings(spark, sf)
+      .filter(col("vec_id") === 0).select("embedding").collect()(0).getSeq[Float](0).toArray
+    val probe = IvfIndex.search(spark, index.filter(col("vec_id") =!= 0), centroids, query, k = 10)
+    val rows = probe.collect().map(_.toSeq).toSeq
+    val plan = probe.queryExecution.executedPlan.toString
+    assert(plan.contains("Scan ExistingRDD"), plan)
+    assert(!plan.contains("Exchange"), s"a warm probe must not shuffle:\n$plan")
+    // KMeansModel.transform's predict is a Scala UDF; its absence means
+    // the probe filters assigned rows instead of assigning again
+    assert(!plan.contains("UDF"), s"a warm probe must not re-assign:\n$plan")
+    // the held frame keeps the assignment plan's size estimate; a bare
+    // LogicalRDD reports spark.sql.defaultSizeInBytes (Long.MaxValue)
+    // and would never be chosen as a broadcast side
+    assert(index.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(Long.MaxValue))
+    // same rows as the probe over the at-rest layout...
+    val path = java.nio.file.Files.createTempDirectory("graft_ivf_warm").toString + "/idx"
+    IvfIndex.writeIndex(index, path)
+    val atRest = IvfIndex.search(spark, IvfIndex.readIndex(spark, path).filter(col("vec_id") =!= 0),
+      centroids, query, k = 10).collect().map(_.toSeq).toSeq
+    assert(rows == atRest)
+    // ...and the full probe over the held rows is the exact answer
+    val full = IvfIndex.search(spark, index.filter(col("vec_id") =!= 0), centroids, query,
+      k = 10, nprobe = centroids.length).collect().map(_.toSeq).toSeq
+    assert(full == VectorSearch.knnCosine(spark, sf).collect().map(_.toSeq).toSeq)
+  }
+
+  test("build memo follows the corpus: an in-place rewrite refits and releases the old rows") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    def corpus(n: Int) = (0 until n).map(i => (i.toLong, Seq.fill(8)(rnd.nextFloat())))
+      .toDF("vec_id", "embedding")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_stale").toString
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    corpus(300).write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
+    val before = persisted
+    val (old, _) = IvfIndex.build(spark, tmp)
+    val oldRows = persisted -- before
+    assert(oldRows.nonEmpty && old.count() == 300)
+    assert(IvfIndex.build(spark, tmp)._1 eq old, "an unchanged corpus must hit the memo")
+    corpus(200).write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
+    val (fresh, _) = IvfIndex.build(spark, tmp)
+    assert(!(fresh eq old), "a rewritten corpus must refit")
+    assert(fresh.count() == 200 && IvfIndex.corpusCount(spark, tmp) == 200)
+    assert((persisted & oldRows).isEmpty, "the superseded rows must be released")
+  }
+
+  test("one corpus dir, one index: path spellings share the memo entry and artifact dir") {
+    val before = IvfIndex.cacheSize
+    val (a, ca) = IvfIndex.build(spark, sf)
+    val (b, cb) = IvfIndex.build(spark, sf + "/")
+    val rel = java.nio.file.Paths.get("").toAbsolutePath.relativize(java.nio.file.Paths.get(sf))
+    val (c, _) = IvfIndex.build(spark, s"./$rel/../${java.nio.file.Paths.get(sf).getFileName}")
+    assert((a eq b) && (ca eq cb) && (a eq c), "alias spellings must hit one memo entry")
+    assert(IvfIndex.cacheSize <= before + 1)
+    assert(IvfIndex.dumpDir(sf) == IvfIndex.dumpDir(sf + "/"))
+    assert(IvfIndex.dumpDir(sf) == IvfIndex.dumpDir(s"./$rel"))
   }
 
   test("radius-calibrated nprobe: meets pair-recall target, monotone in target") {
