@@ -204,6 +204,15 @@ object Bench {
       .count()
     catch { case _: Throwable => -1L }
 
+  /** bench_full.json `errors`: per failed query, the class and
+    * message of its first failure, and the root cause. */
+  private[graft] def errorsJson(errors: Iterable[(String, Throwable)]): String = {
+    import Verify.jsonStr
+    errors.map { case (k, e) =>
+      s""""$k":{"class":${jsonStr(e.getClass.getName)},"message":${jsonStr(String.valueOf(e.getMessage))},"cause":${jsonStr(Verify.describe(e))}}"""
+    }.mkString("{", ",", "}")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -257,6 +266,9 @@ object Bench {
         (SparkEntry.queries.keySet & GroundTruthBaselines) -- only.getOrElse(Set.empty)
       else Set.empty
     val skipped: Set[String] = skippedNeg ++ skippedGt
+    // first failure per query: its class, message and root cause land
+    // in bench_full.json `errors` so a failed row carries its cause
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
     val base0 = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) && !skipped.contains(n) }
       .map { case (name, fn) =>
@@ -265,7 +277,10 @@ object Bench {
       def timed(): Double = {
         loads += load1()
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => failed = true }
+        try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+          failed = true
+          if (!errors.contains(name)) errors(name) = e
+        }
         (System.nanoTime() - t0) / 1e9
       }
       // the shared host's noise band is >2× (occasionally 10×): when
@@ -355,7 +370,7 @@ object Bench {
     val host = s"""{"jvms":${jvmCount()},"loadavg_end":${r2(load1())}}"""
     val skippedJson = skippedNeg.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val skippedGtJson = skippedGt.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fullJson = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$fullQs,"samples":$fullSamples,"loadavg":$fullLoads,"host":$host,"drift":$driftJson,"failed":$failedNames,"skipped_kept_negatives":$skippedJson,"skipped_ground_truth":$skippedGtJson,"sf":"$sfDir","n_queries":${results.size}}"""
+    val fullJson = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$fullQs,"samples":$fullSamples,"loadavg":$fullLoads,"host":$host,"drift":$driftJson,"failed":$failedNames,"errors":${errorsJson(errors)},"skipped_kept_negatives":$skippedJson,"skipped_ground_truth":$skippedGtJson,"sf":"$sfDir","n_queries":${results.size}}"""
     Files.write(Paths.get(outFile), (fullJson + "\n").getBytes(StandardCharsets.UTF_8))
     // self-snapshot the round-over-round witness: a zero-failure run of
     // the FULL inventory at a tracked SF overwrites its snapshot file.

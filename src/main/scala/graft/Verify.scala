@@ -32,27 +32,38 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${Verify.describe(e)}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // bind oracle table paths to THIS run's sfDir, not a compile-time
     // constant — Spark results and oracle must read the same data
     val json = SparkEntry.oracleSqlFor(sfDir)
       .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** JSON string literal: escapes backslash, quote, and ALL control
+    * chars (<0x20) — a tab or CR in builder-authored SQL would
+    * otherwise make a reader's json.load fail and silently zero the
+    * round's correctness. */
+  def jsonStr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** A failure's class and message, plus its root cause's when the
+    * failure wraps another (Spark wraps task and stream errors). */
+  def describe(e: Throwable): String = {
+    def one(t: Throwable) = s"${t.getClass.getName}: ${t.getMessage}"
+    var root = e
+    while (root.getCause != null && (root.getCause ne root)) root = root.getCause
+    if (root eq e) one(e) else s"${one(e)} (root cause ${one(root)})"
   }
 }

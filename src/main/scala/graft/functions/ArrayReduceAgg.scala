@@ -28,14 +28,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *
   * RETIRED from the hot paths in r18: a TypedImperativeAggregate
   * forces ObjectHashAggregate (no whole-stage codegen) and allocates
-  * one array per input row, and the signature producers
-  * (Dedup.minhashSigOf / simhashSig) now run 32 FLAT min()/sum()
-  * columns through one codegen HashAggregate instead — measured
-  * 1.9 s → 1.0–1.5 s on the sf0.1 sig stage with bit-identical
-  * signatures (KernelSpec pins the two forms against each other).
-  * Kept as the reference implementation of the elementwise-reduce
-  * contract, and for consumers whose width is not a compile-time
-  * constant.
+  * one array per input row. SimHash (Dedup.simhashSig) now runs 32
+  * FLAT sum() columns through one codegen HashAggregate, and MinHash
+  * computes each document's signature inside its row
+  * ([[MinhashSig]]), with no aggregate at all. No production path
+  * calls this aggregate: it is kept as the reference implementation
+  * of the elementwise-reduce contract that KernelSpec pins the
+  * signature kernel against.
   */
 case class ArrayLongReduce(
     child: Expression,

@@ -61,18 +61,28 @@ object Md5Words {
   private val mdTl: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
+  /** This thread's digest, shared by every md5 kernel in the package
+    * (callers must leave it reset: `digest()` does). */
+  private[functions] def digest: MessageDigest = mdTl.get()
+
   /** Digest the string's UTF-8 bytes and split into the 4 big-endian
     * unsigned 32-bit words (range [0, 2^32), non-negative longs). */
   def words(s: UTF8String): ArrayData = {
-    val d = mdTl.get().digest(s.getBytes)
+    val d = digest.digest(s.getBytes)
     val w = new Array[Long](4)
     var i = 0
     while (i < 4) {
-      val o = i * 4
-      w(i) = ((d(o) & 0xffL) << 24) | ((d(o + 1) & 0xffL) << 16) |
-        ((d(o + 2) & 0xffL) << 8) | (d(o + 3) & 0xffL)
+      w(i) = word(d, i)
       i += 1
     }
     new GenericArrayData(w)
+  }
+
+  /** Word `i` of a raw digest: bytes [4i, 4i+4) as an unsigned
+    * big-endian 32-bit integer. */
+  def word(d: Array[Byte], i: Int): Long = {
+    val o = i * 4
+    ((d(o) & 0xffL) << 24) | ((d(o + 1) & 0xffL) << 16) |
+      ((d(o + 2) & 0xffL) << 8) | (d(o + 3) & 0xffL)
   }
 }

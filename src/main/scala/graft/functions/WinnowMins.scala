@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -9,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpr}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused winnowing kernel: tokens → n-gram shingles → seeded
   * [[PortableHash]] per shingle → sliding-window minimum, as ONE
@@ -20,12 +19,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * slice per window), each evaluated per element in interpreted mode —
   * the probe-ranking lesson again (SURVEY §6): an HOF chain over a
   * corpus-sized map is an interpreter in the middle of a codegen plan.
-  * This expression streams the token array once: the md5 input is fed
-  * token-by-token (seed prefix, space-joined — byte-identical to
-  * hashing the materialized shingle string), the window minimum is a
-  * running scan, and no intermediate shingle strings, hash arrays, or
-  * window slices are materialized. Values are BIT-IDENTICAL to the HOF
-  * chain (spec-pinned), so the DuckDB oracle is untouched.
+  * This expression evaluates the token array once, walks its n-grams
+  * through the same linear iteration as the [[Shingles]] kernel
+  * (`Shingles.grams`), hashes each gram's bytes behind the seed prefix
+  * (byte-identical to md5 of the `seed:shingle` string), and takes the
+  * window minimum as a running scan — no hash-array or window-slice
+  * intermediates. Values are BIT-IDENTICAL to the HOF chain
+  * (spec-pinned), so the DuckDB oracle is untouched.
   *
   * Returns the windowed-min array (`array<long>`, one element per
   * shingle; empty when the doc has fewer than `n` tokens — the same
@@ -61,39 +61,23 @@ object WinnowMins {
   def of(toks: Column, n: Int, window: Int, seed: Int): Column =
     toColumn(WinnowMins(toExpr(toks), n, window, seed))
 
-  // one digest instance per thread — getInstance per row is the next
-  // bottleneck once the HOF overhead is gone
-  private val digest = new ThreadLocal[MessageDigest] {
-    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
-  }
-
-  private val Space = ' '.toByte
   private val Empty = new GenericArrayData(Array.empty[Long])
 
   /** The compiled kernel; public static so generated code can call it. */
   def compute(toks: ArrayData, n: Int, window: Int, seed: Int): ArrayData = {
-    val count = toks.numElements()
-    val m = count - n + 1
-    if (m <= 0) return Empty
-    val md = digest.get()
+    val grams = Shingles.grams(toks, n)
+    val m = grams.length
+    if (m == 0) return Empty
+    val md = Md5Words.digest
     val prefix = (seed.toString + ":").getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val hs = new Array[Long](m)
     var i = 0
     while (i < m) {
-      md.reset()
       md.update(prefix)
-      var j = 0
-      while (j < n) {
-        if (j > 0) md.update(Space)
-        // UTF8String exposes the same UTF-8 bytes Spark's md5() hashes
-        md.update(toks.getUTF8String(i + j).getBytes)
-        j += 1
-      }
-      val d = md.digest()
-      // first 8 hex chars of the digest = first 4 bytes, unsigned —
-      // exactly PortableHash.phash's conv(substring(md5, 1, 8), 16, 10)
-      hs(i) = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
-        ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+      md.update(grams(i).asInstanceOf[UTF8String].getBytes)
+      // first 8 hex chars of the digest = word 0, unsigned — exactly
+      // PortableHash.phash's conv(substring(md5, 1, 8), 16, 10)
+      hs(i) = Md5Words.word(md.digest(), 0)
       i += 1
     }
     val wm = new Array[Long](m)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.SafeRound.round
 
 import graft.Tables
-import graft.functions.PortableHash
+import graft.functions.{MinhashSig, PortableHash}
 import graft.functions.TextFunctions._
 
 /** Deduplication suite over `documents` — the operators a training-data
@@ -43,9 +43,11 @@ object Dedup {
       .orderBy("keeper")
 
   /** Distinct word-3-gram shingles per doc: (doc_id, shingle).
-    * Persisted: every consumer (signatures, candidate verification,
-    * set sizes) re-reads it; in a real pipeline this is the
-    * materialized shingle table. */
+    * Persisted: every shingle-joining consumer (exact n-gram Jaccard,
+    * containment, the capped pair table, substring coverage, SimHash)
+    * re-reads it; in a real pipeline this is the materialized shingle
+    * table. MinHash-LSH does not: it works on one row per doc
+    * ([[minhashDocsOf]]). */
   private def shingleSet(s: SparkSession, dir: String): DataFrame =
     graft.functions.DfCache.getOrElseUpdate(s, s"shingles3:$dir") {
       // tokenize+shingle is the CPU-dense stage every dedup op shares:
@@ -107,52 +109,53 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** MinHash signature per doc as one array<long> of 32 values.
-    * The ×32 seed fan-out stays map-side; perm 4g+w is word w of
-    * md5(g:shingle), so a shingle costs 8 digests, not 32 (band g's
-    * four perms share one digest). The shuffle carries one fixed-width
-    * signature row per doc via 32 partial-aggregable min() columns. */
-  private def minhashSig(s: SparkSession, dir: String): DataFrame =
-    minhashSigOf(shingleSet(s, dir))
+  /** One MinHash row per document: (doc_id, sh, sz, sig), where `sh`
+    * is the doc's distinct 3-gram shingle array, `sz` its size and
+    * `sig` the 32-perm signature ([[MinhashSig]]: perm 4g+w is word w
+    * of md5(g:shingle), so a shingle costs 8 digests, not 32).
+    *
+    * Both kernels run inside the document's row: the tokens are
+    * evaluated once ([[graft.functions.Shingles]]) and the signature
+    * is one running-minimum pass, so no (doc, shingle) row is ever
+    * exploded and no exchange is needed before banding. The relational
+    * form exploded ~55 rows per doc through a distinct shuffle and a
+    * 32-column groupBy, and re-ran that stage on each side of the band
+    * join. A doc with no shingle has a null `sig`, so it has no bands
+    * and never becomes a candidate. */
+  def minhashDocsOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), array_distinct(shingles(tokens(col("text")), 3)).as("sh"))
+      .select(col("doc_id"), col("sh"), size(col("sh")).cast("long").as("sz"),
+        MinhashSig.of(col("sh"), NumPerms).as("sig"))
 
-  /** MinHash signature of a (doc_id, shingle) frame. 32 FLAT min()
-    * aggregates re-assembled into the signature array after the agg
-    * (r18): the previous array-buffer TypedImperativeAggregate forced
-    * ObjectHashAggregate and a per-row array allocation, where 32
-    * fixed-width min columns run as one whole-stage-codegen
-    * HashAggregate — measured 1.9 s → 1.0-1.5 s for the sig stage at
-    * sf0.1, bands 1.9 → 1.4 s. min per word is identical either way,
-    * so signatures, bands, and every downstream hash are unchanged. */
-  def minhashSigOf(shingleDf: DataFrame): DataFrame =
-    shingleDf
-      .select((col("doc_id") +: (0 until NumPerms).map(i =>
-        PortableHash.phashWord(col("shingle"), i / 4, i % 4).as(s"h$i"))): _*)
-      .groupBy("doc_id")
-      .agg(array((0 until NumPerms).map(i => min(col(s"h$i"))): _*).as("sig"))
-
-  /** LSH band keys (doc_id, band, bkey) of a signature frame. */
+  /** LSH band keys (doc_id, band, bkey) of a signature frame; a doc
+    * with a null signature has no bands. */
   def bandsOf(sig: DataFrame): DataFrame =
     sig.select(col("doc_id"), col("sig"),
-        explode(sequence(lit(0), lit(NumBands - 1))).as("band"))
+        explode(when(col("sig").isNotNull, sequence(lit(0), lit(NumBands - 1)))).as("band"))
       .select(col("doc_id"), col("band"),
         md5(array_join(transform(
           slice(col("sig"), col("band") * BandRows + 1, lit(BandRows)),
           x => x.cast("string")), ",")).as("bkey"))
 
-  /** Band-collision candidate pairs of a documents-shaped frame
-    * (doc_a < doc_b, distinct) — the pre-verification pair set. */
-  def bandCandidatesOf(docs: DataFrame): DataFrame = {
-    val bands = bandsOf(minhashSigOf(shingleSetOf(docs)))
+  /** Band-collision pairs (doc_a < doc_b, distinct) of a band frame. */
+  private def candidatesOf(bands: DataFrame): DataFrame =
     bands.as("a")
       .join(bands.as("b"),
         col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-  }
 
-  /** MinHash + LSH banding: candidates from band-key equi-join, then
-    * exact Jaccard verification restricted to the candidates.
+  /** Band-collision candidate pairs of a documents-shaped frame
+    * (doc_a < doc_b, distinct) — the pre-verification pair set. */
+  def bandCandidatesOf(docs: DataFrame): DataFrame =
+    candidatesOf(bandsOf(minhashDocsOf(docs)))
+
+  /** MinHash + LSH banding: candidates from the band-key equi-join,
+    * then exact Jaccard verification of each candidate from its two
+    * per-doc rows — |A ∩ B| is `size(array_intersect(ha, hb))` of the
+    * distinct shingle arrays, so verification is bounded per-candidate
+    * work with no shingle-table join.
     * Persisted like the shingle table: the verified near-dup pair
     * table is the materialized artifact every downstream dedup op
     * consumes (connected components, keep-best, the e2e pipeline) —
@@ -160,35 +163,17 @@ object Dedup {
     * a per-query-harness artifact, not the design. */
   def minhashLsh(s: SparkSession, dir: String): DataFrame =
     graft.functions.DfCache.getOrElseUpdate(s, s"minhashPairs:$dir") {
-      val bands = bandsOf(minhashSig(s, dir))
-      val cands = bands.as("a")
-        .join(bands.as("b"),
-          col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        .distinct()
-      verifyJaccard(s, dir, cands)
+      val docs = minhashDocsOf(Tables.spread(s, dir, "documents"))
+      val side = docs.select(col("doc_id"), col("sh"), col("sz"))
+      candidatesOf(bandsOf(docs))
+        .join(side.toDF("doc_a", "ha", "sa"), "doc_a")
+        .join(side.toDF("doc_b", "hb", "sb"), "doc_b")
+        .withColumn("inter", size(array_intersect(col("ha"), col("hb"))).cast("long"))
+        .select(col("doc_a"), col("doc_b"),
+          round(col("inter").cast("double") / (col("sa") + col("sb") - col("inter")), 4).as("jaccard"))
+        .filter(col("jaccard") >= JaccardThreshold)
+        .orderBy("doc_a", "doc_b")
     }
-
-  /** Exact-Jaccard verification of a (doc_a, doc_b) candidate frame:
-    * two equi-joins against the full shingle sets, never a full
-    * pairwise pass — per-candidate bounded work. */
-  private def verifyJaccard(s: SparkSession, dir: String, cands: DataFrame): DataFrame = {
-    val sh = shingleSet(s, dir)
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val inter = cands
-      .join(sh.select(col("doc_id").as("doc_a"), col("shingle")), "doc_a")
-      .join(sh.select(col("doc_id").as("doc_b"), col("shingle")), Seq("doc_b", "shingle"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sa")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        round(col("inter").cast("double") / (col("sa") + col("sb") - col("inter")), 4).as("jaccard"))
-      .filter(col("jaccard") >= JaccardThreshold)
-      .orderBy("doc_a", "doc_b")
-  }
 
   /** Document-frequency cap for scale-safe shared-shingle pair
     * generation: a shingle in f docs emits f² candidate rows, so the
@@ -507,8 +492,8 @@ object Dedup {
     shingleSet(s, dir)
       .select(col("doc_id"), PortableHash.phash(col("shingle"), 77).as("h"))
       // per-shingle ±1 bit contributions as 32 FLAT long columns
-      // summed by 32 partial-aggregable sum() aggregates (r18: like
-      // minhashSigOf, this replaces the array-buffer
+      // summed by 32 partial-aggregable sum() aggregates (r18: this
+      // replaces the array-buffer
       // TypedImperativeAggregate — ObjectHashAggregate + a per-row
       // array allocation — with one whole-stage-codegen
       // HashAggregate; the ×32 fan-out still never hits the shuffle).

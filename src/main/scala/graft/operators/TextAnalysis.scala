@@ -269,11 +269,7 @@ object TextAnalysis {
     // slowest bench query at 7 s; this form is pure narrow map work,
     // the same shuffle-free shape as text_fingerprint).
     def best(n: Int): Column = {
-      val grams = when(size(col("toks")) >= n,
-        transform(sequence(lit(0), size(col("toks")) - n),
-          i => concat_ws(" ", slice(col("toks"), i + 1, lit(n)))))
-        .otherwise(array().cast("array<string>"))
-      aggregate(array_sort(grams),
+      aggregate(array_sort(shingles(col("toks"), n)),
         struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
         (st, x) => {
           val run = when(x === st.getField("prev"), st.getField("run") + 1L)

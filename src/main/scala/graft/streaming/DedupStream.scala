@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.operators.Dedup
 
@@ -37,6 +38,12 @@ import graft.operators.Dedup
   */
 object DedupStream {
 
+  /** The band state table's rows; `band` is its partition column. */
+  val StateSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("bkey", StringType),
+    StructField("band", IntegerType)))
+
   /** New-vs-state candidates for one micro-batch: state scan pruned to
     * the batch's band partitions, batch side broadcast. Factored out
     * so its plan (PartitionFilters + BroadcastHashJoin, no state-side
@@ -45,7 +52,10 @@ object DedupStream {
     val s = bands.sparkSession
     // ≤ NumBands small ints — partition-pruning metadata, not data.
     val batchBands = bands.select("band").distinct().collect().map(_.getInt(0))
-    s.read.parquet(statePath).as("o")
+    // explicit schema, like the per-batch scratch read: a first batch
+    // with zero band rows (every doc under 3 tokens) leaves the state
+    // dir with no data files, and schema inference would fail on it
+    s.read.schema(StateSchema).parquet(statePath).as("o")
       .filter(col("o.band").isin(batchBands.toIndexedSeq: _*))
       .join(broadcast(bands).as("n"),
         col("n.band") === col("o.band") && col("n.bkey") === col("o.bkey") &&
@@ -58,72 +68,77 @@ object DedupStream {
     // wiped fixed path: stale state/checkpoint would replay as
     // already-seen bands; per-call temp dirs would leak disk
     val root = graft.functions.Scratch.fresh("dedupstream", dir)
-    val statePath = s"$root/state"
-    val outPath = s"$root/cands"
-    val batchBandsPath = s"$root/batch_bands"
     val batchSchema = graft.Tables.documents(s, dir).schema
     val stream = s.readStream.schema(batchSchema)
       .option("pathGlobFilter", "documents.parquet")
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
     val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // a file-source micro-batch is ONE partition per file; the
-        // shingle+MinHash stage is the compute-dense step, so spread
-        // it to cluster parallelism first (no-op on a full batch).
-        // The band table is consumed three ways per batch (in-batch
-        // self-join, new-vs-state join, state append); it is
-        // materialized ONCE to a per-batch scratch table (overwritten
-        // each batch) and every consumer re-scans that tiny parquet
-        // instead of re-running the shingle+MinHash chain per
-        // consumer. (r17: this replaces a `.persist()` whose
-        // in-memory columnar build cost more than the band compute
-        // itself at micro-batch sizes, and it drops the per-batch job
-        // count from three full compute passes to one compute + cheap
-        // re-scans.) The STATE table is a separate append below;
-        // batch isolation needs no tag because the scratch table only
-        // ever holds the current batch.
-        val priorExists = graft.functions.Scratch.exists(s, statePath)
-        val computed = Dedup.bandsOf(Dedup.minhashSigOf(Dedup.shingleSetOf(
-            graft.Tables.spreadFrame(batch))))
-        computed.write.mode("overwrite").parquet(batchBandsPath)
-        // read back with the EXPLICIT band schema (ADVICE r17): a
-        // batch whose documents yield zero band rows (all under 3
-        // tokens) writes a data-less dir, and schema inference would
-        // fail on it where the old persist() path handled empty
-        // frames fine.
-        val bands = s.read.schema(computed.schema).parquet(batchBandsPath)
-        val withinBatch = bands.as("a")
-          .join(bands.as("b"),
-            col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-        val vsState =
-          if (!priorExists) withinBatch.limit(0)
-          else stateCandidates(bands, statePath)
-        withinBatch.union(vsState).distinct()
-          .write.mode("append").parquet(outPath)
-        // repartition on the partition column first: one file per band
-        // per batch, not (shuffle partitions × bands) small files —
-        // state-table file count stays linear in batches.
-        bands.repartition(col("band"))
-          .write.mode("append").partitionBy("band").parquet(statePath)
-        ()
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => addBatch(s, root, batch) }
       .option("checkpointLocation", s"$root/ckpt")
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
+    drained(s, root)
+  }
+
+  /** One micro-batch of the drain rooted at `root`: its band keys, its
+    * candidates (in-batch and against the state table) appended to the
+    * out table, its bands appended to the state table. */
+  private[graft] def addBatch(s: SparkSession, root: String, batch: DataFrame): Unit = {
+    val statePath = s"$root/state"
+    val batchBandsPath = s"$root/batch_bands"
+    // a file-source micro-batch is ONE partition per file; the
+    // shingle+MinHash stage is the compute-dense step, so spread
+    // it to cluster parallelism first (no-op on a full batch).
+    // The band table is consumed three ways per batch (in-batch
+    // self-join, new-vs-state join, state append); it is
+    // materialized ONCE to a per-batch scratch table (overwritten
+    // each batch) and every consumer re-scans that tiny parquet
+    // instead of re-running the shingle+MinHash chain per
+    // consumer. (r17: this replaces a `.persist()` whose
+    // in-memory columnar build cost more than the band compute
+    // itself at micro-batch sizes, and it drops the per-batch job
+    // count from three full compute passes to one compute + cheap
+    // re-scans.) The STATE table is a separate append below;
+    // batch isolation needs no tag because the scratch table only
+    // ever holds the current batch.
+    val priorExists = graft.functions.Scratch.exists(s, statePath)
+    val computed = Dedup.bandsOf(Dedup.minhashDocsOf(graft.Tables.spreadFrame(batch)))
+    computed.write.mode("overwrite").parquet(batchBandsPath)
+    // read back with the EXPLICIT band schema (ADVICE r17): a
+    // batch whose documents yield zero band rows (all under 3
+    // tokens) writes a data-less dir, and schema inference would
+    // fail on it where the old persist() path handled empty
+    // frames fine.
+    val bands = s.read.schema(computed.schema).parquet(batchBandsPath)
+    val withinBatch = bands.as("a")
+      .join(bands.as("b"),
+        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+    val vsState =
+      if (!priorExists) withinBatch.limit(0)
+      else stateCandidates(bands, statePath)
+    withinBatch.union(vsState).distinct()
+      .write.mode("append").parquet(s"$root/cands")
+    // repartition on the partition column first: one file per band
+    // per batch, not (shuffle partitions × bands) small files —
+    // state-table file count stays linear in batches.
+    bands.repartition(col("band"))
+      .write.mode("append").partitionBy("band").parquet(statePath)
+  }
+
+  /** The distinct candidate pairs a drain rooted at `root` emitted. */
+  private[graft] def drained(s: SparkSession, root: String): DataFrame = {
+    val outPath = s"$root/cands"
     // explicit schema + existence guard, like the per-batch scratch
     // read above: a corpus whose every batch yields zero candidates
     // leaves outPath data-less (or, with zero batches, absent) and
     // schema inference would throw where a typed empty frame is the
     // correct answer (ADVICE r17 class).
-    val pairSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_a",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("doc_b",
-        org.apache.spark.sql.types.LongType)))
+    val pairSchema = StructType(Seq(
+      StructField("doc_a", LongType), StructField("doc_b", LongType)))
     val out =
       if (!graft.functions.Scratch.exists(s, outPath))
         s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), pairSchema)

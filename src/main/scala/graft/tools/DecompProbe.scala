@@ -52,46 +52,6 @@ object DecompProbe {
       return
     }
 
-    // ---- shingle-stage split: HOF tokenize+shingle vs distinct ----
-    if (sys.env.contains("GRAFT_PROBE_SHINGLE")) {
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      import graft.functions.TextFunctions._
-      val tokenized = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
-      t("tokens noop")(noop(tokenized))
-      val sh = docs.select(col("doc_id"),
-        explode(shingles(tokens(col("text")), 3)).as("shingle"))
-      t("explode shingles noop (no distinct)")(noop(sh))
-      t("explode shingles noop again")(noop(sh))
-      t("distinct noop")(noop(sh.distinct()))
-      t("minhash sig agg noop")(noop(Dedup.minhashSigOf(sh.distinct())))
-      t("bands noop")(noop(Dedup.bandsOf(Dedup.minhashSigOf(sh.distinct()))))
-      // A/B the ObjectHashAggregate sort fallback threshold in-session
-      val key = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
-      for (thr <- Seq("128", "65536", "128", "65536")) {
-        spark.conf.set(key, thr)
-        t(s"sig noop @fallback=$thr a")(noop(Dedup.minhashSigOf(sh.distinct())))
-        t(s"sig noop @fallback=$thr b")(noop(Dedup.minhashSigOf(sh.distinct())))
-      }
-      // A/B: 32 codegen'd min() columns (HashAggregate) vs the
-      // TypedImperative array aggregate (ObjectHashAggregate)
-      def sigAlt(shingleDf: org.apache.spark.sql.DataFrame) = {
-        import graft.functions.PortableHash
-        shingleDf
-          .select((col("doc_id") +: (0 until Dedup.NumPerms).map(i =>
-            PortableHash.phashWord(col("shingle"), i / 4, i % 4).as(s"h$i"))): _*)
-          .groupBy("doc_id")
-          .agg(array((0 until Dedup.NumPerms).map(i => min(col(s"h$i"))): _*).as("sig"))
-      }
-      t("sigAlt 32-min noop a")(noop(sigAlt(sh.distinct())))
-      t("sigAlt 32-min noop b")(noop(sigAlt(sh.distinct())))
-      t("sig typed noop again")(noop(Dedup.minhashSigOf(sh.distinct())))
-      t("bands over sigAlt noop")(noop(Dedup.bandsOf(sigAlt(sh.distinct()))))
-      t("bands over typed noop")(noop(Dedup.bandsOf(Dedup.minhashSigOf(sh.distinct()))))
-      spark.stop()
-      return
-    }
-
     // ---- cappedPairs internals (both capped dedups) ----
     if (sys.env.contains("GRAFT_PROBE_CAPPED")) {
       def noop(df: org.apache.spark.sql.DataFrame): Unit =
@@ -130,11 +90,10 @@ object DecompProbe {
     }
 
     // ---- stream_minhash_cand internals (batch form) ----
-    val sh = t("shingleSetOf(docs).count")(Dedup.shingleSetOf(docs))
-    t("  count")(sh.count())
-    val sig = Dedup.minhashSigOf(Dedup.shingleSetOf(docs))
-    t("minhashSigOf.count")(sig.count())
-    val bands = Dedup.bandsOf(Dedup.minhashSigOf(Dedup.shingleSetOf(docs)))
+    t("minhashDocsOf noop") {
+      Dedup.minhashDocsOf(docs).write.format("noop").mode("overwrite").save()
+    }
+    val bands = Dedup.bandsOf(Dedup.minhashDocsOf(docs))
     t("bandsOf.count")(bands.count())
     val b2 = bands.persist()
     t("bands.persist.count")(b2.count())

@@ -87,4 +87,16 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.sameSf("/root/testdata/sf0.1", "/tmp/graft_sf1"))
     assert(!Bench.sameSf("", "/tmp/graft_sf1"))
   }
+
+  test("a failed query's record carries its class, message and root cause") {
+    val e = new RuntimeException("stream \"q\" stopped",
+      new IllegalStateException("locked by another session"))
+    assert(Verify.describe(e) == "java.lang.RuntimeException: stream \"q\" stopped " +
+      "(root cause java.lang.IllegalStateException: locked by another session)")
+    assert(Verify.describe(new IllegalStateException("x")) == "java.lang.IllegalStateException: x")
+    val js = Bench.errorsJson(Seq("q1" -> e))
+    assert(js.startsWith("""{"q1":{"class":"java.lang.RuntimeException","message":"stream \"q\" stopped","""), js)
+    assert(js.contains("locked by another session"), js)
+    assert(Bench.errorsJson(Nil) == "{}")
+  }
 }

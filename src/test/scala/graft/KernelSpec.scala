@@ -157,27 +157,89 @@ class KernelSpec extends AnyFunSuite {
   }
 
   test("flat-column signature aggregates match the retired ArrayLongReduce forms") {
-    // r18: minhashSigOf/simhashSig swapped the array-buffer
-    // TypedImperativeAggregate for 32 flat codegen'd min()/sum()
-    // columns; this pins the swap — same signatures over real corpus
-    // shingles, element for element.
+    // the per-document MinhashSig kernel replaced the exploded
+    // 32-column min() aggregate; this pins it against the elementwise
+    // ArrayReduceAgg reference over the same distinct (doc, shingle)
+    // rows — same signatures over real corpus shingles, element for
+    // element, and the same doc set (docs with no shingle have none).
     import graft.operators.Dedup
-    import graft.functions.PortableHash
-    val sh = Tables.documents(spark, sf).limit(40)
-      .select(col("doc_id"),
-        explode(graft.functions.TextFunctions.shingles(
-          graft.functions.TextFunctions.tokens(col("text")), 3)).as("shingle"))
-      .distinct()
-    val viaFlat = Dedup.minhashSigOf(sh)
+    import graft.functions.{MinhashSig, PortableHash, TextFunctions}
+    val docs = Tables.documents(spark, sf).limit(40)
+    val viaKernel = Dedup.minhashDocsOf(docs)
+      .filter(col("sig").isNotNull)
+      .select(col("doc_id"), col("sig"))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq
-    val viaTyped = sh
+    val viaTyped = docs
+      .select(col("doc_id"),
+        explode(TextFunctions.shingles(TextFunctions.tokens(col("text")), 3)).as("shingle"))
+      .distinct()
       .select(col("doc_id"),
         array((0 until Dedup.NumPerms).map(i =>
           PortableHash.phashWord(col("shingle"), i / 4, i % 4)): _*).as("hs"))
       .groupBy("doc_id")
       .agg(ArrayReduceAgg.arrayMinAgg(col("hs")).as("sig"))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1).toSeq
-    assert(viaFlat == viaTyped)
+    assert(viaTyped.nonEmpty)
+    assert(viaKernel == viaTyped)
+    // interpreted eval agrees with the driver-side hash convention, and
+    // an empty shingle array has no signature
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    val sh = Seq("a b c", "b c d")
+    val interp = MinhashSig(Literal.create(sh, ArrayType(StringType)), Dedup.NumPerms)
+      .eval(null).asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray().toSeq
+    assert(interp == (0 until Dedup.NumPerms).map(i =>
+      sh.map(x => PortableHash.phashWordLocal(x, i / 4, i % 4)).min))
+    assert(MinhashSig(Literal.create(Seq.empty[String], ArrayType(StringType)), Dedup.NumPerms)
+      .eval(null) == null)
+  }
+
+  test("Shingles kernel equals the HOF n-gram form, interpreted and codegen") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import graft.functions.{Shingles, TextFunctions}
+    import spark.implicits._
+    // the lambda form the kernel replaced: the reference, kept here
+    def hofShingles(toks: Column, n: Int): Column =
+      when(size(toks) >= n,
+        transform(sequence(lit(0), size(toks) - n),
+          i => array_join(slice(toks, i + 1, lit(n)), " ")))
+        .otherwise(array().cast("array<string>"))
+    // 0, n-1 and n tokens (n = 3), whitespace runs, non-ASCII, null
+    val edge = Seq[(Long, String)](
+      (-1L, ""), (-2L, "   "), (-3L, "alpha beta"), (-4L, "alpha beta gamma"),
+      (-5L, "  a\t\t b \n\n  c   d  "), (-6L, "Größe café naïve 日本語 テキスト ü"),
+      (-7L, "x y z w v u t s r q p o"), (-8L, null))
+      .toDF("doc_id", "text")
+    val texts = Tables.documents(spark, sf).select(col("doc_id"), col("text"))
+      .union(edge)
+      .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"))
+    for (n <- Seq(1, 2, 3, 4, 8)) {
+      val rows = texts
+        .select(col("doc_id"), col("toks"),
+          TextFunctions.shingles(col("toks"), n).as("k"), hofShingles(col("toks"), n).as("h"))
+        .collect()
+      assert(rows.length > 8)
+      rows.foreach { r =>
+        val id = r.getLong(0)
+        val ref = r.getSeq[String](3)
+        assert(r.getSeq[String](2) == ref, s"codegen kernel deviates for doc $id, n=$n")
+        val toks = if (r.isNullAt(1)) null else r.getSeq[String](1)
+        val interp = Shingles(Literal.create(toks, ArrayType(StringType)), n)
+          .eval(null).asInstanceOf[ArrayData]
+        assert(interp.toArray[AnyRef](StringType).map(_.toString).toSeq == ref,
+          s"interpreted kernel deviates for doc $id, n=$n")
+      }
+    }
+    // null text tokenizes to a null array: the kernel gives an empty
+    // array either way, like the lambda form's size() guard
+    val nulls = Seq[String](null).toDF("t")
+      .select(size(TextFunctions.shingles(TextFunctions.tokens(col("t")), 3)),
+        size(TextFunctions.shingles(lit(null).cast("array<string>"), 3)))
+      .collect()(0)
+    assert(nulls.getInt(0) == 0 && nulls.getInt(1) == 0)
   }
 
   test("FastHalfUpRound is bit-identical to the BigDecimal reference") {

@@ -50,6 +50,38 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("minhash lsh works on one row per document: no shingle explode, no shingle-keyed exchange") {
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val df = Dedup.minhashLsh(spark, sf)
+    df.collect()
+    val all = nodes(df.queryExecution.executedPlan)
+    assert(all.exists(_.isInstanceOf[GenerateExec]), "band explode expected in the walked plan")
+    all.collect { case g: GenerateExec => g }.foreach { g =>
+      g.generator.children.foreach(c => assert(c.dataType match {
+        case ArrayType(StringType, _) => false
+        case _ => true
+      }, s"string-array explode in the minhash plan: $g"))
+    }
+    all.collect { case e: ShuffleExchangeExec => e }.foreach { e =>
+      val keys = e.outputPartitioning match {
+        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning => h.expressions
+        case _ => Nil
+      }
+      keys.flatMap(_.references).foreach(a =>
+        assert(a.name != "shingle", s"shingle-keyed exchange in the minhash plan: $e"))
+    }
+  }
+
   test("dedup_url: every hash exchange keys on the canonical url, no cartesian, no doc_id shuffle") {
     val p = plan(UrlDedup.urlDedup(spark, sf))
     assert(!p.contains("CartesianProduct"), p)

@@ -94,7 +94,7 @@ class StreamingSpec extends AnyFunSuite {
     val half0 = docs.filter(col("doc_id") % 2 === 0)
     val half1 = docs.filter(col("doc_id") % 2 === 1)
     def bandsOf(d: org.apache.spark.sql.DataFrame) =
-      Dedup.bandsOf(Dedup.minhashSigOf(Dedup.shingleSetOf(d)))
+      Dedup.bandsOf(Dedup.minhashDocsOf(d))
     val statePath = java.nio.file.Files.createTempDirectory("graft_state").toString + "/state"
     bandsOf(half0).write.partitionBy("band").parquet(statePath)
     val vs = graft.streaming.DedupStream.stateCandidates(bandsOf(half1), statePath)
@@ -127,6 +127,27 @@ class StreamingSpec extends AnyFunSuite {
     val out = graft.streaming.DedupStream.candidates(spark, dir)
     assert(out.columns.toSeq == Seq("doc_a", "doc_b"))
     assert(out.count() == 0)
+  }
+
+  test("dedup stream survives a zero-band first batch followed by a normal batch") {
+    // batch 1: every doc under 3 tokens -> zero band rows, so the state
+    // table is appended with no data files; batch 2 then reads that
+    // state dir, which schema inference cannot type. The drain must
+    // still emit exactly the band-candidate set of batch 2's docs.
+    import graft.streaming.DedupStream
+    val docs = Tables.documents(spark, sf)
+    val tiny = docs.limit(5).withColumn("doc_id", col("doc_id") + 1000000000L)
+      .withColumn("text", lit("two tokens"))
+    val root = java.nio.file.Files.createTempDirectory("graft_zeroband_first").toString
+    DedupStream.addBatch(spark, root, tiny)
+    assert(spark.read.schema(DedupStream.StateSchema).parquet(s"$root/state").count() == 0)
+    DedupStream.addBatch(spark, root, docs)
+    val out = DedupStream.drained(spark, root)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val want = graft.operators.Dedup.bandCandidatesOf(docs)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(want.nonEmpty)
+    assert(out == want)
   }
 
   test("quality route reports a typed empty frame on an all-empty drain (ADVICE r17)") {
