@@ -21,8 +21,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * re-grouping by doc through a shuffle; here the shingles never leave
   * their document's row, so the signature costs no exchange at all.
   * The minima are over the same hash values, so every signature, band
-  * key and oracle hash is unchanged (KernelSpec pins it against the
-  * `ArrayReduceAgg` elementwise-min reference).
+  * key and oracle hash is unchanged (KernelSpec pins it against an
+  * elementwise-min aggregate kept in the test tree as the reference).
   *
   * Null for a null or empty array: a document with no shingle has no
   * signature, so its band keys are null and never collide.

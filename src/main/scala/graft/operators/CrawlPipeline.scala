@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.TextFunctions.tokens
 import graft.functions.UrlCanon.urlCanonicalize
 
 /** The crawl funnel end-to-end as ONE gated operator (`pipeline_crawl`,
@@ -109,16 +110,6 @@ object CrawlPipeline {
         .select(col("url"), col("text"), col("qk"), col("n_copies"))
     }
 
-  /** Chunk count for a text column — the `doc_chunk` sizing arithmetic
-    * ([[DocPipeline.chunks]] lines up with this via MaxTokens/Stride). */
-  private[graft] def nChunksOf(text: Column): Column = {
-    val n = size(graft.functions.TextFunctions.tokens(text))
-    when(n <= DocPipeline.MaxTokens, lit(1))
-      .otherwise(floor((n - DocPipeline.MaxTokens + DocPipeline.Stride - 1)
-        / lit(DocPipeline.Stride)).cast("int") + 1)
-      .cast("long")
-  }
-
   def crawl(s: SparkSession, dir: String): DataFrame = {
     val keep = keepers(s, dir)
     val surv = keep.filter(col("qk") >= Pipeline.QualityMin)
@@ -132,7 +123,7 @@ object CrawlPipeline {
       stage("4_low_quality_removed", count(lit(1)),
         keep.filter(col("qk") < Pipeline.QualityMin)),
       stage("5_after_quality", count(lit(1)), surv),
-      stage("6_chunks", sum(nChunksOf(col("text"))), surv))
+      stage("6_chunks", sum(DocPipeline.nChunks(size(tokens(col("text"))))), surv))
       .reduce(_ unionAll _)
       .orderBy("stage")
   }

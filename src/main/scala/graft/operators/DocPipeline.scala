@@ -53,10 +53,7 @@ object DocPipeline {
     * downstream of the UTL_TO_TEXT boundary. */
   def chunksOf(d: DataFrame): DataFrame = {
     d.select(col("doc_id"), tokens(col("text")).as("toks"))
-      .withColumn("n", size(col("toks")))
-      .withColumn("n_chunks",
-        when(col("n") <= MaxTokens, lit(1))
-          .otherwise(floor((col("n") - MaxTokens + Stride - 1) / lit(Stride)).cast("int") + 1))
+      .withColumn("n_chunks", nChunks(size(col("toks"))))
       .select(col("doc_id"), col("toks"),
         explode(sequence(lit(0), col("n_chunks") - 1)).as("i"))
       .select(
@@ -67,6 +64,18 @@ object DocPipeline {
         size(col("ctoks")).cast("long").as("n_tokens"),
         array_join(col("ctoks"), " ").as("chunk_text"))
   }
+
+  /** Number of [[chunksOf]] windows over `n` tokens: one window up to
+    * MaxTokens, then one more per Stride tokens started. The funnel
+    * ([[Pipeline.e2e]]) and the crawl funnel count chunks with this
+    * same rule instead of exploding them. */
+  def nChunks(n: Column): Column = windows(n, MaxTokens, Stride)
+
+  /** Count of `max`-wide windows at step `stride` covering `n` units
+    * (at least one, so an empty input still yields one empty window). */
+  private def windows(n: Column, max: Int, stride: Int): Column =
+    when(n <= max, lit(1))
+      .otherwise(floor((n - max + stride - 1) / lit(stride)).cast("int") + 1)
 
   def chunksOrdered(s: SparkSession, dir: String): DataFrame =
     chunks(s, dir).orderBy("doc_id", "chunk_id")
@@ -81,10 +90,7 @@ object DocPipeline {
   def chunksByChars(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(col("doc_id"), normText(col("text")).as("t"))
-      .withColumn("n", length(col("t")))
-      .withColumn("n_chunks",
-        when(col("n") <= CharMax, lit(1))
-          .otherwise(floor((col("n") - CharMax + CharStride - 1) / lit(CharStride)).cast("int") + 1))
+      .withColumn("n_chunks", windows(length(col("t")), CharMax, CharStride))
       .select(col("doc_id"), col("t"),
         explode(sequence(lit(0), col("n_chunks") - 1)).as("i"))
       .select(col("doc_id"), (col("i") + 1).cast("long").as("chunk_id"),

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.TextFunctions.tokens
 
 /** The end-to-end training-data pipeline, composed from the suite's
   * operators: raw corpus → near-dup removal (MinHash LSH, keeper =
@@ -11,49 +12,47 @@ import graft.Tables
   * the per-stage funnel (stage, n) — the artifact a pipeline owner
   * actually monitors.
   *
-  * Every stage is one of the already-verified operators applied to the
-  * previous stage's survivors (anti-join / semi-join on doc_id), so
-  * the whole funnel stays blocked, partial-aggregable, and
-  * oracle-checkable end to end. At 100 TB this composition is the
-  * point: each arrow is a bounded-key join, never a re-shuffle of raw
-  * text.
+  * Every stage is a predicate on one document, so the funnel is one
+  * row per document — (doc_id, dup flag, quality, n_chunks, n_vec) —
+  * and ONE global aggregate of conditional counts and sums over it.
+  * The documents table is scanned once; the dup flag and n_vec come
+  * from the session's MinHash pairs and chunk weights, each reduced to
+  * one row per document before joining. Counting each stage as its own
+  * branch over the previous stage's survivors would re-plan and re-run
+  * the shared joins once per stage; here each subtree runs once.
   */
 object Pipeline {
   val QualityMin = 0.5
 
   def e2e(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir).select(col("doc_id"))
-    // near-dups from the verified MinHash pairs; the larger id of each
-    // pair is the duplicate, the smaller the keeper. The funnel's seven
-    // stage aggregates all hang off these two frames — materialize them
-    // once or the minhash DAG re-runs per stage.
-    val dupDocs = graft.functions.DfCache.getOrElseUpdate(s, s"pipeDups:$dir") {
-      Dedup.minhashLsh(s, dir).select(col("doc_b").as("doc_id")).distinct()
-    }
-    val afterDedup = docs.join(dupDocs, Seq("doc_id"), "left_anti")
-    val qual = graft.functions.DfCache.getOrElseUpdate(s, s"pipeQuality:$dir") {
-      TextAnalysis.quality(s, dir).select(col("doc_id"), col("quality"))
-    }
-    val afterQuality = afterDedup.join(qual, "doc_id")
-      .filter(col("quality") >= QualityMin).select("doc_id")
-    val chunks = DocPipeline.chunks(s, dir).join(afterQuality, "doc_id")
-    val vectors = DocPipeline.chunkWeights(s, dir)
-      .join(afterQuality, "doc_id")
-      .select("doc_id", "chunk_id").distinct()
+    // the larger id of each verified MinHash pair is the duplicate, the
+    // smaller the keeper
+    val dups = Dedup.minhashLsh(s, dir).select(col("doc_b").as("doc_id")).distinct()
+      .withColumn("dup", lit(true))
+    val nVec = DocPipeline.chunkWeights(s, dir)
+      .groupBy("doc_id").agg(countDistinct("chunk_id").as("n_vec"))
+    val perDoc = TextAnalysis.qualityKeyed(Tables.documents(s, dir), Seq("doc_id", "text"))
+      .select(col("doc_id"), col("quality"),
+        DocPipeline.nChunks(size(tokens(col("text")))).as("n_chunks"))
+      .join(dups, Seq("doc_id"), "left")
+      .join(nVec, Seq("doc_id"), "left")
 
-    def stage(name: String, df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).as("n")).select(lit(name).as("stage"), col("n"))
-
-    Seq(
-      stage("1_docs_in", docs),
-      stage("2_near_dup_removed", dupDocs),
-      stage("3_after_dedup", afterDedup),
-      stage("4_low_quality_removed",
-        afterDedup.join(qual, "doc_id").filter(col("quality") < QualityMin)),
-      stage("5_after_quality", afterQuality),
-      stage("6_chunks", chunks),
-      stage("7_chunk_vectors", vectors))
-      .reduce(_ unionAll _)
+    val kept = col("dup").isNull
+    val survives = kept && col("quality") >= QualityMin
+    def total(c: Column) = coalesce(sum(when(survives, c)), lit(0L))
+    val stages = Seq(
+      "1_docs_in" -> count(lit(1)),
+      "2_near_dup_removed" -> count(when(!kept, 1)),
+      "3_after_dedup" -> count(when(kept, 1)),
+      "4_low_quality_removed" -> count(when(kept && col("quality") < QualityMin, 1)),
+      "5_after_quality" -> count(when(survives, 1)),
+      "6_chunks" -> total(col("n_chunks")),
+      "7_chunk_vectors" -> total(col("n_vec")))
+    perDoc
+      .agg(array(stages.map { case (name, n) =>
+        struct(lit(name).as("stage"), n.as("n")) }: _*).as("funnel"))
+      .select(explode(col("funnel")).as("f"))
+      .select(col("f.stage"), col("f.n"))
       .orderBy("stage")
   }
 

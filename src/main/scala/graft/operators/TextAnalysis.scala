@@ -60,7 +60,11 @@ object TextAnalysis {
   /** The same scoring over a frame keyed by arbitrary columns (no
     * doc_id required, no output ordering) — the crawl funnel scores
     * (url, text) pages straight off the container parse, where no
-    * integer id exists ([[CrawlPipeline]]). */
+    * integer id exists ([[CrawlPipeline]]). A document with no tokens
+    * (or empty text) has no defined ratio: a zero divisor yields null
+    * (ANSI `/` would throw), as `0/0` does in the DuckDB oracle, so its
+    * quality is null and it lands on neither side of a quality
+    * threshold. */
   def qualityKeyed(docs: DataFrame, keep: Seq[String]): DataFrame = {
     val toks = tokens(col("text"))
     val nTok = size(toks).cast("double")
@@ -71,10 +75,10 @@ object TextAnalysis {
     val digits = strippedLen(col("text"), "[^0-9]+").cast("double")
     docs
       .select(keep.map(col) :+
-        round(nStop / nTok, 4).as("stopword_ratio") :+
-        round(punct / chars, 4).as("punct_ratio") :+
-        round(digits / chars, 4).as("digit_ratio") :+
-        round(lit(1.0) - nDistinct / nTok, 4).as("repetition_ratio"): _*)
+        round(try_divide(nStop, nTok), 4).as("stopword_ratio") :+
+        round(try_divide(punct, chars), 4).as("punct_ratio") :+
+        round(try_divide(digits, chars), 4).as("digit_ratio") :+
+        round(lit(1.0) - try_divide(nDistinct, nTok), 4).as("repetition_ratio"): _*)
       .withColumn("quality",
         round(lit(1.0)
           - greatest(lit(0.0), lit(0.3) - col("stopword_ratio"))

@@ -210,6 +210,22 @@ class CoreSpec extends AnyFunSuite {
     assert(rows.map(_._1).distinct.length == rows.length)
   }
 
+  test("quality scoring: an empty or blank document scores null instead of throwing") {
+    // ANSI division by a zero token or char count used to throw
+    // DIVIDE_BY_ZERO; an undecodable PDF arrives as "" text
+    import spark.implicits._
+    val docs = Seq((1L, ""), (2L, "   "), (3L, "a b"),
+      (4L, "the cat sat on the mat and it is fine")).toDF("doc_id", "text")
+    val rows = graft.operators.TextAnalysis.qualityOf(docs).collect()
+      .map(r => r.getLong(0) -> (1 to 5).map(i => Option(r.get(i)))).toMap
+    assert(rows.keySet == Set(1L, 2L, 3L, 4L))
+    // (stopword, punct, digit, repetition, quality)
+    assert(rows(1L) == Seq(None, None, None, None, None))
+    assert(rows(2L) == Seq(None, Some(0.0), Some(0.0), None, None))
+    assert(rows(3L) == Seq(Some(0.5), Some(0.0), Some(0.0), Some(0.0), Some(1.0)))
+    assert(rows(4L).forall(_.isDefined))
+  }
+
   test("capped containment: subset of ground truth with exact scores, recall floor") {
     import graft.operators.Dedup
     val exact = Dedup.containment(spark, sf).collect()

@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
   * pipeline_e2e at 1×/30×/100× on the bounded-family corpora. Every
   * stage is individually measured elsewhere; this times the
   * composition — where caching and shuffle reuse go wrong at scale.
-  * Two draws per dir (cold then warm-cache: DfCache holds the dup and
-  * quality frames, the shape a pipeline owner monitoring the funnel
-  * actually sees). Run via Test/runMain graft.PipelineDecadeProbe
+  * Two draws per dir (cold then warm-cache: DfCache holds the MinHash
+  * pairs and chunk weights, the shape a pipeline owner monitoring the
+  * funnel actually sees). Run via Test/runMain graft.PipelineDecadeProbe
   * <dir> [dir...]. */
 object PipelineDecadeProbe {
   def main(args: Array[String]): Unit = {
@@ -27,7 +27,7 @@ object PipelineDecadeProbe {
       val nDocs = Tables.documents(spark, dir).count()
       if (stages) {
         // attribute the composed wall: time each funnel input alone on
-        // a cold cache (the e2e DAG is these three plus keyed joins)
+        // a cold cache (the e2e DAG is these three plus keyed joins and one aggregate)
         def t(name: String)(f: => Long): Unit = {
           val t0 = System.nanoTime(); val n = f
           println(f"[pd] dir=$dir stage=$name rows=$n wall=${(System.nanoTime() - t0) / 1e9}%.1f s")

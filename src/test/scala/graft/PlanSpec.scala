@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators._
@@ -17,6 +19,15 @@ class PlanSpec extends AnyFunSuite {
 
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  /** Every node of an executed plan, through adaptive query stages;
+    * into the plans of cached relations only when `intoCached`. */
+  private def nodes(p: SparkPlan, intoCached: Boolean): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan, intoCached)
+    case q: QueryStageExec => q +: nodes(q.plan, intoCached)
+    case m: InMemoryTableScanExec if intoCached => m +: nodes(m.relation.cachedPlan, intoCached)
+    case other => other +: other.children.flatMap(nodes(_, intoCached))
+  }
 
   test("q5: all dimension joins are broadcast, no shuffle join of dims, no cartesian") {
     val p = plan(Analytics.q5NationRevenue(spark, sf))
@@ -51,20 +62,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("minhash lsh works on one row per document: no shingle explode, no shingle-keyed exchange") {
-    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.GenerateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.types.{ArrayType, StringType}
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => q +: nodes(q.plan)
-      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
-      case other => other +: other.children.flatMap(nodes)
-    }
     val df = Dedup.minhashLsh(spark, sf)
     df.collect()
-    val all = nodes(df.queryExecution.executedPlan)
+    val all = nodes(df.queryExecution.executedPlan, intoCached = true)
     assert(all.exists(_.isInstanceOf[GenerateExec]), "band explode expected in the walked plan")
     all.collect { case g: GenerateExec => g }.foreach { g =>
       g.generator.children.foreach(c => assert(c.dataType match {
@@ -80,6 +83,25 @@ class PlanSpec extends AnyFunSuite {
       keys.flatMap(_.references).foreach(a =>
         assert(a.name != "shingle", s"shingle-keyed exchange in the minhash plan: $e"))
     }
+  }
+
+  test("funnel is one pass: no union, no anti join, one documents scan outside cached frames") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    // cached relations (MinHash pairs, chunk weights) are leaves here:
+    // their own plans scan the documents once per session, not per draw
+    val df = Pipeline.e2e(spark, sf)
+    df.collect()
+    val all = nodes(df.queryExecution.executedPlan, intoCached = false)
+    assert(!all.exists(_.isInstanceOf[UnionExec]), df.queryExecution.executedPlan)
+    all.collect { case j: BaseJoinExec => j }.foreach(j =>
+      assert(j.joinType != LeftAnti, s"anti join in the funnel plan: $j"))
+    val docScans = all.collect {
+      case f: FileSourceScanExec
+        if f.relation.location.rootPaths.exists(_.toString.contains("documents.parquet")) => f
+    }
+    assert(docScans.size == 1, docScans.mkString("\n"))
   }
 
   test("dedup_url: every hash exchange keys on the canonical url, no cartesian, no doc_id shuffle") {

@@ -32,9 +32,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * FLAT sum() columns through one codegen HashAggregate, and MinHash
   * computes each document's signature inside its row
   * ([[MinhashSig]]), with no aggregate at all. No production path
-  * calls this aggregate: it is kept as the reference implementation
-  * of the elementwise-reduce contract that KernelSpec pins the
-  * signature kernel against.
+  * calls this aggregate, so it lives in the test tree: it is the
+  * reference implementation of the elementwise-reduce contract that
+  * KernelSpec pins the signature kernel against.
   */
 case class ArrayLongReduce(
     child: Expression,
