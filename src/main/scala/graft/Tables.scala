@@ -15,7 +15,9 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Reader cache: one DataFrame per (session, path, size, mtime).
+  /** One logical reader (schema + file index) per table, from
+    * [[graft.functions.Artifacts]] keyed by the table's own path, so a
+    * rewritten table gets a new reader.
     *
     * Every `spark.read.parquet(path)` pays a driver-side file listing
     * plus a parquet footer read for schema inference — measured at
@@ -25,65 +27,18 @@ object Tables {
     * reads these tables through a catalog whose manifest carries the
     * schema and file list (guide §6 — the practical argument for
     * table formats at scale); this cache is the local stand-in:
-    * the LOGICAL reader (schema + file index) is reused, while every
-    * action still scans the parquet data itself — nothing about
-    * query RESULTS is cached. The size+mtime key drops the entry
-    * when the driver regenerates testdata mid-round (the TESTDATA.md
-    * gotcha), and stopped sessions are evicted like DfCache entries. */
-  private val readers = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Long, Long), DataFrame]
-  graft.functions.SessionEvict.register(() =>
-    readers.keys.filter(_._1.sparkContext.isStopped).foreach(readers.remove))
-
-  /** One walk, both staleness signals (ADVICE r17): total bytes AND
-    * the newest mtime over every file under the table dir — the
-    * top-level dir's own mtime misses an in-place same-size rewrite
-    * of a nested part file, which would otherwise pin a stale footer
-    * schema/file index. Returns (-1, -1) when the stat fails. */
-  private def dirStat(dir: String): (Long, Long) =
-    try {
-      val p = java.nio.file.Paths.get(dir)
-      if (!java.nio.file.Files.exists(p)) (-1L, -1L)
-      else {
-        var bytes = 0L
-        var mtime = java.nio.file.Files.getLastModifiedTime(p).toMillis
-        val s = java.nio.file.Files.walk(p)
-        try s.forEach { f =>
-          if (java.nio.file.Files.isRegularFile(f)) {
-            bytes += java.nio.file.Files.size(f)
-            val m = java.nio.file.Files.getLastModifiedTime(f).toMillis
-            if (m > mtime) mtime = m
-          }
-        } finally s.close()
-        (bytes, mtime)
-      }
-    } catch { case _: Throwable => (-1L, -1L) }
+    * the LOGICAL reader is reused, while every action still scans the
+    * parquet data itself — nothing about query RESULTS is cached.
+    * Returns the reader and the (bytes, newest mtime) stamp of the
+    * path's one directory walk. */
+  private def reader(spark: SparkSession, sfDir: String, name: String): (DataFrame, (Long, Long)) = {
+    val path = s"$sfDir/$name.parquet"
+    graft.functions.Artifacts.lookup[DataFrame](spark, "table", path, _ => ())(
+      spark.read.parquet(path))
+  }
 
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    stamped(spark, sfDir, name)._1
-
-  /** [[table]] plus the (bytes, newest mtime) stamp its reader is keyed
-    * by — the staleness fingerprint for artifacts DERIVED from the
-    * table (the IVF index memos key on it), taken from the same single
-    * directory walk. (-1, -1) when the stat fails. */
-  def stamped(spark: SparkSession, sfDir: String, name: String): (DataFrame, (Long, Long)) = {
-    val path = s"$sfDir/$name.parquet"
-    graft.functions.SessionEvict.hook(spark)
-    readers.keys.filter(_._1.sparkContext.isStopped).foreach(readers.remove)
-    val (bytes, mtime) = dirStat(path)
-    // a failed stat must not pin a reader under the sentinel key
-    // across distinct error states (ADVICE r17)
-    if (bytes < 0) return (spark.read.parquet(path), (bytes, mtime))
-    // drop superseded (size, mtime) generations of this (session,
-    // path) so a session that regenerates testdata repeatedly doesn't
-    // leak one logical plan + file index per generation (ADVICE r17)
-    readers.keys
-      .filter(k => (k._1 eq spark) && k._2 == path &&
-        (k._3 != bytes || k._4 != mtime))
-      .foreach(readers.remove)
-    (readers.getOrElseUpdate((spark, path, bytes, mtime),
-      spark.read.parquet(path)), (bytes, mtime))
-  }
+    reader(spark, sfDir, name)._1
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = table(spark, sfDir, "orders")
@@ -108,9 +63,9 @@ object Tables {
     * 5 MB embeddings file while 31 cores idled (bench_sf1, r5).
     */
   def spread(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = table(spark, sfDir, name)
+    // the table's bytes come from the reader's own stamp walk
+    val (df, (bytes, _)) = reader(spark, sfDir, name)
     val par = spark.sparkContext.defaultParallelism
-    val bytes = GraftSession.dirBytes(s"$sfDir/$name.parquet")
     if (underSplitParallelism(bytes, par)) df.repartition(par)
     else df
   }

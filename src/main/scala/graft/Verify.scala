@@ -41,6 +41,8 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    System.err.println(s"[verify] artifacts held: ${graft.functions.Artifacts.size(spark)} " +
+      s"of ${graft.functions.Artifacts.MaxPerSession}")
     spark.stop()
   }
 

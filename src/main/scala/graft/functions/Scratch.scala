@@ -10,8 +10,8 @@ package graft.functions
 object Scratch {
 
   /** One spelling per input dir, absolute and normalized, so `sf`,
-    * `sf/` and `./x/../sf` name one location and one memo entry. A key,
-    * not a path to read through. */
+    * `sf/` and `./x/../sf` name one location and one Artifacts entry.
+    * A key, not a path to read through. */
   def canonicalDir(dir: String): String =
     java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
 

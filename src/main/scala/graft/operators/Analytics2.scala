@@ -57,10 +57,12 @@ object Analytics2 {
     // so the 5-way lineitem join runs ONCE per execution — without
     // this the physical plan duplicates the whole aggregate subtree.
     // Dictionary-sized (≤ nations² × years rows), so the cache is
-    // bytes. Routed through the LRU-bounded, session-evicted DfCache
-    // (not a bare .cache()) so a service iterating many corpus dirs
-    // can't pin one InMemoryRelation per dir for the session lifetime.
-    val agg = graft.functions.DfCache.getOrElseUpdate(s, s"q7agg:$dir") {
+    // bytes. An Artifacts frame (not a bare .cache()): it is released
+    // when its entry leaves the cache — clear, LRU trim, a rewritten
+    // corpus or a stopped session — so a service iterating many corpus
+    // dirs can't pin one InMemoryRelation per dir for the session
+    // lifetime.
+    val agg = graft.functions.Artifacts.frame(s, "q7agg", dir) {
       l.join(o, col("l_orderkey") === col("o_orderkey"))
         .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
         .join(broadcast(c), col("o_custkey") === col("c_custkey"))

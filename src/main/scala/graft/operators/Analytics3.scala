@@ -190,7 +190,7 @@ object Analytics3 {
       .groupBy("token").agg(count(lit(1)).as("freq"))
     // one row per distinct frequency value; cached — the corpus pass
     // behind it runs once, the V-count action and the stats reuse it.
-    val blocks = graft.functions.DfCache.getOrElseUpdate(s, s"zipfBlocks:$dir") {
+    val blocks = graft.functions.Artifacts.frame(s, "zipfBlocks", dir) {
       freq.groupBy("freq").agg(count(lit(1)).as("cnt"))
     }
     // coalesce: sum over an empty block table is null — an empty

@@ -81,7 +81,7 @@ object CrawlPipeline {
     * cached; everything upstream of the url shuffle is a narrow map
     * over the container files. */
   private[graft] def keepers(s: SparkSession, dir: String): DataFrame =
-    graft.functions.DfCache.getOrElseUpdate(s, s"crawlKeep:$dir") {
+    graft.functions.Artifacts.frame(s, "crawlKeep", dir) {
       val files = graft.sources.WarcGen.warcTable(s, dir, uriFor = messyUrl)
       val pages = graft.sources.WarcText.warcToText(s, files)
       // canonical key + quality score fused into the same projection

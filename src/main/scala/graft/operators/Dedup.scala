@@ -49,7 +49,7 @@ object Dedup {
     * table. MinHash-LSH does not: it works on one row per doc
     * ([[minhashDocsOf]]). */
   private def shingleSet(s: SparkSession, dir: String): DataFrame =
-    graft.functions.DfCache.getOrElseUpdate(s, s"shingles3:$dir") {
+    graft.functions.Artifacts.frame(s, "shingles3", dir) {
       // tokenize+shingle is the CPU-dense stage every dedup op shares:
       // spread it past the file's byte-split parallelism (no-op at
       // real corpus sizes — see Tables.spread)
@@ -162,7 +162,7 @@ object Dedup {
     * recomputing signatures + banding + verification per consumer is
     * a per-query-harness artifact, not the design. */
   def minhashLsh(s: SparkSession, dir: String): DataFrame =
-    graft.functions.DfCache.getOrElseUpdate(s, s"minhashPairs:$dir") {
+    graft.functions.Artifacts.frame(s, "minhashPairs", dir) {
       val docs = minhashDocsOf(Tables.spread(s, dir, "documents"))
       val side = docs.select(col("doc_id"), col("sh"), col("sz"))
       candidatesOf(bandsOf(docs))
@@ -232,7 +232,7 @@ object Dedup {
     * to the per-caller prefilter by monotonicity (the union is a
     * superset of each bound's survivors). */
   private def cappedPairs(s: SparkSession, dir: String): DataFrame =
-    graft.functions.DfCache.getOrElseUpdate(s, s"cappedPairs:$dir") {
+    graft.functions.Artifacts.frame(s, "cappedPairs", dir) {
       val sh = shingleSet(s, dir)
         .select(col("doc_id"), PortableHash.phash64(col("shingle"), 91).as("h"))
       val dfc = sh.groupBy("h").agg(count(lit(1)).as("df"))
@@ -383,7 +383,7 @@ object Dedup {
   val DriverPairLimit = 2000000L
 
   def components(s: SparkSession, dir: String): DataFrame =
-    graft.functions.DfCache.getOrElseUpdate(s, s"dedupLabels:$dir") {
+    graft.functions.Artifacts.frame(s, "dedupLabels", dir) {
     // the cached pair table is already materialized, so the size probe
     // and the collect/propagation below re-scan cached blocks only
     val pairs = minhashLsh(s, dir).select(col("doc_a"), col("doc_b"))

@@ -246,7 +246,7 @@ object DocPipeline {
   /** Sparse hashed embedding weights per chunk:
     * (doc_id, chunk_id, bucket, w) with w ≠ 0. */
   def chunkWeights(s: SparkSession, dir: String): DataFrame =
-    graft.functions.DfCache.getOrElseUpdate(s, s"chunkWeights:$dir")(chunkWeightsPlan(s, dir))
+    graft.functions.Artifacts.frame(s, "chunkWeights", dir)(chunkWeightsPlan(s, dir))
 
   private def chunkWeightsPlan(s: SparkSession, dir: String): DataFrame =
     chunkWeightsOf(chunks(s, dir))
@@ -316,20 +316,20 @@ object DocPipeline {
   /** Chunk-level knn: top-10 chunks most cosine-similar to the chunk
     * (doc 0, chunk 1), via an inverted-index (bucket) equi-join —
     * sparse dot products with integer exactness, no cross join. */
-  /** Per-chunk L2 norms of the weight table, materialized once per
-    * (session, dir) like the weights themselves (r18): chunkKnn (and
-    * contextPack through it) and maxSim each re-aggregated the full
-    * weight table into the same norms twice per draw (corpus side +
-    * query side). */
+  /** Per-chunk L2 norms of the weight table, persisted once per
+    * corpus like the weights themselves (an Artifacts frame, r18):
+    * chunkKnn (and contextPack through it) and maxSim each
+    * re-aggregated the full weight table into the same norms twice
+    * per draw (corpus side + query side). */
   private def chunkNorms(s: SparkSession, dir: String): DataFrame =
-    graft.functions.DfCache.getOrElseUpdate(s, s"chunkNorms:$dir") {
+    graft.functions.Artifacts.frame(s, "chunkNorms", dir) {
       chunkWeights(s, dir).groupBy("doc_id", "chunk_id")
         .agg(sqrt(sum(col("w") * col("w")).cast("double")).as("nrm"))
     }
 
   def chunkKnn(s: SparkSession, dir: String): DataFrame = {
     // the weights table feeds four plan branches (weights, norms, the
-    // query's weights and norm) — DfCache materializes it once.
+    // query's weights and norm) — persisted once as an Artifacts frame.
     val w = chunkWeights(s, dir)
     val norms = chunkNorms(s, dir)
     val q = w.filter(col("doc_id") === 0 && col("chunk_id") === 1)

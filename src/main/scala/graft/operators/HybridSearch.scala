@@ -73,7 +73,7 @@ object HybridSearch {
       .join(norms, "doc_id")
       .select(col("doc_id"), (col("dot") / (col("nrm") * lit(qnorm))).as("vec_raw"))
 
-    graft.functions.DfCache.getOrElseUpdate(s, s"hybridScored:$dir") {
+    graft.functions.Artifacts.frame(s, "hybridScored", dir) {
       docs
         .join(kw, Seq("doc_id"), "left")
         .join(vec, Seq("doc_id"), "left")

@@ -181,7 +181,7 @@ object IvfIndex {
     * cap without running a full calibration. */
   private[graft] def calibrationSample(s: SparkSession, dir: String,
       sampleMod: Int = DefaultSampleMod): DataFrame = {
-    // memoized corpus count — calibration always follows a build for
+    // cached corpus count — calibration always follows a build for
     // the same (session, dir), so this launches no extra count job
     val effMod = calibrationMod(corpusCount(s, dir), sampleMod)
     Tables.embeddings(s, dir).filter(col("vec_id") % effMod === 0)
@@ -222,67 +222,11 @@ object IvfIndex {
     model.transform(emb.withColumn("features", array_to_vector(col("embedding"))))
       .select(col("vec_id"), col("embedding"), col("centroid_id"))
 
-  /** Assign every vector to its (cosine) nearest centroid; the
-    * returned frame is the index: the assigned rows, computed once and
-    * held (see [[build]]). Memoized per (session, canonical dir,
-    * embeddings stamp, RESOLVED nlist): an index is a persistent
-    * artifact — refitting k-means for every query that probes it is an
-    * artifact of the per-query test harness, not the design. The dir
-    * is [[graft.functions.Scratch.canonicalDir]], so `sf` and `sf/`
-    * share one entry. The stamp is the (bytes, newest mtime) of
-    * embeddings.parquet from [[Tables.stamped]]: a rewritten corpus
-    * misses, and the superseded generation is dropped and its rows
-    * released. The key carries the resolved geometry, so `k = 0`
-    * (adaptive) and an explicit k equal to the adaptive default hit
-    * the same entry — an identical geometry is never fit twice.
-    * Entries of stopped sessions are evicted on every build call, so
-    * a long-lived JVM that cycles sessions or benches several SF dirs
-    * doesn't accumulate dead frames and centroid arrays
-    * ([[clearCache]] drops everything, for tests and services). */
-  private val built = scala.collection.concurrent.TrieMap.empty[
-    (SparkSession, String, (Long, Long), Int),
-    (DataFrame, Array[Array[Double]], org.apache.spark.rdd.RDD[_])]
-  private val counted = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, (Long, Long)), Long]
-
-  /** Drop an entry's resident rows. A stopped context freed its blocks
-    * when it stopped, and its block manager no longer answers. */
-  private def release(rows: org.apache.spark.rdd.RDD[_]): Unit =
-    if (!rows.sparkContext.isStopped) rows.unpersist(blocking = true)
-
-  // a stopped session's held rows went with its context's block
-  // manager, so dropping the entry releases everything that is left
-  private def evictStopped(): Unit = {
-    built.keys.filter(_._1.sparkContext.isStopped).foreach(built.remove)
-    counted.keys.filter(_._1.sparkContext.isStopped).foreach(counted.remove)
-  }
-  // also run at context stop, so the LAST session of a JVM is dropped
-  // without waiting for a next build call (ADVICE r7)
-  graft.functions.SessionEvict.register(() => evictStopped())
-  private[graft] def cacheSize: Int = built.size
-  private[graft] def clearCache(): Unit = {
-    built.keys.foreach(k => built.remove(k).foreach(v => release(v._3)))
-    counted.clear()
-  }
-
-  /** The corpus as [[build]] keys it — canonical dir, reader, stamp —
-    * with its memoized row count, from one directory walk. Entries of
-    * the same (session, dir) under another stamp are superseded: they
-    * are dropped here, and their index rows released. */
-  private def corpus(s: SparkSession, dir: String): (String, DataFrame, (Long, Long), Long) = {
-    val d = graft.functions.Scratch.canonicalDir(dir)
-    val (emb, stamp) = Tables.stamped(s, dir, "embeddings")
-    built.filter { case ((s2, d2, st, _), _) => (s2 eq s) && d2 == d && st != stamp }
-      .foreach { case (k, v) => built.remove(k); release(v._3) }
-    counted.keys.filter { case (s2, d2, st) => (s2 eq s) && d2 == d && st != stamp }
-      .foreach(counted.remove)
-    (d, emb, stamp, counted.getOrElseUpdate((s, d, stamp), emb.count()))
-  }
-
-  /** Corpus row count, memoized per (session, dir, stamp): the adaptive
+  /** Corpus row count, an artifact of the corpus dir: the adaptive
     * geometry needs it on every build call, and it only changes when
     * the corpus does. */
-  private[graft] def corpusCount(s: SparkSession, dir: String): Long = corpus(s, dir)._4
+  private[graft] def corpusCount(s: SparkSession, dir: String): Long =
+    graft.functions.Artifacts.get(s, "corpusCount", dir)(Tables.embeddings(s, dir).count())
 
   /** Training-sample budget per centroid for the k-means fit — the
     * FAISS convention (max_points_per_centroid = 256 in faiss's
@@ -348,16 +292,24 @@ object IvfIndex {
     * lost block is recomputed from lineage). The assign.parquet
     * artifact is written from those rows. A probe is then an in-memory
     * centroid_id filter — one job, no exchange, no re-assignment.
-    * [[clearCache]], stopped-session eviction and a superseded corpus
-    * stamp unpersist the rows. */
+    *
+    * An index is a persistent artifact — refitting k-means for every
+    * query that probes it is an artifact of the per-query test
+    * harness, not the design — so it is built once per
+    * [[graft.functions.Artifacts]] entry: the corpus dir, with the
+    * RESOLVED nlist in the name, so `k = 0` (adaptive) and an explicit
+    * k equal to the adaptive default hit the same entry and an
+    * identical geometry is never fit twice. The rows are unpersisted
+    * when the entry leaves the cache. */
   def build(s: SparkSession, dir: String,
       k: Int = 0): (DataFrame, Array[Array[Double]]) = {
-    graft.functions.SessionEvict.hook(s)
-    evictStopped()
-    val (d, emb, stamp, n) = corpus(s, dir)
+    val n = corpusCount(s, dir)
     val default = defaultNlist(n)
     val nlist = if (k > 0) k else default
-    val (index, centroids, _) = built.getOrElseUpdate((s, d, stamp, nlist), {
+    type Held = (DataFrame, Array[Array[Double]], org.apache.spark.rdd.RDD[_])
+    val (index, centroids, _) = graft.functions.Artifacts.held[Held](s, s"ivfIndex:$nlist", dir,
+        _._3.unpersist(blocking = true)) {
+      val emb = Tables.embeddings(s, dir)
       val tm = trainMod(n, nlist)
       val train = guardedStrideSample(emb, tm, minRows = nlist)
       val model = fitModel(train, nlist)
@@ -390,7 +342,7 @@ object IvfIndex {
           .parquet(s"${dumpDir(dir)}/centroids.parquet")
       }
       (indexed, centroids, rows)
-    })
+    }
     (index, centroids)
   }
 

@@ -50,18 +50,6 @@ import graft.Tables
   */
 object IvfPq {
 
-  /** Memoized composed-path calibrations per (session, geometry,
-    * target, k, floor, mode): Bench's min-of-2 and repeated serving
-    * calls must not re-pay the calibration pass, and determinism per
-    * artifact set is part of the contract. Stopped sessions are swept
-    * on access and at context stop (the IvfIndex.built pattern). */
-  private val calibrated =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, Int, Double, Int, Int, Option[Boolean], Int),
-        (Int, Int)]
-  graft.functions.SessionEvict.register(() =>
-    calibrated.keys.filter(_._1.sparkContext.isStopped).foreach(calibrated.remove))
-
   /** TARGET ACCURACY → (nprobe, shortlist) calibration against the
     * COMPOSED path's own ground truth — the r10 fix for the
     * depth-only knob. PqAccProbe's r10 table proved end-to-end recall
@@ -100,16 +88,21 @@ object IvfPq {
     * table (N·cap codegen lookups — cheaper per row than the
     * N·cap-cosine exact pass [[IvfIndex.calibrateNprobe]] already
     * pays) plus answer-sized aggregations; collected state is one row
-    * per (sample query, true neighbor) — ≤ cap·k. */
+    * per (sample query, true neighbor) — ≤ cap·k.
+    *
+    * Cached in [[graft.functions.Artifacts]] under the corpus dir, with
+    * (geometry, target, k, floor, mode, m) in the name: Bench's
+    * min-of-2 and repeated serving calls must not re-pay the
+    * calibration pass, and determinism per artifact set is part of
+    * the contract. */
   private[graft] def calibrateComposed(s: SparkSession, dir: String,
       index: DataFrame, centroids: Array[Array[Double]],
       codes: DataFrame, codebooks: PqIndex.Codebooks,
       offsets: Array[Array[Double]],
       target: Double, k: Int, shortlistFloor: Int,
       forceMode: Option[Boolean]): (Int, Int) =
-    calibrated.getOrElseUpdate(
-      (s, dir, centroids.length, target, k, shortlistFloor, forceMode,
-        codebooks.length), {
+    graft.functions.Artifacts.get(s, s"ivfPqCalibration:${centroids.length}:$target:$k:" +
+        s"$shortlistFloor:$forceMode:${codebooks.length}", dir) {
       import s.implicits._
       val sample = IvfIndex.calibrationSample(s, dir)
       // exact ground truth top-k per sample query (capped broadcast,
@@ -199,7 +192,7 @@ object IvfPq {
         }.getOrElse(centroids.length)
         (np, sEff)
       }
-    })
+    }
 
   /** vs_knn_ivf_pq: approximate top-`k` for the vec_id=0 query via
     * IVF-pruned ADC over PQ codes with exact re-rank. */
@@ -326,9 +319,9 @@ object IvfPq {
     // row per (query, probed cell), so a full-probe run must not reuse
     // a default-depth table (the inner join would silently drop
     // candidates of cells the cached table never probed)
-    val adc = graft.functions.DfCache.getOrElseUpdate(s,
-      s"ivfPqAdcRes:$dir:${centroids.length}:" +
-        s"${IvfIndex.resolveNprobe(centroids.length, np)}:$forceMode:$m")(
+    val adc = graft.functions.Artifacts.frame(s,
+      s"ivfPqAdcRes:${centroids.length}:" +
+        s"${IvfIndex.resolveNprobe(centroids.length, np)}:$forceMode:$m", dir)(
       PqIndex.adcTableResidual(pairs.join(queriesDf, "qid"), offsets, codebooks))
     // every join precedes the candidate explosion (the searchBatch /
     // pairMiningIvfAt rule): codes attach to the assignment table on

@@ -40,7 +40,7 @@ object MediaPipeline {
   /** One row per asset: (doc_id, probed-known flag, decoded flag,
     * fingerprint or -1). Cached: every funnel aggregate reads it. */
   private[graft] def perAsset(s: SparkSession, dir: String): DataFrame =
-    graft.functions.DfCache.getOrElseUpdate(s, s"mediaAssets:$dir") {
+    graft.functions.Artifacts.frame(s, "mediaAssets", dir) {
       import s.implicits._
       graft.Tables.documents(s, dir)
         .select(col("doc_id"))

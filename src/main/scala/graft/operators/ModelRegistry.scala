@@ -50,6 +50,9 @@ object ModelRegistry {
       .orderBy("model_id")
   }
 
+  /** The LOAD_ONNX_MODEL / DROP_ONNX_MODEL registry state. Not a
+    * derived artifact, so it stays out of [[graft.functions.Artifacts]]:
+    * no corpus stamp or LRU trim may unload a model. */
   private val loaded = TrieMap.empty[String, EmbedModel]
 
   /** DBMS_VECTOR.LOAD_ONNX_MODEL equivalent. */
@@ -66,9 +69,10 @@ object ModelRegistry {
   def get(name: String): Option[EmbedModel] = loaded.get(name)
 
   /** Exploded (doc_id, token) stream — shared by every model's embed
-    * in the session (materialized once via DfCache). */
+    * in the session (persisted once as an [[graft.functions.Artifacts]]
+    * frame of the corpus dir). */
   private def tokenStream(s: SparkSession, dir: String): DataFrame =
-    graft.functions.DfCache.getOrElseUpdate(s, s"modelTokens:$dir") {
+    graft.functions.Artifacts.frame(s, "modelTokens", dir) {
       // per-token md5 hashing downstream is compute-dense: spread past
       // the file's byte-split parallelism (no-op at real corpus sizes)
       Tables.spread(s, dir, "documents")
@@ -82,7 +86,7 @@ object ModelRegistry {
     * same digest) — materialized in a child projection so the hash
     * isn't computed twice. */
   def embed(s: SparkSession, dir: String, m: EmbedModel): DataFrame =
-    graft.functions.DfCache.getOrElseUpdate(s, s"modelEmbed:$dir:${m.name}:${m.dim}:${m.seed}") {
+    graft.functions.Artifacts.frame(s, s"modelEmbed:${m.name}:${m.dim}:${m.seed}", dir) {
       tokenStream(s, dir)
         .select(col("doc_id"),
           md5(concat(lit(s"${m.seed}:"), col("token"))).as("dg"))
@@ -143,7 +147,7 @@ object ModelRegistry {
     // the cross-join projection, re-running it per scored PAIR (≈6 s
     // at sf0.1) instead of once per doc. The cached frame also hands
     // the join flat UnsafeArrayData floats (bulk-copy toFloatArray).
-    val dense = graft.functions.DfCache.getOrElseUpdate(s, s"modelDense:$dir:${m.name}") {
+    val dense = graft.functions.Artifacts.frame(s, s"modelDense:${m.name}", dir) {
       w.groupBy(col("doc_id"))
         .agg(map_from_entries(collect_list(
           struct(col("bucket").cast("int"), col("w").cast("float")))).as("wm"))

@@ -23,7 +23,7 @@ import graft.functions.FloatVecDistance
   *
   * Spark shape:
   *  - build: one k-means|| fit per subspace over the corpus slice
-  *    (distributed; 8 small fits, memoized like the IVF model);
+  *    (distributed; 8 small fits, built once like the IVF model);
   *    codebooks are 8×16×8 doubles — trivially broadcast.
   *  - encode: one narrow typed map per vector (argmin over 16
   *    codewords per subspace), emitting (vec_id, packed int).
@@ -82,31 +82,6 @@ object PqIndex {
 
   /** codebooks(m)(k) = the k-th codeword of subspace m (dsub doubles). */
   type Codebooks = Array[Array[Array[Double]]]
-
-  /** Memoized per (session, dir); entries of stopped sessions are
-    * evicted on every build call (same hygiene as IvfIndex.built —
-    * a long-lived JVM cycling sessions must not pin dead frames). */
-  private val built = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, Codebooks)]
-  /** Residual memo carries the resolved IVF geometry like
-    * IvfIndex.built — a sizing-override build must not collide with
-    * the default-geometry artifacts. Value = (codes, codebooks,
-    * per-cell encode offsets — unit centroids in residual mode, zero
-    * vectors in flat mode). */
-  private val builtRes = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Option[Boolean], Int),
-      (DataFrame, Codebooks, Array[Array[Double]])]
-
-  private[graft] def cacheSize: Int = built.size + builtRes.size
-  private[graft] def clearCache(): Unit = { built.clear(); builtRes.clear() }
-
-  // stop-time twin of the evict-on-access passes in build/buildResidual:
-  // the last stopped session of a JVM has no next build call to evict
-  // it, so it would otherwise pin its frames and codebook arrays
-  graft.functions.SessionEvict.register(() => {
-    built.keys.filter(_._1.sparkContext.isStopped).foreach(built.remove)
-    builtRes.keys.filter(_._1.sparkContext.isStopped).foreach(builtRes.remove)
-  })
 
   private def normalized(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"),
@@ -221,12 +196,11 @@ object PqIndex {
   }
 
   /** Fit per-subspace codebooks and encode the corpus. Returns the
-    * codes table (vec_id, code int) and the codebooks. Memoized per
-    * (session, dir): the PQ index is a persistent artifact. */
-  def build(s: SparkSession, dir: String): (DataFrame, Codebooks) = {
-    graft.functions.SessionEvict.hook(s)
-    built.keys.filter(_._1.sparkContext.isStopped).foreach(built.remove)
-    built.getOrElseUpdate((s, dir), {
+    * codes table (vec_id, code int) and the codebooks. The PQ index is
+    * a persistent artifact: built once per [[graft.functions.Artifacts]]
+    * entry of the corpus dir. */
+  def build(s: SparkSession, dir: String): (DataFrame, Codebooks) =
+    graft.functions.Artifacts.get(s, "pq", dir) {
       val norm = normalized(Tables.embeddings(s, dir)).cache()
       val dim = norm.select(size(col("nvec"))).head().getInt(0)
       val codebooks: Codebooks = fitOn(norm, dim)
@@ -242,8 +216,7 @@ object PqIndex {
         IvfIndex.corpusCount(s, dir))
       norm.unpersist()
       (out, codebooks)
-    })
-  }
+    }
 
   /** L2-normalize one vector (the centroid side of the residual). */
   private[graft] def l2norm(a: Array[Double]): Array[Double] = {
@@ -292,8 +265,9 @@ object PqIndex {
     * Derived from the SAME persisted IVF artifacts the serving path
     * probes (`index` = the assignment frame, `centroids` = the fit
     * dictionary), so encode-time and serve-time cells can never
-    * disagree. Memoized per (session, dir, nlist) like IvfIndex.built;
-    * artifacts persist only for the default geometry (a sizing
+    * disagree. Cached in [[graft.functions.Artifacts]] with the IVF
+    * geometry, mode and m in the name, so a sizing-override build never
+    * collides with the default-geometry entry; artifacts persist only for the default geometry (a sizing
     * override can't poison the oracle's artifact dir). Build cost is
     * one narrow join + typed map over the corpus — same shape as the
     * flat encode. */
@@ -302,15 +276,16 @@ object PqIndex {
       forceMode: Option[Boolean] = None,
       m: Int = NumSubspaces)
       : (DataFrame, Codebooks, Array[Array[Double]]) = {
-    graft.functions.SessionEvict.hook(s)
-    builtRes.keys.filter(_._1.sparkContext.isStopped).foreach(builtRes.remove)
     require(m >= 1 && m <= 16, s"PQ subspace count $m outside the 4-bit packing range")
     val isDefaultGeometry =
       centroids.length == IvfIndex.defaultNlist(IvfIndex.corpusCount(s, dir))
-    // a forced mode (test/measurement) memoizes under its own key —
-    // None (adaptive/env) stays the production entry
+    // a forced mode (test/measurement) is cached under its own name —
+    // None (adaptive/env) stays the production entry; the codes frame
+    // is cached in memory when not persisted, and released with it
     val mode = forceMode.orElse(envByResidual)
-    builtRes.getOrElseUpdate((s, dir, centroids.length, mode, m), {
+    type Res = (DataFrame, Codebooks, Array[Array[Double]])
+    graft.functions.Artifacts.held[Res](s, s"pqResidual:${centroids.length}:$mode:$m", dir,
+        _._1.unpersist()) {
       import s.implicits._
       val ncent = centroids.map(l2norm)
       val bcCent = s.sparkContext.broadcast(ncent)
@@ -363,7 +338,7 @@ object PqIndex {
           .toDF("vec_id", "code")
       // persist only the production entry (default geometry, no
       // per-call force): a forced-mode test/measurement build must not
-      // overwrite the artifact dir out from under the memoized
+      // overwrite the artifact dir out from under the cached
       // read-back frames of the other mode (env-forced runs persist —
       // the env is constant for the JVM, so no same-process conflict,
       // and the offset table makes the artifacts self-describing)
@@ -379,7 +354,7 @@ object PqIndex {
       out.count() // materialize before dropping the encode frames
       resid.unpersist(); assigned.unpersist()
       (out, codebooks, offsets)
-    })
+    }
   }
 
   /** ADC scan: approximate distance of every code to `query` via the
@@ -420,8 +395,8 @@ object PqIndex {
     * build-side projection is evaluated per MATCH — without a
     * materialization boundary these interpreted lambdas run once per
     * joined candidate row, not once per query (measured 7.3 → 0.7 s
-    * on the sf1 candidate stream; [[IvfPq.knnIvfPqBatch]] routes this
-    * through DfCache). */
+    * on the sf1 candidate stream; [[IvfPq.knnIvfPqBatch]] persists
+    * it as an [[graft.functions.Artifacts]] frame). */
   def adcTable(queriesDf: DataFrame, codebooks: Codebooks): DataFrame = {
     val dsub = codebooks(0)(0).length
     val cbLit = typedLit(codebooks.map(_.map(_.toSeq).toSeq).toSeq)

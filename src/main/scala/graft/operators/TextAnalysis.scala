@@ -148,7 +148,7 @@ object TextAnalysis {
     // corpus and re-run the split+filter tokenizer — the tokenized
     // array table is the shared intermediate, same rule as the dedup
     // shingle table (r18).
-    val toks = graft.functions.DfCache.getOrElseUpdate(s, s"collocToks:$dir") {
+    val toks = graft.functions.Artifacts.frame(s, "collocToks", dir) {
       Tables.spread(s, dir, "documents")
         .select(col("doc_id"),
           filter(split(lower(col("text")), "[^a-z0-9]+"), t => length(t) > 0).as("toks"))
@@ -199,7 +199,7 @@ object TextAnalysis {
     * table; results are aggregates, so the spread() row order is
     * irrelevant. */
   private def docTokens(s: SparkSession, dir: String): DataFrame =
-    graft.functions.DfCache.getOrElseUpdate(s, s"docToks:$dir") {
+    graft.functions.Artifacts.frame(s, "docToks", dir) {
       Tables.spread(s, dir, "documents")
         .select(col("doc_id"), col("lang"),
           explode(tokens(col("text"))).as("token"))

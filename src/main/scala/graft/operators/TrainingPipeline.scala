@@ -114,13 +114,13 @@ object TrainingPipeline {
     // shuffle-bound and this is a ~6× byte reduction. The oracle
     // hashes identically, so the (cosmically rare) collision flips
     // BOTH engines the same way and the hash check is unaffected.
-    // materialized once (DfCache, same convention as Dedup's shingle
-    // table): the train and test branches both read it, so the corpus
+    // persisted once (an Artifacts frame, same convention as Dedup's
+    // shingle table): the train and test branches both read it, so the corpus
     // is tokenized + md5-hashed once, not once per branch. At 100 TB
     // this table is the decontamination pipeline's persistent artifact
     // (written to disk and reused across eval releases), not a
     // per-query recompute.
-    val shingled = graft.functions.DfCache.getOrElseUpdate(s, s"contamShingles:$dir") {
+    val shingled = graft.functions.Artifacts.frame(s, "contamShingles", dir) {
       withSplit
         .select(col("doc_id"), col("bucket"),
           explode(shingles(tokens(col("text")), 8)).as("shs"))

@@ -859,5 +859,5 @@ object WarcGen {
     * pipeline_crawl's messy-url corpus) keep calling [[warcTable]]
     * directly or cache under their own key. */
   def gateTable(s: SparkSession, dir: String): DataFrame =
-    graft.functions.DfCache.getOrElseUpdate(s, s"warcGate:$dir")(warcTable(s, dir))
+    graft.functions.Artifacts.frame(s, "warcGate", dir)(warcTable(s, dir))
 }

@@ -421,17 +421,17 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("index cache is evictable: clearCache drops entries, rebuild still works") {
-    import graft.operators.IvfIndex
-    IvfIndex.clearCache()
+    import graft.functions.Artifacts
+    Artifacts.clear()
     val persistedBefore = spark.sparkContext.getPersistentRDDs.size
     IvfIndex.build(spark, sf)
-    assert(IvfIndex.cacheSize >= 1)
+    assert(Artifacts.size(spark) >= 1)
     assert(spark.sparkContext.getPersistentRDDs.size > persistedBefore,
       "build must hold the assigned rows")
-    IvfIndex.clearCache()
-    assert(IvfIndex.cacheSize == 0)
+    Artifacts.clear()
+    assert(Artifacts.size(spark) == 0)
     assert(spark.sparkContext.getPersistentRDDs.size == persistedBefore,
-      "clearCache must release the held rows")
+      "Artifacts.clear must release the held rows")
     val (_, centroids) = IvfIndex.build(spark, sf)
     assert(centroids.length == IvfIndex.defaultNlist(IvfIndex.corpusCount(spark, sf)))
   }
@@ -465,36 +465,26 @@ class AnnSpec extends AnyFunSuite {
     assert(full == VectorSearch.knnCosine(spark, sf).collect().map(_.toSeq).toSeq)
   }
 
-  test("build memo follows the corpus: an in-place rewrite refits and releases the old rows") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    def corpus(n: Int) = (0 until n).map(i => (i.toLong, Seq.fill(8)(rnd.nextFloat())))
-      .toDF("vec_id", "embedding")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_stale").toString
-    def persisted = spark.sparkContext.getPersistentRDDs.keySet
-    corpus(300).write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-    val before = persisted
-    val (old, _) = IvfIndex.build(spark, tmp)
-    val oldRows = persisted -- before
-    assert(oldRows.nonEmpty && old.count() == 300)
-    assert(IvfIndex.build(spark, tmp)._1 eq old, "an unchanged corpus must hit the memo")
-    corpus(200).write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-    val (fresh, _) = IvfIndex.build(spark, tmp)
-    assert(!(fresh eq old), "a rewritten corpus must refit")
-    assert(fresh.count() == 200 && IvfIndex.corpusCount(spark, tmp) == 200)
-    assert((persisted & oldRows).isEmpty, "the superseded rows must be released")
-  }
-
   test("one corpus dir, one index: path spellings share the memo entry and artifact dir") {
-    val before = IvfIndex.cacheSize
-    val (a, ca) = IvfIndex.build(spark, sf)
-    val (b, cb) = IvfIndex.build(spark, sf + "/")
+    import graft.operators.PqIndex
     val rel = java.nio.file.Paths.get("").toAbsolutePath.relativize(java.nio.file.Paths.get(sf))
-    val (c, _) = IvfIndex.build(spark, s"./$rel/../${java.nio.file.Paths.get(sf).getFileName}")
-    assert((a eq b) && (ca eq cb) && (a eq c), "alias spellings must hit one memo entry")
-    assert(IvfIndex.cacheSize <= before + 1)
+    val spellings = Seq(sf, sf + "/", s"./$rel/../${java.nio.file.Paths.get(sf).getFileName}")
+    // one input per kind of entry: held rows, a persisted frame, PQ codes
+    val kinds: Seq[(String, String => AnyRef)] = Seq(
+      "IvfIndex.build" -> (d => IvfIndex.build(spark, d)._1),
+      "Dedup.minhashLsh" -> (d => Dedup.minhashLsh(spark, d)),
+      "PqIndex.build" -> (d => PqIndex.build(spark, d)._1))
+    kinds.foreach { case (kind, build) =>
+      val first = build(spellings.head)
+      val entries = graft.functions.Artifacts.size(spark)
+      spellings.tail.foreach { d =>
+        assert(build(d) eq first, s"$kind: the spelling $d must hit the entry of $sf")
+      }
+      assert(graft.functions.Artifacts.size(spark) == entries, s"$kind: a spelling added an entry")
+    }
     assert(IvfIndex.dumpDir(sf) == IvfIndex.dumpDir(sf + "/"))
     assert(IvfIndex.dumpDir(sf) == IvfIndex.dumpDir(s"./$rel"))
+    assert(PqIndex.dumpDir(sf) == PqIndex.dumpDir(spellings(2)))
   }
 
   test("radius-calibrated nprobe: meets pair-recall target, monotone in target") {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * pipeline_e2e at 1×/30×/100× on the bounded-family corpora. Every
   * stage is individually measured elsewhere; this times the
   * composition — where caching and shuffle reuse go wrong at scale.
-  * Two draws per dir (cold then warm-cache: DfCache holds the MinHash
+  * Two draws per dir (cold then warm-cache: Artifacts holds the MinHash
   * pairs and chunk weights, the shape a pipeline owner monitoring the
   * funnel actually sees). Run via Test/runMain graft.PipelineDecadeProbe
   * <dir> [dir...]. */

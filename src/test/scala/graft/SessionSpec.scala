@@ -31,61 +31,63 @@ class SessionSpec extends AnyFunSuite {
     assert(shufflePartitionsFor(b, 32) == 32)
   }
 
+  // the four cache specs below keep the titles they had when the cache
+  // held only frames (DfCache); they now drive graft.functions.Artifacts
   test("DfCache bounds live sessions: LRU eviction past MaxPerSession, recent keys survive") {
-    import graft.functions.DfCache
+    import graft.functions.Artifacts
     val spark = SparkTestSession.spark
     import spark.implicits._
-    DfCache.clear()
+    Artifacts.clear()
     try {
       // overfill by 5: a service iterating many corpus dirs must not
       // accumulate persisted frames without limit (r7 kept only the
       // stopped-session hygiene; live sessions grew unboundedly)
-      val n = DfCache.MaxPerSession + 5
+      val n = Artifacts.MaxPerSession + 5
       (0 until n).foreach { i =>
-        DfCache.getOrElseUpdate(spark, s"lru-spec-$i")(Seq(i).toDF("v"))
+        Artifacts.frame(spark, s"lru-spec-$i", SparkTestSession.sf)(Seq(i).toDF("v"))
       }
-      assert(DfCache.sizeFor(spark) == DfCache.MaxPerSession)
+      assert(Artifacts.size(spark) == Artifacts.MaxPerSession)
       // least-recently-used dropped, most recent retained
-      assert(!DfCache.contains(spark, "lru-spec-0"))
-      assert(DfCache.contains(spark, s"lru-spec-${n - 1}"))
+      assert(!Artifacts.contains(spark, "lru-spec-0", SparkTestSession.sf))
+      assert(Artifacts.contains(spark, s"lru-spec-${n - 1}", SparkTestSession.sf))
       // re-inserting an evicted key works (rebuild path, no stale state)
-      val df = DfCache.getOrElseUpdate(spark, "lru-spec-0")(Seq(42).toDF("v"))
+      val df = Artifacts.frame(spark, "lru-spec-0", SparkTestSession.sf)(Seq(42).toDF("v"))
       assert(df.collect().map(_.getInt(0)).toSeq == Seq(42))
-    } finally DfCache.clear()
+    } finally Artifacts.clear()
   }
 
   test("DfCache: a throwing build leaves no entry; the next caller rebuilds") {
-    import graft.functions.DfCache
+    import graft.functions.Artifacts
     val spark = SparkTestSession.spark
     import spark.implicits._
-    DfCache.clear()
+    Artifacts.clear()
     try {
       intercept[RuntimeException] {
-        DfCache.getOrElseUpdate(spark, "boom")(throw new RuntimeException("transient"))
+        Artifacts.frame(spark, "boom", SparkTestSession.sf)(throw new RuntimeException("transient"))
       }
       // a never-built memo must not squat the map (LRU slot + a stale
       // first-caller thunk); the retry runs the NEW caller's build
-      assert(!DfCache.contains(spark, "boom"))
-      val df = DfCache.getOrElseUpdate(spark, "boom")(Seq(7).toDF("v"))
+      assert(!Artifacts.contains(spark, "boom", SparkTestSession.sf))
+      val df = Artifacts.frame(spark, "boom", SparkTestSession.sf)(Seq(7).toDF("v"))
       assert(df.collect().map(_.getInt(0)).toSeq == Seq(7))
-    } finally DfCache.clear()
+    } finally Artifacts.clear()
   }
 
   test("DfCache: a hit never queues behind another key's in-flight build") {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import graft.functions.DfCache
+    import graft.functions.Artifacts
     val spark = SparkTestSession.spark
     import spark.implicits._
-    DfCache.clear()
+    Artifacts.clear()
     try {
-      DfCache.getOrElseUpdate(spark, "latch-hit")(Seq(1).toDF("v"))
+      Artifacts.frame(spark, "latch-hit", SparkTestSession.sf)(Seq(1).toDF("v"))
       val started = new CountDownLatch(1)
       val release = new CountDownLatch(1)
       // some builds run eager Spark jobs (Dedup.components executes
       // its whole propagation loop inside one); model that with a
       // build parked on a latch
       val builder = new Thread(() => {
-        DfCache.getOrElseUpdate(spark, "latch-slow") {
+        Artifacts.frame(spark, "latch-slow", SparkTestSession.sf) {
           started.countDown()
           release.await(30, TimeUnit.SECONDS)
           Seq(2).toDF("v")
@@ -97,29 +99,29 @@ class SessionSpec extends AnyFunSuite {
       // while latch-slow's build is parked, a hit on another key must
       // return promptly — pre-r10 it queued on the same monitor
       val t0 = System.nanoTime()
-      val hit = DfCache.getOrElseUpdate(spark, "latch-hit")(
+      val hit = Artifacts.frame(spark, "latch-hit", SparkTestSession.sf)(
         fail("latch-hit must be served from cache"))
       val hitMs = (System.nanoTime() - t0) / 1e6
       release.countDown()
       builder.join(30000)
       assert(hit.collect().map(_.getInt(0)).toSeq == Seq(1))
       assert(hitMs < 2000, s"hit blocked ${hitMs}ms behind an in-flight build")
-    } finally DfCache.clear()
+    } finally Artifacts.clear()
   }
 
   test("DfCache: a waiter behind a throwing build retries with ITS OWN thunk") {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import graft.functions.DfCache
+    import graft.functions.Artifacts
     val spark = SparkTestSession.spark
     import spark.implicits._
-    DfCache.clear()
+    Artifacts.clear()
     try {
       val started = new CountDownLatch(1)
       val release = new CountDownLatch(1)
       @volatile var builderThrew = false
       val builder = new Thread(() => {
         try {
-          DfCache.getOrElseUpdate(spark, "race-key") {
+          Artifacts.frame(spark, "race-key", SparkTestSession.sf) {
             started.countDown()
             release.await(30, TimeUnit.SECONDS)
             throw new RuntimeException("builder fails")
@@ -137,7 +139,7 @@ class SessionSpec extends AnyFunSuite {
       // waiter re-enter with its own thunk instead (ADVICE r10).
       @volatile var waiterResult: Seq[Int] = Nil
       val waiter = new Thread(() => {
-        waiterResult = DfCache.getOrElseUpdate(spark, "race-key")(Seq(9).toDF("v"))
+        waiterResult = Artifacts.frame(spark, "race-key", SparkTestSession.sf)(Seq(9).toDF("v"))
           .collect().map(_.getInt(0)).toSeq
       })
       waiter.start()
@@ -147,8 +149,8 @@ class SessionSpec extends AnyFunSuite {
       assert(builderThrew, "builder must rethrow its own failure")
       assert(waiterResult == Seq(9), "waiter must get its own build's result")
       // the waiter's successful entry is tracked — eviction can reach it
-      assert(DfCache.contains(spark, "race-key"))
-    } finally DfCache.clear()
+      assert(Artifacts.contains(spark, "race-key", SparkTestSession.sf))
+    } finally Artifacts.clear()
   }
 
   test("Scratch: same-JVM re-entry succeeds; a foreign lock holder fails loudly") {
