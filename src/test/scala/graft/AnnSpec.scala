@@ -377,6 +377,26 @@ class AnnSpec extends AnyFunSuite {
     }
   }
 
+  test("build memo follows the corpus: an in-place rewrite refits and releases the old rows") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    def corpus(n: Int) = (0 until n).map(i => (i.toLong, Seq.fill(8)(rnd.nextFloat())))
+      .toDF("vec_id", "embedding")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_stale").toString
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
+    corpus(300).write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
+    val before = persisted
+    val (old, _) = IvfIndex.build(spark, tmp)
+    val oldRows = persisted -- before
+    assert(oldRows.nonEmpty && old.count() == 300)
+    assert(IvfIndex.build(spark, tmp)._1 eq old, "an unchanged corpus must hit the memo")
+    corpus(200).write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
+    val (fresh, _) = IvfIndex.build(spark, tmp)
+    assert(!(fresh eq old), "a rewritten corpus must refit")
+    assert(fresh.count() == 200 && IvfIndex.corpusCount(spark, tmp) == 200)
+    assert((persisted & oldRows).isEmpty, "the superseded rows must be released")
+  }
+
   test("build memo normalizes the geometry key: k=0 and explicit default share one fit") {
     import graft.operators.IvfIndex
     val default = IvfIndex.defaultNlist(IvfIndex.corpusCount(spark, sf))
