@@ -39,9 +39,9 @@ import graft.Tables
   * remain the standalone vs_knn_pq index.
   *
   * Plan shape: centroid ranking is driver-side over the broadcast-
-  * sized centroid dictionary (identical ranking to IvfIndex.search);
-  * the probe filter is a partition-pruning isin on the assignment
-  * table; the candidate set joins the codes table on vec_id
+  * sized centroid dictionary (IvfIndex.search's ranking and cell
+  * restriction: only the probed cells of the held assignment are
+  * scanned); the candidate set joins the codes table on vec_id
   * (both sides hash-partitioned 8-byte keys) carrying its cell id to
   * meet its cell's ADC row; ADC stays one codegen expression; both
   * top-ks are bounded sorts/aggs. The DuckDB oracle reproduces the
@@ -203,12 +203,9 @@ object IvfPq {
     val (codes, codebooks, offsets) = PqIndex.buildResidual(s, dir, index, centroids)
     val qRaw = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
       .select("embedding").collect()(0).getSeq[Float](0).map(_.toDouble).toArray
-    // probe ranking: same driver-side (dist, cid) order as
-    // IvfIndex.search — the centroid table is dictionary-sized.
-    val probes = centroids.zipWithIndex
-      .map { case (c, i) => (i, IvfIndex.cosineDist(c, qRaw)) }
-      .sortBy { case (i, d) => (d, i) }
-      .take(IvfIndex.resolveNprobe(centroids.length, nprobe)).map(_._1)
+    // probe ranking and cell restriction: IvfIndex.search's, so the
+    // scan reads only the probed cells and compiles nothing per query
+    val probes = IvfIndex.rankProbes(centroids, qRaw, nprobe)
     // residual-capable ADC needs q̂ and each probed cell's encode
     // offset (unit centroid or 0⃗ — see PqIndex.buildResidual;
     // distances are ‖(q̂ − ô) − r‖²).
@@ -221,8 +218,7 @@ object IvfPq {
     val probeAdc = probes.toSeq
       .map(c => (c, PqIndex.flatResidualTable(qNorm, offsets(c), codebooks)))
       .toDF("centroid_id", "adc")
-    val cand = index
-      .filter(col("centroid_id").isin(probes.toIndexedSeq: _*))
+    val cand = IvfIndex.restrictToCells(index, probes)
       .select(col("vec_id"), col("centroid_id"))
     val short = codes.filter(col("vec_id") =!= 0)
       .join(cand, Seq("vec_id"))

@@ -117,10 +117,12 @@ object Streaming {
     * watermark only governs state EVICTION, which a bounded
     * AvailableNow drain ends by terminating. (A watermark-SEALED
     * append sink — hourlyWatermarked's shape — DOES need the final
-    * advance; that one re-enables the flag inside its own body.)
+    * advance; it passes `noDataBatches = true`.) Both confs are set
+    * once before the body and restored in the same `finally`.
     * Oracle-checked: all wrapped drains hash-match their batch
     * oracles at every SF with the flag off. */
-  private[streaming] def withStatePartitions[T](s: SparkSession, inputPath: String)(body: => T): T = {
+  private[streaming] def withStatePartitions[T](s: SparkSession, inputPath: String,
+      noDataBatches: Boolean = false)(body: => T): T = {
     val k = "spark.sql.shuffle.partitions"
     val kNoData = "spark.sql.streaming.noDataMicroBatches.enabled"
     val old = s.conf.get(k)
@@ -129,7 +131,7 @@ object Streaming {
     val sized = math.max(8L, bytes / graft.GraftSession.TargetPartitionBytes)
       .min(graft.GraftSession.MaxShufflePartitions.toLong).toString
     s.conf.set(k, sized)
-    s.conf.set(kNoData, "false")
+    s.conf.set(kNoData, noDataBatches.toString)
     try body finally {
       s.conf.set(k, old)
       s.conf.set(kNoData, oldNoData)
@@ -185,14 +187,12 @@ object Streaming {
     * watermark advance. Only windows sealed by the final watermark
     * are emitted, so this is spec-tested rather than oracle-diffed. */
   def hourlyWatermarked(s: SparkSession, dir: String): DataFrame =
-      withStatePartitions(s, s"$dir/events.parquet") {
-    // the ONE drain here whose OUTPUT depends on the final watermark
-    // advance: append mode emits a window only once the watermark
-    // seals it, and on a bounded drain that seal happens in the
-    // trailing no-data batch — re-enable it for this query only
-    // (withStatePartitions turns it off for the eviction-only drains).
-    val kNoData = "spark.sql.streaming.noDataMicroBatches.enabled"
-    s.conf.set(kNoData, "true")
+      // the ONE drain here whose OUTPUT depends on the final watermark
+      // advance: append mode emits a window only once the watermark
+      // seals it, and on a bounded drain that seal happens in the
+      // trailing no-data batch — keep it for this query only (the
+      // eviction-only drains run without it).
+      withStatePartitions(s, s"$dir/events.parquet", noDataBatches = true) {
     val agg = eventStream(s, dir)
       .withWatermark("ts", "30 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
