@@ -269,9 +269,6 @@ object Bench {
     // first failure per query: its class, message and root cause land
     // in bench_full.json `errors` so a failed row carries its cause
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
-    // code compiled during each query's timed draws (queries run one at
-    // a time, so the JVM-wide counter's delta is the query's own)
-    val compiles = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val base0 = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) && !skipped.contains(n) }
       .map { case (name, fn) =>
@@ -293,7 +290,6 @@ object Bench {
       // four 4-7× ghost regressions that way), escalate to min-of-5 so
       // a ghost regression needs five consecutive bad draws to
       // survive. All samples land in bench_full.json.
-      val compiles0 = Verify.compiles()
       val base =
         if (DriftProne.contains(name)) Vector(timed(), timed(), timed())
         else Vector(timed(), timed())
@@ -307,7 +303,6 @@ object Bench {
         if (!failed && (base.max > 2 * base.min || regressedVsPrev))
           base ++ Vector(timed(), timed(), timed())
         else base
-      compiles(name) = Verify.compiles() - compiles0
       // a failed query reports its elapsed-to-failure time NEGATED so a
       // broken query can't masquerade as a fast one
       (name, if (failed) -samples.min else samples.min, failed, samples, loads.result())
@@ -372,12 +367,10 @@ object Bench {
     val fullLoads = results
       .map { case (k, _, _, _, ls) => s"\"" + k + "\":" + ls.map(r2).mkString("[", ",", "]") }
       .mkString("{", ",", "}")
-    val fullCompiles = compiles.map { case (k, c) => s"\"" + k + "\":" + c }
-      .mkString("{", ",", "}")
     val host = s"""{"jvms":${jvmCount()},"loadavg_end":${r2(load1())}}"""
     val skippedJson = skippedNeg.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val skippedGtJson = skippedGt.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fullJson = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$fullQs,"samples":$fullSamples,"loadavg":$fullLoads,"compiles":$fullCompiles,"host":$host,"drift":$driftJson,"failed":$failedNames,"errors":${errorsJson(errors)},"skipped_kept_negatives":$skippedJson,"skipped_ground_truth":$skippedGtJson,"sf":"$sfDir","n_queries":${results.size}}"""
+    val fullJson = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$fullQs,"samples":$fullSamples,"loadavg":$fullLoads,"host":$host,"drift":$driftJson,"failed":$failedNames,"errors":${errorsJson(errors)},"skipped_kept_negatives":$skippedJson,"skipped_ground_truth":$skippedGtJson,"sf":"$sfDir","n_queries":${results.size}}"""
     Files.write(Paths.get(outFile), (fullJson + "\n").getBytes(StandardCharsets.UTF_8))
     // self-snapshot the round-over-round witness: a zero-failure run of
     // the FULL inventory at a tracked SF overwrites its snapshot file.

@@ -42,7 +42,7 @@ object Verify {
       .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     System.err.println(s"[verify] artifacts held: ${graft.functions.Artifacts.size(spark)} " +
-      s"of ${graft.functions.Artifacts.MaxPerSession}; code compiles: ${compiles()}")
+      s"of ${graft.functions.Artifacts.MaxPerSession}")
     spark.stop()
   }
 
@@ -59,12 +59,6 @@ object Verify {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
-
-  /** Generated-code compilations so far in this JVM (Spark's codegen
-    * counter; JVM-wide, so a delta is one query's only when queries
-    * run one at a time). */
-  def compiles(): Long =
-    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** A failure's class and message, plus its root cause's when the
     * failure wraps another (Spark wraps task and stream errors). */

@@ -1,11 +1,8 @@
 package graft.operators
 
-import org.apache.spark.{Partition, TaskContext}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.SafeRound.round
@@ -21,21 +18,18 @@ import graft.functions.FloatVecDistance
   * cluster centroids partition the vector space; a query probes only
   * the nearest partitions; target-accuracy tunes how many.
   *
-  * On Spark the index is the assigned rows, held once built and laid
-  * out by cell — an inverted file:
+  * On Spark the index is the assigned rows, held once built:
   *  - build: k-means|| (MLlib) fits centroids — a few passes over the
   *    data, all distributed; assignment is one narrow map with the
-  *    broadcast centroid set, run ONCE per build, and one pass-through
-  *    shuffle sends each assigned (vec_id, embedding, centroid_id) row
-  *    to its cell's partitions ([[cellSpan]] of them per cell). The
-  *    rows are persisted (memory, spilling to disk) as [[CellRows]]
-  *    and every consumer reads them.
+  *    broadcast centroid set, run ONCE per build: the assigned
+  *    (vec_id, embedding, centroid_id) rows are persisted
+  *    (memory, spilling to disk) and every consumer reads them.
   *  - probe: rank centroids against the query driver-side (k floats,
-  *    tiny), take nprobe, and restrict to those cells with one array
-  *    literal ([[restrictToCells]]): over the held rows the scan reads
-  *    only the probed cells' partitions — no re-assignment, no
-  *    exchange, no code generated per query — then the exact codegen
-  *    kernel scores survivors and TakeOrderedAndProject yields top-k.
+  *    tiny), take nprobe, and filter the resident rows to those cells
+  *    with one array literal ([[restrictToCells]]) — no re-assignment,
+  *    no exchange, no code generated per query — then the exact
+  *    codegen kernel scores survivors and TakeOrderedAndProject yields
+  *    top-k.
   *  - at rest ([[writeIndex]]/[[readIndex]]): a centroid-partitioned
   *    parquet table, where the same filter is partition pruning — only
   *    nprobe/k of the files are listed and scanned.
@@ -287,27 +281,6 @@ object IvfIndex {
       }
     }
 
-  /** Held partitions per cell: the fewest that keep one held partition
-    * at or below [[graft.GraftSession.TargetPartitionBytes]], the scan
-    * split size, when `n` rows of `dim` floats (~16 bytes of id and
-    * cell plus the floats) fill `nlist` equal cells. Pure in (n, dim,
-    * nlist); 1 until a cell outgrows a split, which at the serving cap
-    * and dim 64 happens near 2·10⁹ vectors. With one cell it is the
-    * corpus's split count. */
-  private[graft] def cellSpan(n: Long, dim: Int, nlist: Int): Int =
-    math.max(1L, math.ceil(n.toDouble * (16L + 4L * dim) /
-      (nlist.toDouble * graft.GraftSession.TargetPartitionBytes)).toLong).toInt
-
-  /** `assigned` rows held by cell: one pass-through shuffle sends cell
-    * c's rows to partitions c·span … c·span+span−1 (by vec_id hash
-    * within the cell), persisted MEMORY_AND_DISK as [[CellRows]]. */
-  private[graft] def holdByCell(assigned: DataFrame, nlist: Int,
-      span: Int): (DataFrame, RDD[InternalRow]) =
-    GraftColumnBridge.persisted(
-      GraftColumnBridge.repartitionById(assigned, nlist * span,
-        col("centroid_id") * span + pmod(hash(col("vec_id")), lit(span))),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, new CellRows(_, span))
-
   /** `k = 0` (the default) means the corpus-adaptive [[defaultNlist]];
     * an explicit k is a sizing override. Artifacts are persisted iff
     * the resolved geometry IS the adaptive default (so an explicit
@@ -318,14 +291,9 @@ object IvfIndex {
     * assignment runs once, here, into rows persisted MEMORY_AND_DISK
     * (a `Scan ExistingRDD` over them, with the assignment plan's size
     * statistics, so consumers' static join choices are unchanged; a
-    * lost block is recomputed from lineage). The rows are held by cell
-    * ([[holdByCell]], the build's one exchange: nlist·[[cellSpan]]
-    * partitions with an explicit count), and the assign.parquet
-    * artifact is written from them with a narrow coalesce. The frame
-    * reads them through a narrow coalesce to scan-split-sized tasks,
-    * so a full scan costs what a corpus scan does. A probe then scans
-    * only its cells' partitions — one job, no exchange, no
-    * re-assignment.
+    * lost block is recomputed from lineage). The assign.parquet
+    * artifact is written from those rows. A probe is then an in-memory
+    * centroid_id filter — one job, no exchange, no re-assignment.
     *
     * An index is a persistent artifact — refitting k-means for every
     * query that probes it is an artifact of the per-query test
@@ -347,36 +315,35 @@ object IvfIndex {
       val tm = trainMod(n, nlist)
       val train = guardedStrideSample(emb, tm, minRows = nlist)
       val model = fitModel(train, nlist)
-      val dim = model.clusterCenters.head.size
-      val (indexed, rows) = holdByCell(assign(model, emb), nlist, cellSpan(n, dim, nlist))
+      val (indexed, rows) = org.apache.spark.sql.GraftColumnBridge.persisted(
+        assign(model, emb), org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // the one assignment pass: fills the cache whether or not the
+      // artifacts below are written; the write then reads held rows
+      rows.count()
       val centroids = model.clusterCenters.map(_.toArray)
       // persist the oracle-checkable artifacts for the default index:
       // the (vec_id → centroid) assignment table and the centroid
       // dictionary. Everything downstream of the fit is derived from
-      // these two tables in BOTH engines. Either way one job fills the
-      // held rows — the assignment write where there is one, else a
-      // count — so the corpus is assigned exactly once.
+      // these two tables in BOTH engines.
       if (nlist == default) {
         import s.implicits._
-        // O(corpus) table: shard the write across the held rows'
-        // nlist·span partitions, narrowed to a count derived from the
-        // TABLE's own size (~16 B/row), never to one task — at the
-        // target scale one task would write the whole corpus. A narrow
-        // coalesce, not a second shuffle of the corpus
-        // (GraftSession.artifactShards).
+        // O(corpus) table: shard the write across an EXPLICIT partition
+        // count — without one, AQE coalesces a small shuffle to a
+        // single task, and at the target scale one task would write
+        // the whole corpus. The count is derived from the TABLE's own
+        // size (~16 B/row), not the session's shuffle partitions,
+        // whose core-count floor wrote one near-empty file per core
+        // at small corpora (GraftSession.artifactShards).
         val shards = graft.GraftSession.artifactShards(n * 16L)
         indexed.select(col("vec_id"), col("centroid_id"))
-          .coalesce(shards)
+          .repartition(shards, col("vec_id"))
           .write.mode("overwrite")
           .parquet(s"${dumpDir(dir)}/assign.parquet")
         centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
           .toDF("cid", "cvec").coalesce(1).write.mode("overwrite")
           .parquet(s"${dumpDir(dir)}/centroids.parquet")
-      } else rows.count()
-      // consumers that scan every cell read split-sized tasks, as they
-      // read the corpus, not one task per cell; a probe's pruned scan
-      // sits under the same narrow coalesce
-      (indexed.coalesce(cellSpan(n, dim, 1)), centroids, rows)
+      }
+      (indexed, centroids, rows)
     }
     (index, centroids)
   }
@@ -397,29 +364,18 @@ object IvfIndex {
       .sortBy { case (i, d) => (d, i) }
       .take(resolveNprobe(centroids.length, nprobe)).map(_._1)
 
-  /** `index` restricted to the rows of `cells`. The restriction is one
-    * array literal, which generated code receives as a reference
-    * object, so its source is the same for every probe set (an `isin`
-    * inlines each id, and every new set compiled anew). At rest it is
-    * partition pruning. Over [[build]]'s held rows — found under any
-    * filters the caller added — the scan also reads only the cells'
-    * partitions. The row filter stays either way, so an answer never
-    * depends on the pruning; any other frame takes the filter alone. */
-  private[graft] def restrictToCells(index: DataFrame, cells: Array[Int]): DataFrame = {
-    val keep = cells.toSet
-    GraftColumnBridge.swapLeafRdd(
-        index.filter(array_contains(lit(cells), col("centroid_id")))) {
-      case rows: CellRows =>
-        val span = rows.span
-        PartitionPruningRDD.create(rows, p => keep(p / span))
-    }
-  }
+  /** `index` restricted to the rows of `cells`: a row filter over
+    * [[build]]'s resident rows, partition pruning over the at-rest
+    * [[readIndex]] layout. The cell set is one array literal, which
+    * generated code receives as a reference object, so the source is
+    * the same for every probe set; an `isin` inlines each id, and
+    * every new set compiled anew. */
+  private[graft] def restrictToCells(index: DataFrame, cells: Array[Int]): DataFrame =
+    index.filter(array_contains(lit(cells), col("centroid_id")))
 
   /** Probe: top-k by cosine among the nprobe nearest centroids' cells
-    * only (`nprobe = 0` = the adaptive [[defaultNprobe]]). Over
-    * [[build]]'s frame it scans only the probed cells' held partitions;
-    * over the at-rest [[readIndex]] layout it is partition pruning
-    * ([[restrictToCells]]). */
+    * only (`nprobe = 0` = the adaptive [[defaultNprobe]]), restricted
+    * by [[restrictToCells]]. */
   def search(s: SparkSession, index: DataFrame, centroids: Array[Array[Double]],
       query: Array[Float], k: Int, nprobe: Int = 0): DataFrame = {
     val probes = rankProbes(centroids, query.map(_.toDouble), nprobe)
@@ -883,16 +839,4 @@ object IvfIndex {
          |  JOIN probes ON a.centroid_id = probes.cid, q
          |WHERE e.vec_id <> 0
          |ORDER BY dist, vec_id LIMIT 10""".stripMargin)
-}
-
-/** The held rows of an [[IvfIndex.build]] index, laid out by cell:
-  * partition c·span + j (0 ≤ j < span) holds rows of cell c only. The
-  * type is the layout's mark — a probe recognises it under any filters
-  * and reads only its cells' partitions ([[IvfIndex.restrictToCells]]).
-  * A pass-through over its parent; persisting it caches the rows. */
-private[graft] final class CellRows(prev: RDD[InternalRow], val span: Int)
-    extends RDD[InternalRow](prev) {
-  override def compute(p: Partition, ctx: TaskContext): Iterator[InternalRow] =
-    firstParent[InternalRow].iterator(p, ctx)
-  override protected def getPartitions: Array[Partition] = firstParent[InternalRow].partitions
 }

@@ -39,9 +39,9 @@ import graft.Tables
   * remain the standalone vs_knn_pq index.
   *
   * Plan shape: centroid ranking is driver-side over the broadcast-
-  * sized centroid dictionary (IvfIndex.search's ranking and cell
-  * restriction: only the probed cells of the held assignment are
-  * scanned); the candidate set joins the codes table on vec_id
+  * sized centroid dictionary (IvfIndex.search's ranking and its
+  * array-literal cell filter on the held assignment); the candidate
+  * set joins the codes table on vec_id
   * (both sides hash-partitioned 8-byte keys) carrying its cell id to
   * meet its cell's ADC row; ADC stays one codegen expression; both
   * top-ks are bounded sorts/aggs. The DuckDB oracle reproduces the
@@ -203,8 +203,8 @@ object IvfPq {
     val (codes, codebooks, offsets) = PqIndex.buildResidual(s, dir, index, centroids)
     val qRaw = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
       .select("embedding").collect()(0).getSeq[Float](0).map(_.toDouble).toArray
-    // probe ranking and cell restriction: IvfIndex.search's, so the
-    // scan reads only the probed cells and compiles nothing per query
+    // probe ranking and cell restriction: IvfIndex.search's, so a
+    // warm probe compiles nothing per query
     val probes = IvfIndex.rankProbes(centroids, qRaw, nprobe)
     // residual-capable ADC needs q̂ and each probed cell's encode
     // offset (unit centroid or 0⃗ — see PqIndex.buildResidual;

@@ -21,44 +21,18 @@ object GraftColumnBridge {
   def analyzed(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
 
-  type Rows = org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]
-
   /** `df`'s rows computed once into an RDD persisted at `level`, and a
     * frame over that RDD (`Scan ExistingRDD`). The RDD is returned so
     * the owner can unpersist it. The frame keeps full lineage (a lost
     * block is recomputed, unlike `localCheckpoint`) and carries `df`'s
     * optimizer statistics, so joins over it plan as they did over
-    * `df`. Lazy: the first action over either fills the cache. `wrap`
-    * lets the owner persist its own RDD type over the rows, e.g. one
-    * that records their layout for later readers. */
-  def persisted(df: DataFrame, level: org.apache.spark.storage.StorageLevel,
-      wrap: Rows => Rows = identity): (DataFrame, Rows) = {
+    * `df`. Lazy: the first action over either fills the cache. */
+  def persisted(df: DataFrame, level: org.apache.spark.storage.StorageLevel)
+      : (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val rdd = wrap(ds.queryExecution.toRdd.map(_.copy())).persist(level)
+    val rdd = ds.queryExecution.toRdd.map(_.copy()).persist(level)
     (classic.Dataset.ofRows(ds.sparkSession,
       execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false)), rdd)
-  }
-
-  /** `df` shuffled into exactly `n` partitions, each row to the
-    * partition `pid` names (Spark's pass-through shuffle; `pid` is an
-    * int in [0, n)). The count is explicit, so AQE never coalesces it. */
-  def repartitionById(df: DataFrame, n: Int, pid: Column): DataFrame =
-    df.repartition(n, toColumn(catalyst.expressions.DirectShufflePartitionID(toExpr(pid))))
-
-  /** `df` with each `Scan ExistingRDD` leaf whose RDD `swap` is defined
-    * on reading `swap(rdd)` instead, under the same output, statistics
-    * and constraints; `df` itself when no leaf matches. The new leaf
-    * claims no partitioning: `swap` may drop partitions. */
-  def swapLeafRdd(df: DataFrame)(swap: PartialFunction[Rows, Rows]): DataFrame = {
-    val ds = df.asInstanceOf[classic.Dataset[Row]]
-    val plan = ds.queryExecution.analyzed
-    val swapped = plan.transformUp {
-      case l: execution.LogicalRDD if swap.isDefinedAt(l.rdd) =>
-        l.copy(rdd = swap(l.rdd),
-          outputPartitioning = catalyst.plans.physical.UnknownPartitioning(0))(
-          ds.sparkSession, Some(l.computeStats()), Some(l.constraints))
-    }
-    if (swapped eq plan) df else classic.Dataset.ofRows(ds.sparkSession, swapped)
   }
 
   /** Register a scalar function on a live session (the

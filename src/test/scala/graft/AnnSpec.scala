@@ -485,82 +485,6 @@ class AnnSpec extends AnyFunSuite {
     assert(full == VectorSearch.knnCosine(spark, sf).collect().map(_.toSeq).toSeq)
   }
 
-  /** Rows the probe's `Scan ExistingRDD` read (run first). */
-  private def scannedRows(df: org.apache.spark.sql.DataFrame): Long = {
-    import org.apache.spark.sql.execution.{RDDScanExec, adaptive}
-    df.collect()
-    val plan = df.queryExecution.executedPlan match {
-      case a: adaptive.AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    plan.collect { case r: RDDScanExec => r.metrics("numOutputRows").value }.sum
-  }
-
-  test("ivf cell layout: one cell per held partition, a probe scans only its cells") {
-    import org.apache.spark.sql.functions.col
-    // span is pure in (n, dim, nlist): 1 at every gate and bench size,
-    // and past the serving cap it keeps a held partition within one
-    // scan split (dim 64 crosses near 2·10⁹ vectors)
-    assert(IvfIndex.cellSpan(500L, 64, 22) == 1)
-    assert(IvfIndex.cellSpan(1500L, 64, 39) == 1)
-    assert(IvfIndex.cellSpan(2000000000L, 64, 4096) == 1)
-    assert(IvfIndex.cellSpan(4000000000L, 64, 4096) == 2)
-    assert(IvfIndex.cellSpan(10000000000L, 64, 4096) == 5)
-    assert(IvfIndex.cellSpan(1000000000L, 768, 4096) == 6)
-    Seq((4000000000L, 64), (10000000000L, 64), (1000000000L, 768)).foreach { case (n, dim) =>
-      val span = IvfIndex.cellSpan(n, dim, 4096)
-      val perPartition = n.toDouble * (16 + 4 * dim) / (4096.0 * span)
-      assert(perPartition <= graft.GraftSession.TargetPartitionBytes, s"n=$n dim=$dim span=$span")
-      assert(IvfIndex.cellSpan(n, dim, 4096 * 2) <= span, "more cells never need a wider span")
-    }
-
-    val (index, centroids) = IvfIndex.build(spark, sf)
-    val nlist = centroids.length
-    assert(IvfIndex.cellSpan(IvfIndex.corpusCount(spark, sf), centroids.head.length, nlist) == 1)
-    val cellSize = index.groupBy("centroid_id").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // vec_id 0 first: its full probe is the exact knn answer
-    val queries = Tables.embeddings(spark, sf).filter(col("vec_id") % 50 === 0)
-      .orderBy("vec_id").select("embedding").collect().map(_.getSeq[Float](0).toArray)
-    // the filter-only path: the same rows behind a frame the probe
-    // cannot prune
-    val unpruned = spark.createDataFrame(index.rdd, index.schema).filter(col("vec_id") =!= 0)
-
-    def checkLayout(held: org.apache.spark.sql.DataFrame, span: Int): Unit = {
-      // the held rows: the frame's one `Scan ExistingRDD` leaf
-      val Seq(leaf) = held.queryExecution.analyzed.collectLeaves()
-        .collect { case l: org.apache.spark.sql.execution.LogicalRDD => l }
-      val cid = leaf.output.indexWhere(_.name == "centroid_id")
-      val cells = leaf.rdd
-        .mapPartitionsWithIndex((i, it) => Iterator(i -> it.map(_.getInt(cid)).toSet)).collect()
-      assert(cells.length == nlist * span)
-      cells.foreach { case (i, cs) =>
-        assert(cs.subsetOf(Set(i / span)), s"held partition $i holds cells $cs (span $span)")
-      }
-      queries.foreach { q =>
-        val probes = IvfIndex.rankProbes(centroids, q.map(_.toDouble), 0)
-        val probe = IvfIndex.search(spark, held.filter(col("vec_id") =!= 0), centroids, q, k = 10)
-        assert(scannedRows(probe) == probes.map(cellSize.getOrElse(_, 0L)).sum,
-          s"a probe of cells ${probes.toSeq} must read only their rows")
-        assert(probe.collect().toSeq ==
-          IvfIndex.search(spark, unpruned, centroids, q, k = 10).collect().toSeq)
-      }
-      assert(IvfIndex.search(spark, held.filter(col("vec_id") =!= 0), centroids, queries.head,
-        k = 10, nprobe = nlist).collect().toSeq == VectorSearch.knnCosine(spark, sf).collect().toSeq,
-        "a full probe is exact knn")
-    }
-    checkLayout(index, span = 1)
-    // the span > 1 layout, from the same assigned rows
-    val (wide, rows) = IvfIndex.holdByCell(index, nlist, span = 3)
-    try checkLayout(wide, span = 3) finally rows.unpersist(blocking = true)
-
-    // the assignment artifact: still sharded, the held rows' row set
-    val assign = s"${IvfIndex.dumpDir(sf)}/assign.parquet"
-    assert(new java.io.File(assign).listFiles().count(_.getName.endsWith(".parquet")) > 1)
-    assert(spark.read.parquet(assign).collect().toSet ==
-      index.select("vec_id", "centroid_id").collect().toSet)
-  }
-
   test("warm probes compile nothing: held rows, readIndex and the IVF-PQ probe") {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.metrics.source.CodegenMetrics
