@@ -18,6 +18,8 @@ import org.apache.spark.sql.functions.lit
   * strings carry the same `1e-9 +` shift.
   */
 object SafeRound {
+  private val Shift = 1e-9
+
   // FastHalfUpRound replaces functions.round: identical HALF_UP
   // semantics (bit-compatible — see its scaladoc and KernelSpec's
   // property pin) without the per-row BigDecimal/Double.toString the
@@ -27,8 +29,14 @@ object SafeRound {
   // widening path functions.round used.
   def round(c: Column, scale: Int): Column =
     org.apache.spark.sql.GraftColumnBridge.toColumn(FastHalfUpRound(
-      org.apache.spark.sql.GraftColumnBridge.toExpr((c + lit(1e-9)).cast("double")),
+      org.apache.spark.sql.GraftColumnBridge.toExpr((c + lit(Shift)).cast("double")),
       scale))
+
+  /** [[round]] for one double outside a Column (a physical operator,
+    * a stateful stream function, a driver-side rerank): the same
+    * shift and the same HALF_UP, so its values equal the column's. */
+  def roundValue(v: Double, scale: Int): Double =
+    FastHalfUpRound.round(v + Shift, scale)
 
   /** Strict-superset prefilter slack for `round(x, 4) <= r` radius
     * filters on candidate streams. HALF_UP at 4 dp keeps a row iff

@@ -4,12 +4,13 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpr}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.{col, posexplode}
 import org.apache.spark.sql.types._
 
 /** Bounded top-k-by-distance aggregate: keeps the k smallest
@@ -104,4 +105,15 @@ object TopKAgg {
   /** Top-k smallest (dist, id) pairs in the group, ascending. */
   def topkByDist(dist: Column, id: Column, k: Int): Column =
     toColumn(TopKByDist(toExpr(dist), toExpr(id), k).toAggregateExpression())
+
+  /** The k nearest rows per `key` of `df`, one row each:
+    * (key, id, dist, rnk), ascending by (dist, id), rnk from 1. The
+    * shuffle carries keys × k, not every scored pair. Callers rename
+    * `id` (and the key) to their own contract. */
+  def perKey(key: Column, dist: Column, id: Column, k: Int)(df: DataFrame): DataFrame =
+    df.groupBy(key)
+      .agg(topkByDist(dist, id, k).as("top"))
+      .select(key, posexplode(col("top")))
+      .select(key, col("col.id").as("id"), col("col.dist").as("dist"),
+        (col("pos") + 1).cast("long").as("rnk"))
 }

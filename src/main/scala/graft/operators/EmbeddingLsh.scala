@@ -153,11 +153,8 @@ object EmbeddingLsh {
     cands
       .select(col("qid"), col("vec_id"),
         round(FloatVecDistance.cosine(col("embedding"), col("qv")), 4).as("dist"))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("vec_id"), 5).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.id").as("vec_id"), col("col.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+      .transform(graft.functions.TopKAgg.perKey(col("qid"), col("dist"), col("vec_id"), 5))
+      .withColumnRenamed("id", "vec_id")
       .orderBy("qid", "rnk")
   }
 

@@ -219,8 +219,8 @@ object HybridSearch {
       val scored = remaining.map { case (id, qs, v) =>
         val maxSel = if (selected.isEmpty) 0.0
           else selected.map(sel => sim(v, sel._3)).max
-        val mmr = BigDecimal(lambda * qs - (1 - lambda) * maxSel + 1e-9)
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+        val mmr = graft.functions.SafeRound.roundValue(
+          lambda * qs - (1 - lambda) * maxSel, 4)
         (id, qs, v, mmr)
       }
       val best = scored.minBy { case (id, _, _, m) => (-m, id) }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.SafeRound.round
 
 import graft.Tables
-import graft.functions.FloatVecDistance
+import graft.functions.{FloatVecDistance, VecMath}
 
 /** IVF (inverted-file) approximate nearest neighbor — the Spark
   * re-expression of the reference's vector index
@@ -89,13 +89,10 @@ object IvfIndex {
   def blockingNlist(n: Long): Int =
     math.max(NumCentroids, math.round(math.sqrt(n.toDouble)).toInt)
 
-  /** The blocking build: [[build]] at [[blockingNlist]] unless a
-    * sizing override pins an explicit geometry. Shared by both pair
-    * producers so the A/B knob and any future geometry change land in
-    * one place. */
+  /** The blocking build: [[build]] at [[blockingNlist]]. Shared by
+    * both pair producers so a geometry change lands in one place. */
   private[graft] def buildBlocking(s: SparkSession, dir: String): (DataFrame, Array[Array[Double]]) =
-    build(s, dir,
-      k = if (envNlist > 0) envNlist else blockingNlist(corpusCount(s, dir)))
+    build(s, dir, k = blockingNlist(corpusCount(s, dir)))
 
   /** Probe-depth default, scaled WITH the adaptive geometry:
     * nprobe ≈ √nlist, floored at [[NumProbe]]. The r6 default pinned
@@ -146,15 +143,6 @@ object IvfIndex {
     s"(SELECT greatest($DefaultSampleMod, CAST(ceil(count(*) / " +
       s"${CalibrationSampleCap}.0) AS BIGINT)) FROM embeddings)"
 
-  /** Explicit-geometry overrides for SIZING MEASUREMENT runs only
-    * (0 = unset = the adaptive defaults above). `build` persists oracle
-    * artifacts only for the adaptive default geometry, so an override
-    * can never poison the oracle's artifact dir. */
-  private[graft] def envNlist: Int =
-    sys.env.get("SPARK_GRAFT_IVF_NLIST").map(_.toInt).getOrElse(0)
-  private[graft] def envNprobe: Int =
-    sys.env.get("SPARK_GRAFT_IVF_NPROBE").map(_.toInt).getOrElse(0)
-
   /** Absolute ceiling on the TARGET-ACCURACY calibration sample. The
     * r7 sample was FRACTIONAL (every 50th vector), so the exact
     * ground-truth pass cost (N/50)·N = N²/50 kernel evaluations and
@@ -189,15 +177,6 @@ object IvfIndex {
     Tables.embeddings(s, dir).filter(col("vec_id") % effMod === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
   }
-
-  /** TARGET-ACCURACY mode for the blocked candidate paths: when set,
-    * dedup_embedding_ivf and mm_pair_mining_ivf calibrate their probe
-    * depth to this recall target ([[calibrateNprobe]]) instead of
-    * taking the scan-bounded default — the dedup/mining twin of the
-    * reference's `WITH TARGET ACCURACY` clause. Measurement/production
-    * knob; unset (the gate configuration) means the default. */
-  private[graft] def envTargetAcc: Option[Double] =
-    sys.env.get("SPARK_GRAFT_IVF_TARGET_ACC").map(_.toDouble)
 
   /** At-rest location of the persisted index artifacts (assignments +
     * centroids) for a corpus dir; the oracle SQL binds __IVFDIR__ to
@@ -348,19 +327,13 @@ object IvfIndex {
     (index, centroids)
   }
 
-  private[graft] def cosineDist(a: Array[Double], b: Array[Double]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-    1.0 - dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
   /** One query's probe set, ranked driver-side: the `nprobe` cells
     * whose centroids are nearest `q` by (cosine distance, cell id)
     * (`nprobe = 0` = the adaptive [[defaultNprobe]]). */
   private[graft] def rankProbes(centroids: Array[Array[Double]], q: Array[Double],
       nprobe: Int): Array[Int] =
     centroids.zipWithIndex
-      .map { case (c, i) => (i, cosineDist(c, q)) }
+      .map { case (c, i) => (i, VecMath.distD("cosine", c, q)) }
       .sortBy { case (i, d) => (d, i) }
       .take(resolveNprobe(centroids.length, nprobe)).map(_._1)
 
@@ -483,11 +456,8 @@ object IvfIndex {
       .select(col("qid"), col("vec_id"),
         graft.functions.SafeRound.round(
           FloatVecDistance.cosine(col("embedding"), col("qv")), 4).as("dist"))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("vec_id"), k).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.id").as("vec_id"), col("col.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+      .transform(graft.functions.TopKAgg.perKey(col("qid"), col("dist"), col("vec_id"), k))
+      .withColumnRenamed("id", "vec_id")
       .orderBy("qid", "rnk")
   }
 
@@ -599,14 +569,15 @@ object IvfIndex {
   }
 
   /** vs_knn_ivf_batch: every 50th vector served against the IVF
-    * layout with nprobe pruning. Honors the production-geometry env
-    * overrides (no-ops when unset — see [[envNlist]]). */
+    * layout at the adaptive geometry and probe depth. A sizing run
+    * calls [[build]] with an explicit k and [[searchBatch]] with an
+    * explicit nprobe. */
   def knnIvfBatch(s: SparkSession, dir: String): DataFrame = {
-    val (index, centroids) = build(s, dir, k = envNlist)
+    val (index, centroids) = build(s, dir)
     val queriesDf = Tables.embeddings(s, dir)
       .filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    searchBatch(s, index, centroids, queriesDf, k = 5, nprobe = envNprobe)
+    searchBatch(s, index, centroids, queriesDf, k = 5)
   }
 
   /** dedup_embedding_ivf: embedding near-dup pair detection blocked by
@@ -624,7 +595,8 @@ object IvfIndex {
     * candidate volume is N × nprobe × (N/nlist) — with nlist ≈ √N and
     * nprobe ≈ √nlist at scale, ~N^1.75 total work (r6's fixed
     * nprobe=4 gave N^1.5 but let recall decay with the corpus; the
-    * recall-pinned mode is [[envTargetAcc]]) — and near/mid-sim pairs
+    * recall-pinned form is [[calibrateNprobe]] at the dedup radius,
+    * passed to [[dedupPairsAt]]) — and near/mid-sim pairs
     * land in nearby cells
     * regardless of their absolute similarity, so recall holds where
     * banding's does not (spec-pinned vs the exact baseline).
@@ -672,25 +644,13 @@ object IvfIndex {
     * Same verified pair set; the oracle is untouched. */
   def dedupPairs(s: SparkSession, dir: String): DataFrame = {
     val (index, centroids) = buildBlocking(s, dir)
-    // probe depth: the scan-bounded adaptive default, an explicit
-    // sizing override, or — the reference's TARGET-ACCURACY contract —
-    // calibrated against PAIR recall at the dedup radius
-    // ([[envTargetAcc]]; radius ground truth, same closed form).
-    val np = envTargetAcc match {
-      case Some(t) =>
-        val c = calibrateNprobe(s, index, centroids, dir, t,
-          radius = Some(Dedup.CosRadius))
-        System.err.println(
-          s"[graft] dedup_embedding_ivf TARGET_ACC=$t -> nprobe=$c/${centroids.length}")
-        c
-      case None => envNprobe
-    }
-    dedupPairsAt(s, dir, index, centroids, np)
+    dedupPairsAt(s, dir, index, centroids, 0)
   }
 
   /** The blocked-dedup pipeline at an explicit probe depth (0 =
     * adaptive) — split out so specs and sizing runs can pin the plan
-    * and recall at a chosen depth without the env knobs. */
+    * and recall at a chosen depth, e.g. one [[calibrateNprobe]] returns
+    * for a pair-recall target at the dedup radius. */
   private[graft] def dedupPairsAt(s: SparkSession, dir: String,
       index: DataFrame, centroids: Array[Array[Double]], np: Int): DataFrame = {
     val probes = Tables.embeddings(s, dir)

@@ -134,8 +134,8 @@ object IvfPq {
       // full-probe ADC score of every candidate for every sample
       // query: residual tables for ALL (query, cell) pairs (sample ×
       // nlist rows — answer-sized), then the codegen unpack-and-sum
-      // over the codes. PERSIST before the join — the adcTable
-      // materialization-boundary rule (see knnIvfPqBatch).
+      // over the codes. PERSIST before the join — the
+      // adcTableResidual materialization-boundary rule.
       val adcAll = PqIndex.adcTableResidual(
         sample.crossJoin(broadcast(cdf.select(col("centroid_id")))),
         offsets, codebooks).persist()
@@ -256,8 +256,8 @@ object IvfPq {
     *    pairs against the assigned index — the cell restriction
     *    expressed as a join key, candidate volume
     *    |queries| × nprobe/nlist × N;
-    *  - each query's 8×16 ADC lookup table is computed as a ROW of an
-    *    answer-sized frame ([[PqIndex.adcTable]]) and broadcast; the
+    *  - each (query, probed cell)'s residual ADC lookup table is a ROW
+    *    of an answer-sized frame ([[PqIndex.adcTableResidual]]); the
     *    per-candidate score is the flat codegen unpack-and-sum
     *    ([[PqIndex.adcScoreOver]]) — the pruned CODES are all that is
     *    scanned (nprobe/nlist of the ~1.6 TB codes table at 100 TB,
@@ -285,17 +285,12 @@ object IvfPq {
     // upper-bounds composed recall, and measurably under-delivered
     // (target 0.9 → ~0.82; the binding approximation was the fixed
     // 50-item shortlist, ADVICE r10). The calibrated pair
-    // lower-bounds sample recall at the target instead. Unset (the
-    // gate configuration), both stay the caller's values and the
-    // plan is bit-unchanged.
+    // lower-bounds sample recall at the target instead. With no
+    // target (the declared query), both stay the caller's values.
     val (np, sl) = targetAcc match {
       case Some(t) =>
-        val (c, se) = calibrateComposed(s, dir, index, centroids, codes,
+        calibrateComposed(s, dir, index, centroids, codes,
           codebooks, offsets, t, k, shortlist, forceMode)
-        System.err.println(
-          s"[graft] vs_knn_ivf_pq_batch TARGET_ACC=$t -> " +
-            s"nprobe=$c/${centroids.length} shortlist=$se")
-        (c, se)
       case None => (nprobe, shortlist)
     }
     val queriesDf = Tables.embeddings(s, dir)
@@ -347,23 +342,14 @@ object IvfPq {
         graft.functions.SafeRound.round(
           graft.functions.FloatVecDistance.cosine(col("embedding"), col("qv")), 4)
           .as("dist"))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("vec_id"), k).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.id").as("vec_id"), col("col.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+      .transform(graft.functions.TopKAgg.perKey(col("qid"), col("dist"), col("vec_id"), k))
+      .withColumnRenamed("id", "vec_id")
       .orderBy("qid", "rnk")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "vs_knn_ivf_pq" -> ((s, dir) => knnIvfPq(s, dir)),
-    // honors the production-geometry sizing knobs like vs_knn_ivf_batch
-    // and the declared-recall TARGET-ACCURACY mode like
-    // dedup_embedding_ivf (all no-ops when unset — the gate
-    // configuration; artifacts persist only for the adaptive default)
-    "vs_knn_ivf_pq_batch" -> ((s, dir) =>
-      knnIvfPqBatch(s, dir, nlist = IvfIndex.envNlist, nprobe = IvfIndex.envNprobe,
-        targetAcc = IvfIndex.envTargetAcc, m = PqIndex.envNumSubspaces)))
+    "vs_knn_ivf_pq_batch" -> ((s, dir) => knnIvfPqBatch(s, dir)))
 
   /** DuckDB oracle over BOTH persisted artifact sets: the IVF
     * assignment/centroid tables (__IVFDIR__) drive probe ranking and

@@ -203,11 +203,8 @@ object Multimodal {
       .filter(col("vec_id") =!= col("neg_id") && col("source") =!= col("neg_source"))
       .select(col("vec_id"), col("neg_id"),
         round(graft.functions.FloatVecDistance.cosine(col("embedding"), col("nvec")), 4).as("dist"))
-      .groupBy(col("vec_id"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("neg_id"), 3).as("top"))
-      .select(col("vec_id").as("doc_id"), posexplode(col("top")))
-      .select(col("doc_id"), col("col.id").as("neg_id"), col("col.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+      .transform(graft.functions.TopKAgg.perKey(col("vec_id"), col("dist"), col("neg_id"), 3))
+      .toDF("doc_id", "neg_id", "dist", "rnk")
       .orderBy("doc_id", "rnk")
   }
 
@@ -268,11 +265,8 @@ object Multimodal {
       .join(vecs.select(col("vec_id").as("neg_id"), col("embedding").as("nvec")), "neg_id")
       .select(col("vec_id"), col("neg_id"),
         round(graft.functions.FloatVecDistance.cosine(col("embedding"), col("nvec")), 4).as("dist"))
-      .groupBy(col("vec_id"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("neg_id"), 3).as("top"))
-      .select(col("vec_id").as("doc_id"), posexplode(col("top")))
-      .select(col("doc_id"), col("col.id").as("neg_id"), col("col.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+      .transform(graft.functions.TopKAgg.perKey(col("vec_id"), col("dist"), col("neg_id"), 3))
+      .toDF("doc_id", "neg_id", "dist", "rnk")
       .orderBy("doc_id", "rnk")
   }
 
@@ -281,7 +275,8 @@ object Multimodal {
     * and scores only those cells' members, so candidate volume is
     * N × nprobe × (N/nlist) and shrinks as nlist grows with the
     * corpus (nlist ≈ √N, nprobe ≈ √nlist at scale ⇒ ~N^1.75 total
-    * work, recall-stable; TARGET ACCURACY pins it exactly), where
+    * work, recall-stable; [[calibrateMiningNprobe]] into
+    * [[pairMiningIvfAt]] pins it to a recall target), where
     * hyperplane banding at this similarity level cannot prune
     * asymptotically (see [[pairMiningLsh]]). Centroid pruning adapts
     * to the data: an anchor's nearest wrong-source items live in its
@@ -302,26 +297,15 @@ object Multimodal {
     // (see IvfIndex.blockingNlist — identical below the cap, so the
     // gate artifacts are bit-unchanged).
     val (index, centroids) = IvfIndex.buildBlocking(s, dir)
-    // probe depth: scan-bounded adaptive default, a sizing override, or
-    // TARGET-ACCURACY calibrated against recall@3 over WRONG-SOURCE
-    // pairs — the operator's own contract. The mask on the calibration
-    // truth matters: the unfiltered top-3 is dominated by same-source
-    // near-duplicates sitting in the anchor's own cell, which would
-    // calibrate the depth down to 1 while the mid-sim negatives this
-    // operator exists to find live several cells out.
-    val np = IvfIndex.envTargetAcc match {
-      case Some(t) =>
-        val c = calibrateMiningNprobe(s, index, centroids, dir, t)
-        System.err.println(
-          s"[graft] mm_pair_mining_ivf TARGET_ACC=$t -> nprobe=$c/${centroids.length}")
-        c
-      case None => IvfIndex.envNprobe
-    }
-    pairMiningIvfAt(s, dir, index, centroids, np)
+    pairMiningIvfAt(s, dir, index, centroids, 0)
   }
 
   /** TARGET-ACCURACY calibration against the mining contract: recall
-    * of the top-3 WRONG-SOURCE neighbors. */
+    * of the top-3 WRONG-SOURCE neighbors. The mask on the calibration
+    * truth matters: the unfiltered top-3 is dominated by same-source
+    * near-duplicates sitting in the anchor's own cell, which would
+    * calibrate the depth down to 1 while the mid-sim negatives this
+    * operator exists to find live several cells out. */
   private[graft] def calibrateMiningNprobe(s: SparkSession, index: DataFrame,
       centroids: Array[Array[Double]], dir: String, target: Double): Int = {
     val srcOf = Tables.documents(s, dir).select(col("doc_id"), col("source"))
@@ -334,8 +318,8 @@ object Multimodal {
   }
 
   /** The mining pipeline at an explicit probe depth (0 = adaptive) —
-    * split out so specs and sizing runs can pin recall at a calibrated
-    * depth without going through the env knobs. */
+    * split out so specs and sizing runs can pin recall at a chosen
+    * depth, e.g. one [[calibrateMiningNprobe]] returns. */
   private[graft] def pairMiningIvfAt(s: SparkSession, dir: String,
       index: DataFrame, centroids: Array[Array[Double]], np: Int): DataFrame = {
     val src = Tables.documents(s, dir).select(col("doc_id"), col("source"))
@@ -365,11 +349,8 @@ object Multimodal {
       .filter(col("vec_id") =!= col("qid") && col("neg_source") =!= col("q_source"))
       .select(col("qid"), col("vec_id"),
         round(graft.functions.FloatVecDistance.cosine(col("embedding"), col("qv")), 4).as("dist"))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("vec_id"), 3).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid").as("doc_id"), col("col.id").as("neg_id"),
-        col("col.dist").as("dist"), (col("pos") + 1).cast("long").as("rnk"))
+      .transform(graft.functions.TopKAgg.perKey(col("qid"), col("dist"), col("vec_id"), 3))
+      .toDF("doc_id", "neg_id", "dist", "rnk")
       .orderBy("doc_id", "rnk")
   }
 

@@ -51,23 +51,6 @@ object PqIndex {
   val NumCodewords = 16
   val Seed = 7L
 
-  /** Codec-granularity sizing knob for the RESIDUAL (composed IVF-PQ)
-    * codec: subspace count `m` at the fixed 4 bits each, so the code
-    * is 4·m bits — m=8 the 32-bit default, m=16 a 64-bit code that
-    * quarters the subspace dimensionality (dsub 8 → 4) and squares
-    * the effective codeword vocabulary. More subspaces = finer codec =
-    * fewer ADC ties = a SHORTER shortlist at the same declared recall
-    * target (the r11 finding: the 0.95-target shortlist tracks codec
-    * CROWDING, not N — 365/2000 re-ranked on the near-uniform gate
-    * corpus at m=8). The price is 2× code bytes at rest and 2× the
-    * per-candidate lookups; PqAccProbe's geometry column prices both
-    * sides. No-op when unset (the gate configuration: default-geometry
-    * artifacts stay bit-identical). The flat standalone vs_knn_pq
-    * codec stays fixed at 8×16 — its oracle reproduces the packed
-    * layout literally. */
-  private[graft] def envNumSubspaces: Int =
-    sys.env.get("SPARK_GRAFT_PQ_M").map(_.trim.toInt).getOrElse(NumSubspaces)
-
   /** At-rest location of the persisted index artifacts (codes +
     * codebooks) for a given corpus dir; the oracle SQL is bound to the
     * same path via the __PQDIR__ placeholder in SparkEntry. */
@@ -226,14 +209,6 @@ object PqIndex {
     a.map(_ / n)
   }
 
-  /** `by_residual` override for MEASUREMENT runs ("1"/"0"; unset =
-    * the measured variance rule below). Unlike the IVF geometry
-    * knobs, a forced mode can never poison the oracle: the persisted
-    * offset table is self-describing and the oracle replays whatever
-    * it finds. */
-  private[graft] def envByResidual: Option[Boolean] =
-    sys.env.get("SPARK_GRAFT_PQ_BY_RESIDUAL").map(_.trim == "1")
-
   /** RESIDUAL-capable build for the composed IVF-PQ layout — FAISS
     * IVFPQ's `by_residual` switch (Jégou et al. 2011 §IV) made
     * data-adaptive. In residual mode, codes quantize
@@ -262,15 +237,26 @@ object PqIndex {
     * codebook set across cells (the FAISS default; per-cell codebooks
     * are nlist× the dictionary for marginal gain).
     *
+    * `forceMode` pins the mode instead of the variance rule (Some(true)
+    * = residual). `m` is the subspace count at a fixed 4 bits each, so
+    * the code is 4·m bits: m=8 the 32-bit default, m=16 a 64-bit code
+    * with half the subspace width. A finer codec has fewer ADC ties, so
+    * the same declared recall target needs a SHORTER shortlist (the r11
+    * finding: the 0.95-target shortlist tracks codec CROWDING, not N),
+    * at 2× the code bytes and per-candidate lookups. The flat
+    * standalone vs_knn_pq codec stays fixed at 8×16 — its oracle
+    * reproduces the packed layout literally.
+    *
     * Derived from the SAME persisted IVF artifacts the serving path
     * probes (`index` = the assignment frame, `centroids` = the fit
     * dictionary), so encode-time and serve-time cells can never
     * disagree. Cached in [[graft.functions.Artifacts]] with the IVF
-    * geometry, mode and m in the name, so a sizing-override build never
-    * collides with the default-geometry entry; artifacts persist only for the default geometry (a sizing
-    * override can't poison the oracle's artifact dir). Build cost is
-    * one narrow join + typed map over the corpus — same shape as the
-    * flat encode. */
+    * geometry, mode and m in the name, so a non-default build never
+    * collides with the default entry; artifacts persist only for the
+    * default geometry, no forced mode and the default m (a sizing
+    * build can't poison the oracle's artifact dir). Build cost is one
+    * narrow join + typed map over the corpus — same shape as the flat
+    * encode. */
   def buildResidual(s: SparkSession, dir: String,
       index: DataFrame, centroids: Array[Array[Double]],
       forceMode: Option[Boolean] = None,
@@ -280,11 +266,10 @@ object PqIndex {
     val isDefaultGeometry =
       centroids.length == IvfIndex.defaultNlist(IvfIndex.corpusCount(s, dir))
     // a forced mode (test/measurement) is cached under its own name —
-    // None (adaptive/env) stays the production entry; the codes frame
-    // is cached in memory when not persisted, and released with it
-    val mode = forceMode.orElse(envByResidual)
+    // None (adaptive) stays the production entry; the codes frame is
+    // cached in memory when not persisted, and released with it
     type Res = (DataFrame, Codebooks, Array[Array[Double]])
-    graft.functions.Artifacts.held[Res](s, s"pqResidual:${centroids.length}:$mode:$m", dir,
+    graft.functions.Artifacts.held[Res](s, s"pqResidual:${centroids.length}:$forceMode:$m", dir,
         _._1.unpersist()) {
       import s.implicits._
       val ncent = centroids.map(l2norm)
@@ -301,7 +286,7 @@ object PqIndex {
         .join(index.select(col("vec_id"), col("centroid_id")), "vec_id")
         .select(col("vec_id"), col("nvec"), col("centroid_id"))
         .as[(Long, Seq[Double], Int)].cache()
-      val byResidual = mode.getOrElse {
+      val byResidual = forceMode.getOrElse {
         // one distributed pass: (Σ‖x̂−ĉ‖², Σx̂, n) → the variance rule
         val (sumR2, sumVec, n) = assigned.map { case (_, v, cid) =>
           val c = bcCent.value(cid)
@@ -337,11 +322,9 @@ object PqIndex {
           .map { case (id, v) => (id, packOne(v, bc.value)) }
           .toDF("vec_id", "code")
       // persist only the production entry (default geometry, no
-      // per-call force): a forced-mode test/measurement build must not
-      // overwrite the artifact dir out from under the cached
-      // read-back frames of the other mode (env-forced runs persist —
-      // the env is constant for the JVM, so no same-process conflict,
-      // and the offset table makes the artifacts self-describing)
+      // forced mode, default m): a forced-mode test/measurement build
+      // must not overwrite the artifact dir out from under the cached
+      // read-back frames of the other mode
       val out =
         if (isDefaultGeometry && forceMode.isEmpty && m == NumSubspaces) {
           val dump = resDumpDir(dir)
@@ -379,41 +362,6 @@ object PqIndex {
     codes.select(col("vec_id"), score.as("adist"))
   }
 
-  /** Batch-ADC support: the per-query lookup table as DATA instead of
-    * a driver-built literal. Returns (qid, adc) with adc the flat
-    * `NumSubspaces × NumCodewords`-double array
-    * `adc(mi*NumCodewords + k) = ‖nq_sub(mi) − cw(mi)(k)‖²` over the
-    * L2-NORMALIZED query. Built once per QUERY row — the frame is
-    * answer-sized (|queries| rows, broadcastable at any corpus size),
-    * so the interpreted higher-order functions here are fine; the
-    * corpus-sized per-candidate work stays the codegen expression in
-    * [[adcScoreOver]]. Left-to-right double accumulation over j, the
-    * same order as the driver-side table in [[adcScores]].
-    *
-    * PERSIST the result before joining it against a corpus-sized
-    * side: the returned frame is lazy, and a broadcast join's
-    * build-side projection is evaluated per MATCH — without a
-    * materialization boundary these interpreted lambdas run once per
-    * joined candidate row, not once per query (measured 7.3 → 0.7 s
-    * on the sf1 candidate stream; [[IvfPq.knnIvfPqBatch]] persists
-    * it as an [[graft.functions.Artifacts]] frame). */
-  def adcTable(queriesDf: DataFrame, codebooks: Codebooks): DataFrame = {
-    val dsub = codebooks(0)(0).length
-    val cbLit = typedLit(codebooks.map(_.map(_.toSeq).toSeq).toSeq)
-    val nq = transform(col("qv"),
-      x => x.cast("double") / sqrt(aggregate(col("qv"), lit(0.0d),
-        (a, v) => a + v.cast("double") * v.cast("double"))))
-    queriesDf
-      .select(col("qid"), nq.as("nq"))
-      .select(col("qid"),
-        flatten(transform(cbLit, (cbm, mi) =>
-          transform(cbm, cw =>
-            aggregate(
-              zip_with(slice(col("nq"), mi * lit(dsub) + 1, lit(dsub)), cw,
-                (a, b) => (a - b) * (a - b)),
-              lit(0.0d), (acc, x) => acc + x)))).as("adc"))
-  }
-
   /** RESIDUAL batch-ADC tables: one flat 128-double lookup row per
     * (query, probed cell) — `adc(mi*NumCodewords+k) =
     * ‖(q̂ − ĉ_cell)_sub(mi) − cw(mi)(k)‖²`, so
@@ -422,8 +370,16 @@ object PqIndex {
     * (qid, centroid_id, qv); output (qid, centroid_id, adc). The frame
     * is |queries| × nprobe rows — answer-sized, so the interpreted
     * higher-order functions are fine here (the corpus-sized
-    * per-candidate work stays the codegen [[adcScoreOver]]); the same
-    * PERSIST-before-join rule as [[adcTable]] applies. `offsets` must
+    * per-candidate work stays the codegen [[adcScoreOver]]).
+    *
+    * PERSIST the result before joining it against a corpus-sized
+    * side: the returned frame is lazy, and a broadcast join's
+    * build-side projection is evaluated per MATCH — without a
+    * materialization boundary these interpreted lambdas run once per
+    * joined candidate row, not once per (query, cell) (measured
+    * 7.3 → 0.7 s on the sf1 candidate stream;
+    * [[IvfPq.knnIvfPqBatch]] persists it as an
+    * [[graft.functions.Artifacts]] frame). `offsets` must
     * be the per-cell encode-offset dictionary the codes were built
     * against ([[buildResidual]]'s third return — unit centroids in
     * residual mode, zeros in flat mode, where this degenerates to the

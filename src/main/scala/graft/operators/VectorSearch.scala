@@ -82,11 +82,8 @@ object VectorSearch {
       .filter(col("vec_id") =!= col("nid"))
       .select(col("vec_id"), col("nid"),
         round(FloatVecDistance.cosine(col("embedding"), col("nvec")), 4).as("dist"))
-      .groupBy(col("vec_id"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("nid"), 5).as("top"))
-      .select(col("vec_id"), posexplode(col("top")))
-      .select(col("vec_id"), col("col.id").as("nid"), col("col.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+      .transform(graft.functions.TopKAgg.perKey(col("vec_id"), col("dist"), col("nid"), 5))
+      .withColumnRenamed("id", "nid")
       .orderBy(col("vec_id"), col("rnk"))
   }
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.types.DoubleType
 
-import graft.functions.VecMath
+import graft.functions.{SafeRound, VecMath}
 
 /** KNN join as a first-class operator: for every left row, the k
   * nearest right rows by a vector distance — the whole-operator form
@@ -90,27 +90,13 @@ case class KnnJoinExec(
       val joinedLR = new JoinedRow
       val joinedAll = new JoinedRow
       val ord = Ordering.Tuple3(Ordering.Double.TotalOrdering, Ordering.Long, Ordering.Int)
-      // when roundDp >= 0, round INSIDE the operator (same semantics as
-      // Spark's round(d + 1e-9, dp): shortest-decimal HALF_UP) so the
-      // kept-k set is selected on the same key the consumer ranks on —
+      // when roundDp >= 0, round INSIDE the operator (SafeRound's
+      // rule, so dist equals a SafeRound.round column) so the kept-k
+      // set is selected on the same key the consumer ranks on —
       // rounding after a tighter unrounded heap can drop a candidate
       // that ties on the rounded value with a smaller id (ADVICE r1).
-      // Fast path: half-up in doubles — identical to the BigDecimal
-      // semantics whenever the scaled value is >1e-9 away from a half
-      // boundary (the +1e-9 nudge guarantees exactly that for values on
-      // a ≥1e-7 grid); the rare near-boundary case falls back.
       val rnd: Double => Double =
-        if (dp < 0) identity
-        else {
-          val scale = math.pow(10, dp)
-          d => {
-            val y = (d + 1e-9) * scale
-            if (math.abs(y - math.floor(y) - 0.5) < 1e-9)
-              java.math.BigDecimal.valueOf(d + 1e-9)
-                .setScale(dp, java.math.RoundingMode.HALF_UP).doubleValue()
-            else math.floor(y + 0.5) / scale
-          }
-        }
+        if (dp < 0) identity else d => SafeRound.roundValue(d, dp)
       it.flatMap { lrow =>
         val lvArr = leftVecBound.eval(lrow).asInstanceOf[ArrayData].toFloatArray()
         // bounded max-heap of (dist, tie, rightIdx)
@@ -156,8 +142,8 @@ object KnnJoin {
   /** For every left row: its k nearest right rows by `metric` distance
     * between `leftVecCol` and `rightVecCol`, plus a `dist` column.
     *
-    * `roundDp >= 0` rounds the distance inside the operator (Spark
-    * `round(d + 1e-9, dp)` semantics) BEFORE heap selection;
+    * `roundDp >= 0` rounds the distance inside the operator
+    * ([[graft.functions.SafeRound.roundValue]]) BEFORE heap selection;
     * `tieBreak` names an integral right-side column used as the heap's
     * secondary sort key, making the kept k exactly the k smallest by
     * (rounded dist, tieBreak) — the order an oracle's

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.SafeRound.round
+import graft.functions.SafeRound.{round, roundValue}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** Structured Streaming pipelines over the events stream.
@@ -270,10 +270,6 @@ object Streaming {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       .as[Ev]
 
-    // repo rounding convention (SafeRound): +1e-9 then HALF_UP
-    def r2(v: Double): Double =
-      BigDecimal(v + 1e-9).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
-
     def fn(userId: Long, rows: Iterator[Ev],
         state: GroupState[List[(Long, Double)]]): Iterator[SessionAgg] = {
       // batch-drain semantics: all of a user's events arrive in one
@@ -283,12 +279,12 @@ object Streaming {
       var n = 0L; var sv = 0.0; var lastTs = Long.MinValue
       evsSorted.foreach { e =>
         if (lastTs != Long.MinValue && e.ts.getTime - lastTs > 30 * 60 * 1000L) {
-          sessions += SessionAgg(userId, n, r2(sv))
+          sessions += SessionAgg(userId, n, roundValue(sv, 2))
           n = 0L; sv = 0.0
         }
         n += 1; sv += e.value; lastTs = e.ts.getTime
       }
-      if (n > 0) sessions += SessionAgg(userId, n, r2(sv))
+      if (n > 0) sessions += SessionAgg(userId, n, roundValue(sv, 2))
       sessions.iterator
     }
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 
 import graft.functions.{FloatVecDistance, TopKAgg}
 import graft.operators.BinaryVector
@@ -38,10 +37,6 @@ object syntax {
     /** Bounded top-k rows per key by ascending `dist` (shuffle carries
       * keys×k, not every candidate): returns (key, id, dist, rnk). */
     def topKPerKey(key: Column, dist: Column, id: Column, k: Int): DataFrame =
-      df.groupBy(key)
-        .agg(TopKAgg.topkByDist(dist, id, k).as("top"))
-        .select(key, posexplode(col("top")))
-        .select(key, col("col.id").as("id"), col("col.dist").as("dist"),
-          (col("pos") + 1).cast("long").as("rnk"))
+      TopKAgg.perKey(key, dist, id, k)(df)
   }
 }

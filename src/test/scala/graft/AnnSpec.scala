@@ -341,7 +341,7 @@ class AnnSpec extends AnyFunSuite {
     // ...while the persisted artifact dir stays at the ADAPTIVE default
     // geometry the DuckDB oracle reproduces (build only writes for
     // k == 0, the corpus-adaptive default — the property that makes
-    // the env knobs safe).
+    // sizing builds safe).
     graft.operators.IvfIndex.build(spark, sf)
     val expected = graft.operators.IvfIndex.defaultNlist(
       graft.Tables.embeddings(spark, sf).count())
@@ -352,11 +352,6 @@ class AnnSpec extends AnyFunSuite {
       .parquet(s"${graft.operators.IvfIndex.dumpDir(sf)}/assign.parquet")
       .agg(org.apache.spark.sql.functions.max(col("centroid_id"))).collect()(0).getInt(0)
     assert(maxAssigned < expected)
-    // the knobs themselves default to the adaptive geometry (the test
-    // JVM never sets them; 0 = adaptive for both)
-    assert(graft.operators.IvfIndex.envNlist == 0)
-    assert(graft.operators.IvfIndex.envNprobe == 0)
-    assert(graft.operators.IvfIndex.envTargetAcc.isEmpty)
   }
 
   test("adaptive probe depth scales as sqrt(nlist), floored, both-engine derivable") {
@@ -676,7 +671,7 @@ class AnnSpec extends AnyFunSuite {
     val qRaw = graft.Tables.embeddings(spark, sf).filter(col("vec_id") === 0)
       .select("embedding").collect()(0).getSeq[Float](0).map(_.toDouble).toArray
     val probes = centroids.zipWithIndex
-      .map { case (c, i) => (i, IvfIndex.cosineDist(c, qRaw)) }
+      .map { case (c, i) => (i, graft.functions.VecMath.distD("cosine", c, qRaw)) }
       .sortBy { case (i, d) => (d, i) }
       .take(IvfIndex.defaultNprobe(centroids.length)).map(_._1).toSet
     val assigned = index.filter(col("vec_id").isin(r.map(_.getLong(0)).toIndexedSeq: _*))

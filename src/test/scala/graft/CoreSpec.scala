@@ -255,6 +255,26 @@ class CoreSpec extends AnyFunSuite {
     assert(missing.subsetOf(rowsOnly), s"undocumented rows-only: ${missing -- rowsOnly}")
   }
 
+  test("library code reads no environment") {
+    // an env read in an operator changes a declared query's answer
+    // from outside its call; the oracle checks only the call as written
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val files = Seq("operators", "streaming", "functions", "plans", "sources").flatMap { pkg =>
+      val walk = java.nio.file.Files.walk(root.resolve(pkg))
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    assert(files.size > 50, s"source tree not found under ${root.toAbsolutePath}")
+    val hits = files.flatMap { f =>
+      java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains("sys.env") || line.contains("System.getenv") =>
+          s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(hits.isEmpty, hits.mkString("environment reads in library code:\n", "\n", ""))
+  }
+
   test("bench previous-round parser reads the dump format") {
     // the correlated-noise escalation depends on this parse: a format
     // drift that silently yields an empty map would disable the

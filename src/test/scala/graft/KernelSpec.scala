@@ -276,6 +276,37 @@ class KernelSpec extends AnyFunSuite {
     assert(diff == 0L)
   }
 
+  test("KnnJoin's rounded dist equals SafeRound over the cosine kernel, at half boundaries too") {
+    import spark.implicits._
+    import graft.functions.{SafeRound, VecMath}
+    // seeded search over 3-d vectors for pairs whose distance plus
+    // `shift` lies within `eps` of a 4-dp half boundary: raw distances
+    // within 1e-6, and shifted ones inside FastHalfUpRound's exact band
+    val rnd = new scala.util.Random(11)
+    def near(eps: Double, shift: Double, n: Int): Seq[(Array[Float], Array[Float])] =
+      Iterator.continually((Array.fill(3)(rnd.nextGaussian().toFloat),
+          Array.fill(3)(rnd.nextGaussian().toFloat)))
+        .filter { case (a, b) =>
+          val y = (VecMath.dist("cosine", a, b) + shift) * 1e4
+          math.abs(y - math.floor(y) - 0.5) < eps * 1e4
+        }.take(n).toSeq
+    val pairs = near(1e-6, 0.0, 20) ++ near(1e-10, 1e-9, 2) ++ near(1.0, 0.0, 6)
+    val left = pairs.zipWithIndex.map { case ((a, _), i) => (i.toLong, a) }.toDF("qid", "qv")
+    val right = pairs.zipWithIndex.map { case ((_, b), i) => (i.toLong, b) }.toDF("nid", "nvec")
+    // k = |right|: every (left, right) pair comes back
+    val viaJoin = graft.plans.KnnJoin(left, right, "qv", "nvec", k = pairs.size,
+        roundDp = 4, tieBreak = Some("nid"))
+      .select("qid", "nid", "dist").as[(Long, Long, Double)].collect()
+    val viaColumn = left.crossJoin(right)
+      .select(col("qid"), col("nid"),
+        SafeRound.round(FloatVecDistance.cosine(col("qv"), col("nvec")), 4).as("dist"))
+      .as[(Long, Long, Double)].collect()
+    assert(viaJoin.length == pairs.size * pairs.size)
+    def bits(r: Array[(Long, Long, Double)]) = r.map { case (q, n, d) =>
+      (q, n) -> java.lang.Double.doubleToLongBits(d) }.toMap
+    assert(bits(viaJoin) == bits(viaColumn))
+  }
+
   test("Md5Words matches the conv/substring/md5 chain bit-for-bit") {
     // the r17 PortableHash rewrite: every phash/phashWord/phash64 now
     // reads raw digest bytes through the codegen Md5Words kernel —

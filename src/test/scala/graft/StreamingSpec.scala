@@ -62,7 +62,7 @@ class StreamingSpec extends AnyFunSuite {
     val centroids = model.clusterCenters.map(_.toArray)
     val qd = query.map(_.toDouble)
     val far = centroids.zipWithIndex
-      .maxBy { case (c, _) => IvfIndex.cosineDist(c, qd) }._2
+      .maxBy { case (c, _) => graft.functions.VecMath.distD("cosine", c, qd) }._2
     val topHit = streamed.head.head.asInstanceOf[Long]
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_tamper").toString
     spark.read.parquet(IvfStream.scratchRoot(sf) + "/dump/assign.parquet")
