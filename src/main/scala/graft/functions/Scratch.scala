@@ -1,11 +1,16 @@
 package graft.functions
 
-/** Fixed, per-(name, input-dir) scratch locations for queries that
-  * materialize at-rest artifacts (sinks under test, stream state,
-  * checkpoints, oracle-readable index dumps). A FIXED path keyed by
-  * the inputs replaces per-call temp dirs: repeated verify/bench runs
-  * reuse (or wipe) the same location instead of leaking disk
-  * unboundedly.
+/** Scratch locations under one base, `java.io.tmpdir/graft_scratch`.
+  *
+  *  - Fixed, per-(name, input-dir) locations for queries whose at-rest
+  *    artifacts outlive the call: oracle-readable index dumps, the
+  *    corpus-proportional stream sinks, the stream dedup state. A
+  *    FIXED path keyed by the inputs replaces per-call temp dirs:
+  *    repeated verify/bench runs reuse (or wipe) the same location
+  *    instead of leaking disk unboundedly.
+  *  - Per-invocation directories ([[temp]]) for what no later reader
+  *    needs: a stream checkpoint (a bounded drain is never resumed)
+  *    and the quality route's sink. Removed when the call ends.
   */
 object Scratch {
 
@@ -20,9 +25,33 @@ object Scratch {
     * hashed in its [[canonicalDir]] form. */
   def pathOf(name: String, dir: String): String = {
     val key = java.lang.Integer.toHexString(canonicalDir(dir).hashCode)
-    java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      "graft_scratch", s"${name}_$key").toString
+    base.resolve(s"${name}_$key").toString
   }
+
+  private def base: java.nio.file.Path =
+    java.nio.file.Paths.get(sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_scratch")
+
+  /** `body` over a new directory under the scratch base, removed when
+    * `body` ends, returning or throwing. A failed removal after a
+    * failed body is attached to the body's failure as suppressed, so
+    * the cause always propagates. */
+  def temp[T](name: String)(body: String => T): T = {
+    java.nio.file.Files.createDirectories(base)
+    val p = java.nio.file.Files.createTempDirectory(base, s"${name}_")
+    scala.util.Using.resource(p)(d => body(d.toString))(remove(_))
+  }
+
+  /** Delete `p` and everything under it, if it exists. */
+  private def remove(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      import scala.jdk.CollectionConverters._
+      // Files.walk holds directory handles until closed — collect the
+      // paths under Using so a long-lived JVM doesn't leak one per run.
+      val paths = scala.util.Using.resource(java.nio.file.Files.walk(p)) {
+        _.iterator().asScala.toSeq
+      }
+      paths.reverse.foreach(java.nio.file.Files.delete)
+    }
 
   /** Stable location — for callers that write with mode("overwrite"),
     * which clears the previous run's content itself. Same
@@ -90,22 +119,14 @@ object Scratch {
     ()
   }
 
-  /** Wiped location — for append sinks and stream checkpoints, where
-    * stale content would duplicate rows or silently skip the ingest.
-    * Holds a cross-process lock on the path for the JVM's lifetime
-    * (see [[lock]]). */
+  /** Wiped location — for append sinks and stream state, where stale
+    * content would duplicate rows or replay as already seen. Holds a
+    * cross-process lock on the path for the JVM's lifetime (see
+    * [[lock]]). */
   def fresh(name: String, dir: String): String = {
     lock(pathOf(name, dir))
     val p = java.nio.file.Paths.get(pathOf(name, dir))
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      // Files.walk holds directory handles until closed — collect the
-      // paths under Using so a long-lived JVM doesn't leak one per run.
-      val paths = scala.util.Using.resource(java.nio.file.Files.walk(p)) {
-        _.iterator().asScala.toSeq
-      }
-      paths.reverse.foreach(java.nio.file.Files.delete)
-    }
+    remove(p)
     java.nio.file.Files.createDirectories(p)
     p.toString
   }

@@ -288,19 +288,21 @@ object PngCodec {
     * the bucket space small enough to enumerate. */
   def dedupPixels(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val census = graft.Tables.documents(s, dir)
-      .select("doc_id")
-      .as[Long]
-      .mapPartitions(_.map { id =>
-        decode(PixelGen.png(id)) match {
-          case Some(img) => (ahash(img), 1L)
-          case None => (-1, 1L)
-        }
-      })
-      .toDF("ahash", "one")
-      .groupBy("ahash")
-      .agg(sum("one").as("cnt"))
-      .cache()
+    // read three times below; held once per corpus, released with it
+    val census = graft.functions.Artifacts.frame(s, "pixelCensus", dir) {
+      graft.Tables.documents(s, dir)
+        .select("doc_id")
+        .as[Long]
+        .mapPartitions(_.map { id =>
+          decode(PixelGen.png(id)) match {
+            case Some(img) => (ahash(img), 1L)
+            case None => (-1, 1L)
+          }
+        })
+        .toDF("ahash", "one")
+        .groupBy("ahash")
+        .agg(sum("one").as("cnt"))
+    }
     val exact = census.select(
       sum(col("cnt")).as("n_images"),
       count(lit(1)).as("n_hashes"),

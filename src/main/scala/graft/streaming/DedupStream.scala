@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.operators.Dedup
@@ -65,20 +62,12 @@ object DedupStream {
   }
 
   def candidates(s: SparkSession, dir: String): DataFrame = {
-    // wiped fixed path: stale state/checkpoint would replay as
-    // already-seen bands; per-call temp dirs would leak disk
+    // wiped fixed path: stale state would replay as already-seen bands;
+    // per-call temp dirs would leak disk
     val root = graft.functions.Scratch.fresh("dedupstream", dir)
-    val batchSchema = graft.Tables.documents(s, dir).schema
-    val stream = s.readStream.schema(batchSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) => addBatch(s, root, batch) }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Streaming.drain(Streaming.source(s, dir, "documents", filePerBatch = true)) {
+      (batch, _) => addBatch(s, root, batch)
+    }
     drained(s, root)
   }
 
@@ -130,21 +119,11 @@ object DedupStream {
   }
 
   /** The distinct candidate pairs a drain rooted at `root` emitted. */
-  private[graft] def drained(s: SparkSession, root: String): DataFrame = {
-    val outPath = s"$root/cands"
-    // explicit schema + existence guard, like the per-batch scratch
-    // read above: a corpus whose every batch yields zero candidates
-    // leaves outPath data-less (or, with zero batches, absent) and
-    // schema inference would throw where a typed empty frame is the
-    // correct answer (ADVICE r17 class).
-    val pairSchema = StructType(Seq(
-      StructField("doc_a", LongType), StructField("doc_b", LongType)))
-    val out =
-      if (!graft.functions.Scratch.exists(s, outPath))
-        s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), pairSchema)
-      else s.read.schema(pairSchema).parquet(outPath)
-    out.distinct().orderBy("doc_a", "doc_b")
-  }
+  private[graft] def drained(s: SparkSession, root: String): DataFrame =
+    Streaming.readBack(s, s"$root/cands", PairSchema).distinct().orderBy("doc_a", "doc_b")
+
+  private val PairSchema = StructType(Seq(
+    StructField("doc_a", LongType), StructField("doc_b", LongType)))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_minhash_cand" -> (candidates _))

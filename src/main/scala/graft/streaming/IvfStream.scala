@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
 import graft.operators.IvfIndex
@@ -28,10 +25,10 @@ import graft.operators.IvfIndex
   */
 object IvfStream {
 
-  /** Fixed per-dir scratch root (index layout + stream checkpoint +
-    * oracle dump), wiped at the start of every run: a stale checkpoint
-    * would mark the odd half already-ingested and silently skip the
-    * append, and per-call temp dirs would leak disk across runs. */
+  /** Fixed per-dir scratch root (index layout + oracle dump), wiped at
+    * the start of every run: stale appends would duplicate rows in the
+    * layout, and per-call temp dirs would leak disk across runs. The
+    * stream's checkpoint is the drain's own, per invocation. */
   def scratchRoot(dir: String): String =
     graft.functions.Scratch.pathOf("ivfstream", dir)
 
@@ -87,13 +84,8 @@ object IvfStream {
     IvfIndex.writeIndex(IvfIndex.assign(model, emb.filter(col("vec_id") % 2 === 0)), indexPath)
 
     // streaming upsert of the odd half
-    val batchSchema = graft.Tables.embeddings(s, dir).schema
-    val stream = s.readStream.schema(batchSchema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(dir)
-      .filter(col("vec_id") % 2 === 1)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    Streaming.drain(Streaming.source(s, dir, "embeddings").filter(col("vec_id") % 2 === 1)) {
+      (batch, _) =>
         // centroid assignment is nlist × dim dots per row, and a
         // file-source micro-batch arrives one-partition-per-file:
         // spread it to cluster parallelism (no-op on a full batch).
@@ -107,11 +99,7 @@ object IvfStream {
         IvfIndex.assign(model, graft.Tables.spreadFrame(batch))
           .repartition(nlist, col("centroid_id"))
           .write.mode("append").partitionBy("centroid_id").parquet(indexPath)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
 
     // oracle artifacts: what the streamed AT-REST layout actually
     // contains (read back), plus this build's centroid dictionary

@@ -2,12 +2,15 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import graft.functions.SafeRound.{round, roundValue}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
-/** Structured Streaming pipelines over the events stream.
+/** Structured Streaming pipelines over the corpus tables.
   *
   * The batch analytics in Analytics.scala answer "what happened"; these
   * answer the same questions continuously. `Trigger.AvailableNow`
@@ -15,6 +18,24 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the correctness gate runs them deterministically: `stream_hourly`
   * must produce byte-identical results to the batch q_events_hourly
   * oracle.
+  *
+  * Every streaming query of graft — the seven event drains here,
+  * [[qualityRoute]], [[DedupStream.candidates]] and
+  * [[IvfStream.indexUpsert]] — runs through the one bounded drain,
+  * [[drain]]: one table of the corpus dir as the source ([[source]]),
+  * a foreachBatch sink, a checkpoint of its own per invocation, and
+  * the session conf touched only while the query starts. The drain
+  * hands each micro-batch to its caller, which keeps the result one of
+  * two ways:
+  *  - collected ([[collected]]): the dictionary-sized answers (hourly,
+  *    hourlyWatermarked, enrich, dedupStream — bounded by windows ×
+  *    types or by segments) are gathered on the driver inside the
+  *    batch body and returned as a local frame;
+  *  - read back ([[readBack]]): the corpus-proportional ones
+  *    (trending, sessionize, intervalJoin — one row per window × user,
+  *    per session, per joined pair) are written as parquet under their
+  *    fixed `Scratch.fresh` root and read back as a distributed frame,
+  *    valid until the next run of the same (query, dir).
   *
   * Scale notes: the tumbling-window agg is keyed on (window,
   * event_type) — state is bounded by #windows × #types, partial
@@ -33,121 +54,146 @@ object Streaming {
 
   case class SessionAgg(user_id: Long, n_events: Long, sum_value: Double)
 
-  /** Collect a memory-sink table into a local frame and drop the view,
-    * so repeated runs don't accumulate result copies in the catalog.
-    * For DICTIONARY-SIZED results only (bounded by the group space —
-    * windows × types, routes, segments): the collect transits the
-    * driver. Corpus-proportional results (one row per session, per
-    * joined pair, per window×user) drain through [[drainToParquet]]
-    * instead. */
-  private def drainMemorySink(s: SparkSession, name: String): DataFrame = {
-    val src = s.table(name)
-    val rows = src.collect()
-    val schema = src.schema
-    s.catalog.dropTempView(name)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  /** State sizing for a stateful drain: `input` is the path whose bytes
+    * size the state-partition count, `noDataBatches` whether Spark
+    * runs its trailing zero-row batch. See [[drain]]. */
+  private[graft] final case class StateSizing(input: String, noDataBatches: Boolean = false)
+
+  /** One table of the corpus dir as a bounded file stream, with the
+    * batch reader's schema; `filePerBatch` makes each file its own
+    * micro-batch. A file-stream source takes a directory and the
+    * corpus dir holds every table, so a glob filter keeps the one
+    * table's file(s). */
+  private[graft] def source(s: SparkSession, dir: String, table: String,
+      filePerBatch: Boolean = false): DataFrame = {
+    val r = s.readStream.schema(graft.Tables.table(s, dir, table).schema)
+      .option("pathGlobFilter", s"$table.parquet")
+    (if (filePerBatch) r.option("maxFilesPerTrigger", "1") else r).parquet(dir)
   }
 
-  /** Drain a bounded stream through a foreachBatch PARQUET sink (the
-    * stream_quality_route pattern) and read the result back as a
-    * distributed frame — for corpus-proportional outputs, where a
-    * memory sink would collect the whole result to the driver. Append
-    * mode appends each micro-batch; Complete mode overwrites with the
-    * full state each trigger, so the final batch's rewrite is the
-    * answer. Checkpoint and sink live under a wiped fixed scratch
-    * path (stale appends would double-count; temp dirs would leak) —
-    * the returned LAZY frame is therefore valid until the next run of
-    * the same (query, dir), the same at-rest contract as the other
-    * fixed-path sinks (DedupStream.candidates, qualityRoute); a
-    * caller holding results across runs materializes them. A drain
-    * that fired zero batches (empty source glob) returns an empty
-    * frame of the stream's schema, like the memory sink did. */
-  private def drainToParquet(df: DataFrame, mode: OutputMode, tag: String,
-      dir: String): DataFrame = {
-    val s = df.sparkSession
-    val root = graft.functions.Scratch.fresh(tag, dir)
-    val out = s"$root/out"
-    val writeMode = if (mode == OutputMode.Complete()) "overwrite" else "append"
-    val q = df.writeStream
-      .outputMode(mode)
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.write.mode(writeMode).parquet(out)
-        ()
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // zero-batch detection through the path's OWN FileSystem, not
-    // java.io.File (ADVICE r10): Scratch is local here, but a
-    // non-local default FS would make the File check report "missing"
-    // despite data (empty frame returned over a real drain) or fail
-    // the read — resolve existence wherever the path actually lives.
-    if (!graft.functions.Scratch.exists(s, out))
-      s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), df.schema)
-    // explicit schema (ADVICE r17): a drain whose batches all had zero
-    // rows leaves a dir with no data files, and schema INFERENCE would
-    // throw where the stream's own schema reads it as a typed empty
-    // frame (and skips the footer read on the normal path too).
-    else s.read.schema(df.schema).parquet(out)
-  }
+  /** Serializes every drain's start, sizing window included. */
+  private object StartLock
 
-  /** Run a stateful streaming query with its state-partition count
-    * sized from the STREAM's input bytes (same bytes/128MiB rule the
-    * batch session uses, floored at 8) instead of the batch
-    * shuffle-partition count. Stateful operators inherit the
-    * shuffle-partition conf at query start and every state partition
-    * pays a fixed per-micro-batch checkpoint cost (delta + commit file
-    * per store per batch), so over-partitioning a small stream buys
-    * pure overhead — while a 100 TB stream still gets bytes-driven
-    * fan-out. The conf is restored before returning (batch queries on
-    * the session keep their own sizing).
+  /** The one bounded drain: run `stream` to the end of its backlog
+    * (`Trigger.AvailableNow`) through a foreachBatch sink that calls
+    * `batch` on each micro-batch, and return once the query has
+    * terminated. A failed query rethrows with its cause.
     *
-    * No-data micro-batches are disabled for the wrapped drain (r18):
-    * Spark fires an extra ZERO-ROW batch after the last data batch
-    * solely to advance the watermark and evict state, and that batch
-    * reloads every state-store partition to do it — measured 1.6 s of
-    * the 4.9 s stream_dedup wall and 1.7 s of the 7.8 s
-    * stream_interval_join wall (StreamProbe, sf0.1: batch 1 rows=0,
-    * addBatch 1.3–1.4 s). None of the operators here need it for their
-    * OUTPUT: complete-mode sinks re-emit full state on every data
-    * batch, dropDuplicates emits first-seen rows immediately, inner
+    * Checkpoint: a new directory per invocation under the scratch base
+    * (`Scratch.temp`), removed when the drain ends, returning or
+    * throwing. A bounded drain is never resumed, so nothing reads its
+    * checkpoint afterwards (Spark's memory sink keeps a temporary
+    * checkpoint the same way), and concurrent runs of one query share
+    * none.
+    *
+    * State sizing (`sizing`, the stateful event drains only): the
+    * state-partition count comes from the STREAM's input bytes — the
+    * same bytes/128MiB rule the batch session uses, floored at 8 —
+    * instead of the batch shuffle-partition count. Stateful operators
+    * take the shuffle-partition conf at query start and every state
+    * partition pays a fixed per-micro-batch checkpoint cost (delta +
+    * commit file per store per batch), so over-partitioning a small
+    * stream buys pure overhead, while a 100 TB stream still gets
+    * bytes-driven fan-out. No-data micro-batches are off unless asked
+    * for (r18): Spark fires an extra ZERO-ROW batch after the last
+    * data batch solely to advance the watermark and evict state, and
+    * that batch reloads every state-store partition to do it —
+    * measured 1.6 s of the 4.9 s stream_dedup wall and 1.7 s of the
+    * 7.8 s stream_interval_join wall (sf0.1: batch 1 rows=0, addBatch
+    * 1.3–1.4 s). None of the sized drains need it for their OUTPUT:
+    * complete-mode sinks re-emit full state on every data batch,
+    * dropDuplicates emits first-seen rows immediately, inner
     * stream-stream joins emit matches in the batch that completes
     * them, and flatMapGroupsWithState runs with NoTimeout — the
-    * watermark only governs state EVICTION, which a bounded
-    * AvailableNow drain ends by terminating. (A watermark-SEALED
-    * append sink — hourlyWatermarked's shape — DOES need the final
-    * advance; it passes `noDataBatches = true`.) Both confs are set
-    * once before the body and restored in the same `finally`.
-    * Oracle-checked: all wrapped drains hash-match their batch
-    * oracles at every SF with the flag off. */
-  private[streaming] def withStatePartitions[T](s: SparkSession, inputPath: String,
-      noDataBatches: Boolean = false)(body: => T): T = {
-    val k = "spark.sql.shuffle.partitions"
-    val kNoData = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val old = s.conf.get(k)
-    val oldNoData = s.conf.get(kNoData)
-    val bytes = graft.GraftSession.dirBytes(inputPath)
-    val sized = math.max(8L, bytes / graft.GraftSession.TargetPartitionBytes)
-      .min(graft.GraftSession.MaxShufflePartitions.toLong).toString
-    s.conf.set(k, sized)
-    s.conf.set(kNoData, noDataBatches.toString)
-    try body finally {
-      s.conf.set(k, old)
-      s.conf.set(kNoData, oldNoData)
+    * watermark only governs state EVICTION, which a bounded drain ends
+    * by terminating. A watermark-SEALED append sink (hourlyWatermarked)
+    * does need the final advance and asks for it.
+    *
+    * Both values are set on the session only around `start()` and
+    * restored right after it. That is enough for the query: in Spark
+    * 4.1 the `StreamExecution` constructor, which runs inside
+    * `start()`, takes its own `sparkSession.cloneSession()`; every
+    * batch is planned from that clone (the state-partition count is
+    * recorded in the offset log from it) and
+    * `MicroBatchExecution.runActivatedStream` reads
+    * `streamingNoDataMicroBatchesEnabled` from it. One lock covers
+    * every drain's start, sized or not, so two concurrent drains can
+    * never leave the session at a drain's values, and an unsized
+    * drain never starts on a sized one's. The three stateless drains
+    * run with the session's own conf. */
+  private[graft] def drain(stream: DataFrame, mode: OutputMode = OutputMode.Append(),
+      sizing: Option[StateSizing] = None)(batch: (DataFrame, Long) => Unit): Unit =
+    graft.functions.Scratch.temp("ckpt") { ckpt =>
+      val s = stream.sparkSession
+      val writer = stream.writeStream
+        .outputMode(mode)
+        .foreachBatch(batch)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+      val window = sizing.toSeq.flatMap { z =>
+        val parts = math.max(8L, graft.GraftSession.dirBytes(z.input) /
+          graft.GraftSession.TargetPartitionBytes)
+          .min(graft.GraftSession.MaxShufflePartitions.toLong)
+        Seq("spark.sql.shuffle.partitions" -> parts.toString,
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> z.noDataBatches.toString)
+      }
+      val q = StartLock.synchronized {
+        val saved = window.map { case (k, _) => k -> s.conf.get(k) }
+        window.foreach { case (k, v) => s.conf.set(k, v) }
+        try writer.start()
+        finally saved.foreach { case (k, v) => s.conf.set(k, v) }
+      }
+      // stop only a query still running (the wait was interrupted): a
+      // terminated one has nothing to stop
+      try q.awaitTermination() finally if (q.isActive) q.stop()
     }
+
+  /** The one read-back rule for a drain's at-rest output: read with the
+    * explicit schema (a drain whose batches all had zero rows leaves a
+    * dir with no data files, which schema inference cannot type), and
+    * an empty frame of that schema when the path is absent (a drain
+    * that fired no batch). The existence check goes through the path's
+    * own FileSystem (`Scratch.exists`). */
+  private[graft] def readBack(s: SparkSession, path: String, schema: StructType): DataFrame =
+    if (graft.functions.Scratch.exists(s, path)) s.read.schema(schema).parquet(path)
+    else s.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+
+  private def eventSizing(dir: String, noDataBatches: Boolean = false): Option[StateSizing] =
+    Some(StateSizing(s"$dir/events.parquet", noDataBatches))
+
+  /** A dictionary-sized event drain, collected on the driver inside the
+    * batch body: in Complete mode each batch carries the whole result,
+    * so the last one replaces the rows; in Append mode the batches
+    * accumulate. A local frame of the stream's schema. */
+  private def collected(agg: DataFrame, mode: OutputMode, dir: String,
+      noDataBatches: Boolean = false): DataFrame = {
+    val rows = new java.util.concurrent.atomic.AtomicReference(Vector.empty[Row])
+    drain(agg, mode, eventSizing(dir, noDataBatches)) { (b, _) =>
+      val got = b.collect()
+      rows.set(if (mode == OutputMode.Complete()) got.toVector else rows.get ++ got)
+    }
+    agg.sparkSession.createDataFrame(rows.get.asJava, agg.schema)
+  }
+
+  /** A corpus-proportional event drain, written as parquet under the
+    * wiped fixed root of (`tag`, dir) and [[readBack]] as a LAZY frame:
+    * valid until the next run of the same (query, dir), so a caller
+    * holding results across runs materializes them. Append mode
+    * appends each micro-batch; Complete mode overwrites with the full
+    * state each trigger, so the final batch's rewrite is the answer. */
+  private def readBackDrain(agg: DataFrame, mode: OutputMode, tag: String,
+      dir: String): DataFrame = {
+    val out = s"${graft.functions.Scratch.fresh(tag, dir)}/out"
+    val writeMode = if (mode == OutputMode.Complete()) "overwrite" else "append"
+    drain(agg, mode, eventSizing(dir)) { (b, _) => b.write.mode(writeMode).parquet(out) }
+    readBack(agg.sparkSession, out, agg.schema)
   }
 
   /** events.parquet as a bounded file stream with normalized ts. */
   def eventStream(s: SparkSession, dir: String): DataFrame = {
-    val batchSchema = graft.Tables.table(s, dir, "events").schema
-    // file-stream sources take a directory; the sf dir holds every
-    // table, so glob-filter down to the events file(s).
-    val raw = s.readStream.schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    batchSchema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
+    val raw = source(s, dir, "events")
+    raw.schema("ts").dataType match {
+      case LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case org.apache.spark.sql.types.TimestampNTZType =>
         // watermarks require an instant TimestampType; naive micros are
@@ -162,8 +208,7 @@ object Streaming {
     * Analytics.qEventsHourly. Complete mode so the bounded drain
     * emits every window (the unbounded deployment would use the
     * watermarked append variant below). */
-  def hourly(s: SparkSession, dir: String): DataFrame =
-      withStatePartitions(s, s"$dir/events.parquet") {
+  def hourly(s: SparkSession, dir: String): DataFrame = {
     val agg = eventStream(s, dir)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -171,43 +216,27 @@ object Streaming {
         round(avg("value"), 4).as("avg_value"))
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"), col("sum_value"), col("avg_value"))
-    val name = s"stream_hourly_${System.nanoTime()}"
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete)
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    drainMemorySink(s, name).orderBy("hour", "event_type")
+    collected(agg, OutputMode.Complete, dir).orderBy("hour", "event_type")
   }
 
   /** Watermarked append-mode variant (the unbounded-stream shape):
     * late data beyond 30 min is dropped, state is evicted per
     * watermark advance. Only windows sealed by the final watermark
     * are emitted, so this is spec-tested rather than oracle-diffed. */
-  def hourlyWatermarked(s: SparkSession, dir: String): DataFrame =
-      // the ONE drain here whose OUTPUT depends on the final watermark
-      // advance: append mode emits a window only once the watermark
-      // seals it, and on a bounded drain that seal happens in the
-      // trailing no-data batch — keep it for this query only (the
-      // eviction-only drains run without it).
-      withStatePartitions(s, s"$dir/events.parquet", noDataBatches = true) {
+  def hourlyWatermarked(s: SparkSession, dir: String): DataFrame = {
     val agg = eventStream(s, dir)
       .withWatermark("ts", "30 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"), col("sum_value"))
-    val name = s"stream_hourly_wm_${System.nanoTime()}"
-    val q = agg.writeStream
-      .outputMode(OutputMode.Append)
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    drainMemorySink(s, name).orderBy("hour", "event_type")
+    // the ONE drain here whose OUTPUT depends on the final watermark
+    // advance: append mode emits a window only once the watermark
+    // seals it, and on a bounded drain that seal happens in the
+    // trailing no-data batch — keep it for this query only (the
+    // eviction-only drains run without it).
+    collected(agg, OutputMode.Append, dir, noDataBatches = true)
+      .orderBy("hour", "event_type")
   }
 
   /** Streaming trending top-k: per tumbling hour, the 5 most active
@@ -218,8 +247,7 @@ object Streaming {
     * it (per-trigger foreachBatch rank over updated windows — window
     * functions are not available inside a streaming plan by design).
     * Ties break on user_id in both engines. */
-  def trending(s: SparkSession, dir: String): DataFrame =
-      withStatePartitions(s, s"$dir/events.parquet") {
+  def trending(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val agg = eventStream(s, dir)
       .groupBy(window(col("ts"), "1 hour"), col("user_id"))
@@ -230,7 +258,7 @@ object Streaming {
     // through the parquet sink and the rank runs distributed on the
     // read-back (never through the driver)
     val w = Window.partitionBy(col("hour")).orderBy(col("n").desc, col("user_id"))
-    drainToParquet(agg, OutputMode.Complete, "trending", dir)
+    readBackDrain(agg, OutputMode.Complete, "trending", dir)
       .withColumn("rnk", row_number().over(w).cast("long"))
       .filter(col("rnk") <= 5)
       .orderBy("hour", "rnk")
@@ -240,31 +268,21 @@ object Streaming {
     * broadcast dimension (customer segment), then aggregated — the
     * standard streaming-enrichment topology (dim broadcast per
     * micro-batch, no stream-side shuffle before the agg). */
-  def enrich(s: SparkSession, dir: String): DataFrame =
-      withStatePartitions(s, s"$dir/events.parquet") {
+  def enrich(s: SparkSession, dir: String): DataFrame = {
     val cust = graft.Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
     val agg = eventStream(s, dir)
       .join(broadcast(cust), col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-    val name = s"stream_enrich_${System.nanoTime()}"
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete)
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    drainMemorySink(s, name).orderBy("c_mktsegment", "event_type")
+    collected(agg, OutputMode.Complete, dir).orderBy("c_mktsegment", "event_type")
   }
 
   /** Stateful sessionization with flatMapGroupsWithState: one state
     * object per user, closed on a 30-minute event-time gap. Emits
     * (user_id, n_events, sum_value) per closed session plus the final
     * open one at drain end. */
-  def sessionize(s: SparkSession, dir: String): DataFrame =
-      withStatePartitions(s, s"$dir/events.parquet") {
+  def sessionize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val evs: Dataset[Ev] = eventStream(s, dir)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
@@ -292,7 +310,7 @@ object Streaming {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
     // one row per closed session — linear in the corpus, so the drain
     // goes through the parquet sink, never the driver
-    drainToParquet(out.toDF(), OutputMode.Append, "sessionize", dir)
+    readBackDrain(out.toDF(), OutputMode.Append, "sessionize", dir)
       .orderBy("user_id", "n_events", "sum_value")
   }
 
@@ -304,8 +322,7 @@ object Streaming {
     * watermark passes its +30 min horizon). Inner joins emit complete
     * results under a bounded drain, so this is held to the batch
     * range-join oracle. */
-  def intervalJoin(s: SparkSession, dir: String): DataFrame =
-      withStatePartitions(s, s"$dir/events.parquet") {
+  def intervalJoin(s: SparkSession, dir: String): DataFrame = {
     val p = eventStream(s, dir).filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"), col("user_id"), col("ts").as("pts"))
       .withWatermark("pts", "30 minutes")
@@ -320,7 +337,7 @@ object Streaming {
         (col("ets").cast("long") - col("pts").cast("long")).as("gap_sec"))
     // join output grows with the event stream — parquet drain, not a
     // driver-resident memory table
-    drainToParquet(joined, OutputMode.Append, "intervaljoin", dir)
+    readBackDrain(joined, OutputMode.Append, "intervaljoin", dir)
       .orderBy("purchase_id", "error_id")
   }
 
@@ -330,23 +347,14 @@ object Streaming {
     * counts must equal the single-copy batch truth. This is the
     * standard `dropDuplicates`-with-watermark topology — state holds
     * only ids younger than the watermark horizon. */
-  def dedupStream(s: SparkSession, dir: String): DataFrame =
-      withStatePartitions(s, s"$dir/events.parquet") {
+  def dedupStream(s: SparkSession, dir: String): DataFrame = {
     val once = eventStream(s, dir)
     val twice = once.union(eventStream(s, dir))
       .withWatermark("ts", "30 minutes")
       .dropDuplicates("event_id")
     val agg = twice.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_value"))
-    val name = s"stream_dedup_${System.nanoTime()}"
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete)
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    drainMemorySink(s, name).orderBy("event_type")
+    collected(agg, OutputMode.Complete, dir).orderBy("event_type")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -367,20 +375,17 @@ object Streaming {
     * with the BATCH quality operator (the same code — `TextAnalysis
     * .qualityOf` runs unchanged inside foreachBatch) and route rows to
     * accept/reject sinks — the filter-and-fork topology of a live
-    * ingestion pipeline. Per batch: one narrow scoring map + two
-    * filtered appends; no state, no shuffle. The drained per-route
-    * report equals the batch quality aggregation, which is the oracle. */
-  def qualityRoute(s: SparkSession, dir: String): DataFrame = {
-    // wiped fixed path: the route sinks are append-mode, so stale
-    // content would double-count; per-call temp dirs would leak disk
-    val root = graft.functions.Scratch.fresh("qroute", dir)
-    val batchSchema = graft.Tables.documents(s, dir).schema
-    val stream = s.readStream.schema(batchSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    * ingestion pipeline. Per batch: one scoring map + one
+    * route-partitioned append; no state. The drained per-route report
+    * equals the batch quality aggregation, which is the oracle. It is
+    * two rows, collected into a local frame before the call's own sink
+    * directory is removed, so concurrent calls share nothing. */
+  def qualityRoute(s: SparkSession, dir: String): DataFrame =
+    // a sink of its own per call: the route sinks are append-mode, so
+    // a shared one would double-count; removed once the report is in
+    graft.functions.Scratch.temp("qroute") { root =>
+      val routes = s"$root/routes"
+      drain(source(s, dir, "documents", filePerBatch = true)) { (batch, _) =>
         // quality scoring is per-row regex/ratio work and a file-source
         // micro-batch is one partition per file: spread first (no-op
         // when the batch already fills the cluster). The fork is ONE
@@ -397,42 +402,22 @@ object Streaming {
           .withColumn("route",
             when(col("quality") >= QualityThreshold, "accept").otherwise("reject"))
           .repartition(col("route"))
-          .write.mode("append").partitionBy("route").parquet(s"$root/routes")
-        ()
+          .write.mode("append").partitionBy("route").parquet(routes)
       }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // the route partition column comes back on the read, so the
-    // report is one pruned-scannable groupBy; a drain that fired zero
-    // batches (empty source glob) — or whose batches all had zero
-    // rows, leaving the dir with no parquet DATA files (ADVICE r17) —
-    // reports a typed empty frame instead of failing schema inference.
-    val routesPath = s"$root/routes"
-    def hasData: Boolean = {
-      val p = new org.apache.hadoop.fs.Path(routesPath)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.exists(p) && {
-        val it = fs.listFiles(p, true)
-        var found = false
-        while (!found && it.hasNext) {
-          val f = it.next().getPath.getName
-          found = !f.startsWith("_") && !f.startsWith(".")
-        }
-        found
-      }
+      // the route partition column comes back on the read, so the
+      // report is one pruned-scannable groupBy, collected before the
+      // sink goes
+      val report = readBack(s, routes, RouteSchema)
+        .groupBy(col("route"))
+        .agg(count(lit(1)).as("n_docs"), round(avg(col("quality")), 4).as("avg_quality"))
+        .orderBy("route")
+      s.createDataFrame(report.collect().toSeq.asJava, report.schema)
     }
-    val routed =
-      if (!hasData)
-        s.emptyDataFrame.select(lit("").as("route"), lit(0L).as("doc_id"),
-          lit(0.0).as("quality")).limit(0)
-      else s.read.parquet(routesPath)
-    routed
-      .groupBy(col("route"))
-      .agg(count(lit(1)).as("n_docs"), round(avg(col("quality")), 4).as("avg_quality"))
-      .orderBy("route")
-  }
+
+  /** The quality route sink's rows; `route` is its partition column. */
+  private val RouteSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("quality", DoubleType),
+    StructField("route", StringType)))
 
   // stream_hourly/stream_enrich are held to the batch oracles.
   val oracleSql: Map[String, String] = Map(

@@ -101,6 +101,17 @@ class ArtifactsSpec extends AnyFunSuite {
     }
   }
 
+  test("the pixel census is one held frame per corpus, released by clear") {
+    val dir = corpusCopy()
+    val before = persisted
+    val a = rows(graft.sources.PngCodec.dedupPixels(spark, dir))
+    assert(rows(graft.sources.PngCodec.dedupPixels(spark, dir)) == a)
+    val mine = persisted -- before
+    assert(mine.size <= 1, s"two calls pinned ${mine.size} frames")
+    graft.functions.Artifacts.clear()
+    assert((persisted & mine).isEmpty, "Artifacts.clear must release the census")
+  }
+
   test("a racing miss builds once: two threads released together share one IVF fit") {
     val dir = corpusCopy()
     val before = persisted

@@ -275,6 +275,37 @@ class CoreSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("environment reads in library code:\n", "\n", ""))
   }
 
+  test("one bounded drain: the stream writer and its checkpoint appear once, inside it") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    assert(files.size > 50, s"source tree not found under ${root.toAbsolutePath}")
+    val lines = files.map(f => f -> java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq)
+    def hits(needle: String): Seq[(java.nio.file.Path, Int)] = lines.flatMap { case (f, ls) =>
+      ls.indices.filter(i => ls(i).contains(needle)).map(f -> _)
+    }
+    // the helper's body: from its def to the next member def
+    val helper = root.resolve("graft/streaming/Streaming.scala")
+    val ls = lines.toMap.apply(helper)
+    val from = ls.indexWhere(_.contains("def drain("))
+    val to = ls.indexWhere(l => l.trim.startsWith("/**") || l.contains(" def "), from + 1)
+    assert(from >= 0 && to > from, "Streaming.drain not found")
+    Seq("writeStream", "checkpointLocation").foreach { needle =>
+      val at = hits(needle)
+      assert(at.size == 1, s"$needle at ${at.map { case (f, i) => s"$f:${i + 1}" }}")
+      val (f, i) = at.head
+      assert(f == helper && i > from && i < to, s"$needle outside the drain: $f:${i + 1}")
+    }
+    Seq("format(\"memory\")", "withStatePartitions").foreach { needle =>
+      val at = hits(needle)
+      assert(at.isEmpty, s"$needle at ${at.map { case (f, i) => s"$f:${i + 1}" }}")
+    }
+  }
+
   test("bench previous-round parser reads the dump format") {
     // the correlated-noise escalation depends on this parse: a format
     // drift that silently yields an empty map would disable the

@@ -1,5 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
+import scala.util.{Try, Using}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.{StreamExecution, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -162,6 +169,79 @@ class StreamingSpec extends AnyFunSuite {
     val out = Streaming.qualityRoute(spark, dir)
     assert(out.columns.toSeq == Seq("route", "n_docs", "avg_quality"))
     assert(out.count() == 0)
+  }
+
+  private val stateConf = Seq("spark.sql.shuffle.partitions",
+    "spark.sql.streaming.noDataMicroBatches.enabled")
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
+
+  test("concurrent drains on one session each equal the serial run and leave the conf as it was") {
+    val before = stateConf.map(spark.conf.get)
+    val drains = Seq[(String, () => DataFrame)](
+      "stream_quality_route" -> (() => Streaming.qualityRoute(spark, sf)),
+      "stream_hourly" -> (() => Streaming.hourly(spark, sf)))
+    val serial = drains.map { case (name, run) => name -> rows(run()) }.toMap
+    // three copies of each, all six released together
+    val runs = drains.flatMap(d => Seq.fill(3)(d))
+    val barrier = new java.util.concurrent.CyclicBarrier(runs.size)
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, Try[Seq[Seq[Any]]])]
+    val threads = runs.map { case (name, run) => new Thread(() => {
+      barrier.await()
+      got.add(name -> Try(rows(run())))
+      ()
+    }) }
+    threads.foreach(_.start())
+    threads.foreach(_.join(300000))
+    assert(got.size == runs.size, "a concurrent drain did not finish")
+    got.asScala.foreach { case (name, r) =>
+      assert(r.isSuccess, s"$name failed: ${r.failed.map(graft.Verify.describe).getOrElse("")}")
+      assert(r.get == serial(name), s"$name: a concurrent run differs from the serial one")
+    }
+    assert(stateConf.map(spark.conf.get) == before, "a drain left its state sizing on the session")
+  }
+
+  test("one empty-result rule: every event drain over a zero-row events table is a typed empty frame") {
+    // a copy of the corpus whose events table has zero rows; enrich
+    // still reads customer, so every other table stays
+    val dir = Files.createTempDirectory("graft_emptyevents")
+    Using.resource(Files.list(Paths.get(sf)))(_.iterator().asScala.toList)
+      .foreach(f => Files.copy(f, dir.resolve(f.getFileName)))
+    val staged = Files.createTempDirectory("graft_emptyevents_w").resolve("events")
+    spark.read.parquet(s"$sf/events.parquet").limit(0).coalesce(1).write.parquet(staged.toString)
+    val part = Using.resource(Files.list(staged))(_.iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get)
+    Files.move(part, dir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    val drains = Seq[(String, (SparkSession, String) => DataFrame)](
+      "hourly" -> Streaming.hourly _, "hourlyWatermarked" -> Streaming.hourlyWatermarked _,
+      "trending" -> Streaming.trending _, "enrich" -> Streaming.enrich _,
+      "sessionize" -> Streaming.sessionize _, "intervalJoin" -> Streaming.intervalJoin _,
+      "dedupStream" -> Streaming.dedupStream _)
+    drains.foreach { case (name, q) =>
+      def typed(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+      val want = typed(q(spark, sf))
+      val empty = q(spark, dir.toString)
+      assert(typed(empty) == want, s"$name: the empty result's columns differ")
+      assert(empty.count() == 0, s"$name: rows from an empty events table")
+    }
+  }
+
+  test("the drain sizes state inside its query only and removes its checkpoint") {
+    val caller = stateConf.map(spark.conf.get)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Seq[String], Seq[String], String)]
+    Streaming.drain(Streaming.eventStream(spark, sf),
+        sizing = Some(Streaming.StateSizing(s"$sf/events.parquet"))) { (b, _) =>
+      val id = spark.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY)
+      val ckpt = spark.streams.get(id).asInstanceOf[StreamingQueryWrapper]
+        .streamingQuery.resolvedCheckpointRoot
+      seen.add((stateConf.map(b.sparkSession.conf.get), stateConf.map(spark.conf.get), ckpt))
+      ()
+    }
+    val Seq((inStream, inCaller, ckpt)) = seen.asScala.toSeq
+    assert(inStream == Seq("8", "false"), "the stream runs with the sized state")
+    assert(inCaller == caller, "the caller's session changed during the drain")
+    assert(stateConf.map(spark.conf.get) == caller, "the caller's session changed after the drain")
+    assert(!graft.functions.Scratch.exists(spark, ckpt), s"checkpoint $ckpt outlived its drain")
   }
 
   test("mm_frame_sample is deterministic and bounded by n_frames") {
