@@ -45,9 +45,10 @@ object GraftSession {
       bytes / TargetPartitionBytes)).toInt
 
   /** Total bytes under a directory (the local stand-in for a cloud
-    * prefix listing). */
+    * prefix listing), walked at its canonical spelling, so a `file:`
+    * URI sizes the same dir as its plain path. */
   def dirBytes(dir: String): Long = {
-    val p = Paths.get(dir)
+    val p = Paths.get(graft.functions.Scratch.canonicalDir(dir))
     if (!Files.exists(p)) 0L
     else {
       val s = Files.walk(p)

@@ -95,8 +95,12 @@ object Tables {
     * epoch casts differ — interpreting naive values as UTC (every
     * graft session pins spark.sql.session.timeZone=UTC).
     */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    val df = table(spark, sfDir, "events")
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    eventTime(table(spark, sfDir, "events"))
+
+  /** The `ts` normalization of [[events]], for a batch or a streaming
+    * read of the table alike (Streaming.eventStream). */
+  private[graft] def eventTime(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -105,5 +109,4 @@ object Tables {
           col("ts").cast(org.apache.spark.sql.types.TimestampType))
       case _ => df
     }
-  }
 }

@@ -15,10 +15,14 @@ package graft.functions
 object Scratch {
 
   /** One spelling per input dir, absolute and normalized, so `sf`,
-    * `sf/` and `./x/../sf` name one location and one Artifacts entry.
-    * A key, not a path to read through. */
-  def canonicalDir(dir: String): String =
-    java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
+    * `sf/`, `./x/../sf` and `file:/…/sf` name one location and one
+    * Artifacts entry (a `file:` URI read as a path would resolve under
+    * the working directory). A key, not a path to read through. */
+  def canonicalDir(dir: String): String = {
+    val local = if (!dir.startsWith("file:")) dir
+      else { val u = new java.net.URI(dir); Option(u.getPath).getOrElse(u.getSchemeSpecificPart) }
+    java.nio.file.Paths.get(local).toAbsolutePath.normalize.toString
+  }
 
   /** Deterministic path for (name, dir) — no filesystem side effects,
     * so oracle SQL bindings can derive the same location. The dir is

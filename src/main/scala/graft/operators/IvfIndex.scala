@@ -33,6 +33,12 @@ import graft.functions.{FloatVecDistance, VecMath}
   *  - at rest ([[writeIndex]]/[[readIndex]]): a centroid-partitioned
   *    parquet table, where the same filter is partition pruning — only
   *    nprobe/k of the files are listed and scanned.
+  *
+  * The one writer ([[writeArtifacts]]) and reader ([[artifactCtes]])
+  * of the oracle-checked format, for batch and streamed
+  * ([[graft.streaming.IvfStream]]) dumps alike, and of the probe
+  * inputs every IVF and IVF-PQ caller shares: [[queryVector]],
+  * [[centroidFrame]], [[centroidRanks]].
   */
 object IvfIndex {
   /** Floor for the adaptive geometry. The floor binds only for corpora
@@ -253,11 +259,17 @@ object IvfIndex {
     if (tm <= 1L) df
     else {
       val stride = df.filter(col("vec_id") % tm === 0)
-      if (stride.count() >= minRows) stride
-      else {
-        val hashed = df.filter(pmod(hash(col("vec_id")), lit(tm)) === 0)
-        if (hashed.count() >= minRows) hashed else df
-      }
+      if (stride.count() >= minRows) stride else hashStrideSample(df, tm, minRows)
+    }
+
+  /** The id-distribution-free half of [[guardedStrideSample]], alone
+    * for a frame that is itself a vec_id stride (IvfStream's even ids). */
+  private[graft] def hashStrideSample(df: DataFrame, tm: Long,
+      minRows: Long): DataFrame =
+    if (tm <= 1L) df
+    else {
+      val hashed = df.filter(pmod(hash(col("vec_id")), lit(tm)) === 0)
+      if (hashed.count() >= minRows) hashed else df
     }
 
   /** `k = 0` (the default) means the corpus-adaptive [[defaultNlist]];
@@ -304,27 +316,67 @@ object IvfIndex {
       // the (vec_id → centroid) assignment table and the centroid
       // dictionary. Everything downstream of the fit is derived from
       // these two tables in BOTH engines.
-      if (nlist == default) {
-        import s.implicits._
-        // O(corpus) table: shard the write across an EXPLICIT partition
-        // count — without one, AQE coalesces a small shuffle to a
-        // single task, and at the target scale one task would write
-        // the whole corpus. The count is derived from the TABLE's own
-        // size (~16 B/row), not the session's shuffle partitions,
-        // whose core-count floor wrote one near-empty file per core
-        // at small corpora (GraftSession.artifactShards).
-        val shards = graft.GraftSession.artifactShards(n * 16L)
-        indexed.select(col("vec_id"), col("centroid_id"))
-          .repartition(shards, col("vec_id"))
-          .write.mode("overwrite")
-          .parquet(s"${dumpDir(dir)}/assign.parquet")
-        centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-          .toDF("cid", "cvec").coalesce(1).write.mode("overwrite")
-          .parquet(s"${dumpDir(dir)}/centroids.parquet")
-      }
+      if (nlist == default) writeArtifacts(s, dumpDir(dir), indexed, centroids, n)
       (indexed, centroids, rows)
     }
     (index, centroids)
+  }
+
+  /** The centroid dictionary as (cid int, cvec array<double>): the
+    * `centroids.parquet` artifact and every centroid-ranking broadcast. */
+  private[graft] def centroidFrame(s: SparkSession,
+      centroids: Array[Array[Double]]): DataFrame = {
+    import s.implicits._
+    centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cid", "cvec")
+  }
+
+  /** Write `assigned`'s (vec_id, centroid_id) as `assign.parquet` and
+    * the dictionary as one-file `centroids.parquet` under `dump`. The
+    * O(corpus) assignment is sharded across an EXPLICIT partition count
+    * — without one, AQE coalesces a small shuffle to a single task, and
+    * at the target scale one task would write the whole corpus — derived
+    * from the table's own size (`rows` × ~16 B), not the core-floored
+    * session shuffle partitions (GraftSession.artifactShards). */
+  private[graft] def writeArtifacts(s: SparkSession, dump: String, assigned: DataFrame,
+      centroids: Array[Array[Double]], rows: Long): Unit = {
+    assigned.select(col("vec_id"), col("centroid_id"))
+      .repartition(graft.GraftSession.artifactShards(rows * 16L), col("vec_id"))
+      .write.mode("overwrite").parquet(s"$dump/assign.parquet")
+    centroidFrame(s, centroids).coalesce(1).write.mode("overwrite")
+      .parquet(s"$dump/centroids.parquet")
+  }
+
+  /** DuckDB reader of a [[writeArtifacts]] dump: CTEs `a` and `c` over
+    * the dir the oracle binds to `dirToken` (`__IVFDIR__`, `__IVFSDIR__`). */
+  private[graft] def artifactCtes(dirToken: String): String =
+    s"""a AS (SELECT vec_id, centroid_id
+      |     FROM read_parquet('$dirToken/assign.parquet/*.parquet')),
+      |c AS (SELECT cid, cvec
+      |     FROM read_parquet('$dirToken/centroids.parquet/*.parquet'))""".stripMargin
+
+  /** The vec_id = 0 row's embedding: the query of every single-probe
+    * IVF and PQ query. */
+  private[graft] def queryVector(s: SparkSession, dir: String): Array[Float] =
+    Tables.embeddings(s, dir).filter(col("vec_id") === 0)
+      .select("embedding").collect()(0).getSeq[Float](0).toArray
+
+  /** Top-10 for [[queryVector]] over `index` minus its own row, at
+    * `nprobe` (0 = adaptive). */
+  private[graft] def probeQuery(s: SparkSession, dir: String, index: DataFrame,
+      centroids: Array[Array[Double]], nprobe: Int): DataFrame =
+    search(s, index.filter(col("vec_id") =!= 0), centroids, queryVector(s, dir), k = 10, nprobe)
+
+  /** (qid, centroid_id, crank) for a (qid, qv) frame: every cell ranked
+    * per query by (cosine distance, cell id), windowed per query. */
+  private[graft] def centroidRanks(s: SparkSession, queries: DataFrame,
+      centroids: Array[Array[Double]]): DataFrame = {
+    val cdf = centroidFrame(s, centroids).select(col("cid").as("centroid_id"), col("cvec"))
+    val w = Window.partitionBy(col("qid")).orderBy(col("cdist"), col("centroid_id"))
+    queries.crossJoin(broadcast(cdf))
+      .select(col("qid"), col("centroid_id"),
+        FloatVecDistance.cosine(col("qv"), col("cvec")).as("cdist"))
+      .withColumn("crank", row_number().over(w))
+      .select(col("qid"), col("centroid_id"), col("crank"))
   }
 
   /** One query's probe set, ranked driver-side: the `nprobe` cells
@@ -376,9 +428,7 @@ object IvfIndex {
     * is additionally asserted in AnnSpec. */
   def knnIvf(s: SparkSession, dir: String): DataFrame = {
     val (index, centroids) = build(s, dir)
-    val query = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
-      .select("embedding").collect()(0).getSeq[Float](0).toArray
-    search(s, index.filter(col("vec_id") =!= 0), centroids, query, k = 10)
+    probeQuery(s, dir, index, centroids, 0)
   }
 
   /** Distributed probe ranking for a TABLE of query vectors: the
@@ -396,10 +446,9 @@ object IvfIndex {
     * through the ranking unprojected. */
   def probePairs(s: SparkSession, queriesDf: DataFrame,
       centroids: Array[Array[Double]], nprobe: Int = 0): DataFrame = {
-    import s.implicits._
     val np = resolveNprobe(centroids.length, nprobe)
-    val cdf = centroids.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }
-      .toSeq.toDF("cid", "cvec")
+    // TopKByDist carries a Long id
+    val cdf = centroidFrame(s, centroids).select(col("cid").cast("long").as("cid"), col("cvec"))
     queriesDf
       .crossJoin(broadcast(cdf))
       .select(col("qid"),
@@ -494,7 +543,6 @@ object IvfIndex {
       targetAccuracy: Double, k: Int = 10, sampleMod: Int = DefaultSampleMod,
       radius: Option[Double] = None,
       truthFilter: DataFrame => DataFrame = identity): Int = {
-    import s.implicits._
     val sample = calibrationSample(s, dir, sampleMod)
     // exact ground truth per sample query (broadcast the sample,
     // bounded top-k agg / radius filter — shuffle volume is the
@@ -522,16 +570,9 @@ object IvfIndex {
     }
     val truth = truthIds
       .join(index.select(col("vec_id"), col("centroid_id")), "vec_id")
-    // per-query centroid ranking: sample × nlist rows, windowed
-    // per query — bounded work, parallel across queries
-    val cdf = centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-      .toSeq.toDF("centroid_id", "cvec")
-    val w = Window.partitionBy(col("qid")).orderBy(col("cdist"), col("centroid_id"))
-    val cranks = sample.crossJoin(broadcast(cdf))
-      .select(col("qid"), col("centroid_id"),
-        FloatVecDistance.cosine(col("qv"), col("cvec")).as("cdist"))
-      .withColumn("crank", row_number().over(w))
-      .select(col("qid"), col("centroid_id"), col("crank"))
+    // per-query centroid ranking: sample × nlist rows, windowed per
+    // query — bounded work, parallel across queries
+    val cranks = centroidRanks(s, sample, centroids)
     val nQueries = sample.count()
     val byRank = truth.join(cranks, Seq("qid", "centroid_id"))
       .groupBy(col("crank")).agg(count(lit(1)).as("n"))
@@ -563,9 +604,7 @@ object IvfIndex {
   def knnIvfAcc(s: SparkSession, dir: String): DataFrame = {
     val (index, centroids) = build(s, dir)
     val np = calibrateNprobe(s, index, centroids, dir, targetAccuracy = 0.95)
-    val query = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
-      .select("embedding").collect()(0).getSeq[Float](0).toArray
-    search(s, index.filter(col("vec_id") =!= 0), centroids, query, k = 10, nprobe = np)
+    probeQuery(s, dir, index, centroids, np)
   }
 
   /** vs_knn_ivf_batch: every 50th vector served against the IVF
@@ -685,21 +724,13 @@ object IvfIndex {
     "vs_knn_ivf_batch" -> (knnIvfBatch _),
     "dedup_embedding_ivf" -> (dedupPairs _))
 
-  /** Shared artifact CTEs: the assignment table and centroid
-    * dictionary persisted by `build` (bound via __IVFDIR__). */
-  private val artifactCtes =
-    """a AS (SELECT vec_id, centroid_id
-      |     FROM read_parquet('__IVFDIR__/assign.parquet/*.parquet')),
-      |c AS (SELECT cid, cvec
-      |     FROM read_parquet('__IVFDIR__/centroids.parquet/*.parquet'))""".stripMargin
-
   /** DuckDB oracles over the persisted artifacts: given the k-means
     * fit (the one engine-specific step), probe ranking, partition
     * pruning, batch serving, and TARGET-ACCURACY calibration are all
     * reproduced independently and hash-compared. */
   val oracleSql: Map[String, String] = Map(
     "vs_knn_ivf" ->
-      s"""WITH $artifactCtes,
+      s"""WITH ${artifactCtes("__IVFDIR__")},
          |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
          |cd AS (SELECT cid, ${VectorSearch.dCosine("cvec", "qv")} AS cdist FROM c, q),
          |probes AS (
@@ -712,7 +743,7 @@ object IvfIndex {
          |WHERE e.vec_id <> 0
          |ORDER BY dist, vec_id LIMIT 10""".stripMargin,
     "vs_knn_ivf_batch" ->
-      s"""WITH $artifactCtes,
+      s"""WITH ${artifactCtes("__IVFDIR__")},
          |qs AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id % 50 = 0),
          |cd AS (SELECT qid, cid, ${VectorSearch.dCosine("cvec", "qv")} AS cdist FROM qs, c),
          |pr AS (
@@ -737,7 +768,7 @@ object IvfIndex {
     // (both probe directions via least/greatest), exact verification,
     // radius filter. Same contract as the dedup_embedding oracle.
     "dedup_embedding_ivf" ->
-      s"""WITH $artifactCtes,
+      s"""WITH ${artifactCtes("__IVFDIR__")},
          |qs AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings),
          |cd AS (SELECT qid, cid, ${VectorSearch.dCosine("cvec", "qv")} AS cdist FROM qs, c),
          |pr AS (
@@ -758,7 +789,7 @@ object IvfIndex {
          |SELECT vec_a, vec_b, dist FROM d
          |WHERE dist <= ${Dedup.CosRadius} ORDER BY vec_a, vec_b""".stripMargin,
     "vs_knn_ivf_acc" ->
-      s"""WITH $artifactCtes,
+      s"""WITH ${artifactCtes("__IVFDIR__")},
          |qs AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
          |       WHERE vec_id % $sqlCalibMod = 0),
          |td AS (

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -103,7 +102,6 @@ object IvfPq {
       forceMode: Option[Boolean]): (Int, Int) =
     graft.functions.Artifacts.get(s, s"ivfPqCalibration:${centroids.length}:$target:$k:" +
         s"$shortlistFloor:$forceMode:${codebooks.length}", dir) {
-      import s.implicits._
       val sample = IvfIndex.calibrationSample(s, dir)
       // exact ground truth top-k per sample query (capped broadcast,
       // bounded agg — the calibrateNprobe shape). The distance is
@@ -123,22 +121,15 @@ object IvfPq {
         .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("vec_id"), k).as("top"))
         .select(col("qid"), explode(col("top.id")).as("vec_id"))
       // per-query centroid ranking (sample × nlist, windowed per query)
-      val cdf = centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
-        .toSeq.toDF("centroid_id", "cvec")
-      val w = Window.partitionBy(col("qid")).orderBy(col("cdist"), col("centroid_id"))
-      val cranks = sample.crossJoin(broadcast(cdf))
-        .select(col("qid"), col("centroid_id"),
-          graft.functions.FloatVecDistance.cosine(col("qv"), col("cvec")).as("cdist"))
-        .withColumn("crank", row_number().over(w))
-        .select(col("qid"), col("centroid_id"), col("crank"))
+      val cranks = IvfIndex.centroidRanks(s, sample, centroids)
       // full-probe ADC score of every candidate for every sample
       // query: residual tables for ALL (query, cell) pairs (sample ×
       // nlist rows — answer-sized), then the codegen unpack-and-sum
       // over the codes. PERSIST before the join — the
       // adcTableResidual materialization-boundary rule.
+      val cells = IvfIndex.centroidFrame(s, centroids).select(col("cid").as("centroid_id"))
       val adcAll = PqIndex.adcTableResidual(
-        sample.crossJoin(broadcast(cdf.select(col("centroid_id")))),
-        offsets, codebooks).persist()
+        sample.crossJoin(broadcast(cells)), offsets, codebooks).persist()
       val adist = index.select(col("vec_id"), col("centroid_id"))
         .join(codes, "vec_id")
         .join(adcAll, "centroid_id")
@@ -201,18 +192,14 @@ object IvfPq {
     import s.implicits._
     val (index, centroids) = IvfIndex.build(s, dir)
     val (codes, codebooks, offsets) = PqIndex.buildResidual(s, dir, index, centroids)
-    val qRaw = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
-      .select("embedding").collect()(0).getSeq[Float](0).map(_.toDouble).toArray
+    val qRaw = IvfIndex.queryVector(s, dir).map(_.toDouble)
     // probe ranking and cell restriction: IvfIndex.search's, so a
     // warm probe compiles nothing per query
     val probes = IvfIndex.rankProbes(centroids, qRaw, nprobe)
     // residual-capable ADC needs q̂ and each probed cell's encode
     // offset (unit centroid or 0⃗ — see PqIndex.buildResidual;
     // distances are ‖(q̂ − ô) − r‖²).
-    val qNorm = {
-      val n = math.sqrt(qRaw.map(x => x * x).sum)
-      qRaw.map(_ / n)
-    }
+    val qNorm = PqIndex.l2norm(qRaw)
     // one flat 128-double ADC row per probed cell — nprobe rows,
     // driver-built, broadcast against the pruned candidate stream
     val probeAdc = probes.toSeq
@@ -227,18 +214,7 @@ object IvfPq {
         PqIndex.adcScoreOver(col("adc"), col("code"), codebooks.length).as("adist"))
       .orderBy(col("adist"), col("vec_id"))
       .limit(shortlist)
-    // exact re-rank against the RAW query row — identical formulation
-    // (and rounded doubles) to vs_knn_cosine / vs_knn_pq.
-    val qdf = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
-      .select(col("embedding").as("qv"))
-    short.join(Tables.embeddings(s, dir), "vec_id")
-      .crossJoin(broadcast(qdf))
-      .select(col("vec_id"),
-        graft.functions.SafeRound.round(
-          graft.functions.FloatVecDistance.cosine(col("embedding"), col("qv")), 4)
-          .as("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+    PqIndex.rerankQuery(s, dir, short, k)
   }
 
   /** vs_knn_ivf_pq_batch: a TABLE of query vectors served against the
@@ -366,10 +342,7 @@ object IvfPq {
     * already-validated argument as vs_knn_pq's oracle. */
   val oracleSql: Map[String, String] = Map(
     "vs_knn_ivf_pq" ->
-      s"""WITH a AS (SELECT vec_id, centroid_id
-         |     FROM read_parquet('__IVFDIR__/assign.parquet/*.parquet')),
-         |c AS (SELECT cid, cvec
-         |     FROM read_parquet('__IVFDIR__/centroids.parquet/*.parquet')),
+      s"""WITH ${IvfIndex.artifactCtes("__IVFDIR__")},
          |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
          |cd AS (SELECT cid, ${VectorSearch.dCosine("cvec", "qv")} AS cdist FROM c, q),
          |probes AS (
@@ -415,10 +388,7 @@ object IvfPq {
     // residual ADC tables, pruned-candidate ADC, per-qid shortlist and
     // exact re-rank.
     "vs_knn_ivf_pq_batch" ->
-      s"""WITH a AS (SELECT vec_id, centroid_id
-         |     FROM read_parquet('__IVFDIR__/assign.parquet/*.parquet')),
-         |c AS (SELECT cid, cvec
-         |     FROM read_parquet('__IVFDIR__/centroids.parquet/*.parquet')),
+      s"""WITH ${IvfIndex.artifactCtes("__IVFDIR__")},
          |qs AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id % 50 = 0),
          |cd AS (SELECT qid, cid, ${VectorSearch.dCosine("cvec", "qv")} AS cdist FROM qs, c),
          |pr AS (

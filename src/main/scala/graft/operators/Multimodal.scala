@@ -370,10 +370,7 @@ object Multimodal {
     // per-anchor centroid ranking, nprobe cell restriction, the
     // wrong-source mask, exact re-rank, top-3.
     "mm_pair_mining_ivf" ->
-      s"""WITH a AS (SELECT vec_id, centroid_id
-         |     FROM read_parquet('__IVFDIR__/assign.parquet/*.parquet')),
-         |c AS (SELECT cid, cvec
-         |     FROM read_parquet('__IVFDIR__/centroids.parquet/*.parquet')),
+      s"""WITH ${IvfIndex.artifactCtes("__IVFDIR__")},
          |qs AS (
          |  SELECT e.vec_id AS qid, e.embedding AS qv, d.source AS q_source
          |  FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id),

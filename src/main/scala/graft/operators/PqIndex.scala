@@ -201,7 +201,10 @@ object PqIndex {
       (out, codebooks)
     }
 
-  /** L2-normalize one vector (the centroid side of the residual). */
+  /** L2-normalize one vector driver-side: the squares summed left to
+    * right from 0.0, then each component divided by the root. The
+    * centroid side of the residual and the query side of every ADC
+    * table. */
   private[graft] def l2norm(a: Array[Double]): Array[Double] = {
     var ss = 0.0; var i = 0
     while (i < a.length) { ss += a(i) * a(i); i += 1 }
@@ -445,29 +448,29 @@ object PqIndex {
         (shiftright(code, mi * 4).bitwiseAND(15) + lit(mi * NumCodewords) + 1).cast("int"))
     }.reduce(_ + _)
 
-  private def queryVec(s: SparkSession, dir: String): Array[Double] = {
-    val raw = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
-      .select("embedding").collect()(0).getSeq[Float](0).map(_.toDouble).toArray
-    val n = math.sqrt(raw.map(x => x * x).sum)
-    raw.map(_ / n)
-  }
-
   /** vs_knn_pq: ADC top-50 shortlist over the 4-byte codes, exact
     * cosine re-rank of the shortlist, top-10 — the standard
     * compressed-domain serving topology (scan codes, touch full
     * vectors only for the shortlist). */
   def knnPq(s: SparkSession, dir: String, k: Int = 10, shortlist: Int = 50): DataFrame = {
     val (codes, codebooks) = build(s, dir)
-    val q = queryVec(s, dir)
+    val q = l2norm(IvfIndex.queryVector(s, dir).map(_.toDouble))
     val cand = adcScores(codes.filter(col("vec_id") =!= 0), codebooks, q)
       .orderBy(col("adist"), col("vec_id"))
       .limit(shortlist)
-    // exact re-rank against the RAW query row — the identical
-    // formulation (and therefore identical rounded doubles) as
-    // vs_knn_cosine, which the oracle's dCosine fragment mirrors.
+    rerankQuery(s, dir, cand, k)
+  }
+
+  /** Exact re-rank of an ADC `shortlist` (vec_id) against the RAW
+    * vec_id = 0 row: top-`k` by rounded cosine — the identical
+    * formulation (and therefore identical rounded doubles) as
+    * vs_knn_cosine, which the oracle's dCosine fragment mirrors.
+    * Shared by vs_knn_pq and vs_knn_ivf_pq. */
+  private[graft] def rerankQuery(s: SparkSession, dir: String, shortlist: DataFrame,
+      k: Int): DataFrame = {
     val qdf = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
       .select(col("embedding").as("qv"))
-    cand.join(Tables.embeddings(s, dir), "vec_id")
+    shortlist.join(Tables.embeddings(s, dir), "vec_id")
       .crossJoin(broadcast(qdf))
       .select(col("vec_id"),
         graft.functions.SafeRound.round(

@@ -22,6 +22,10 @@ import graft.operators.IvfIndex
   * maintenance story: the base build is amortized, and ingest cost is
   * proportional to the new data alone. (Centroid drift is handled by
   * periodic refit + layout rewrite — the batch build path.)
+  *
+  * No format of its own: the dump, its oracle reader, the training
+  * sample and the probe are IvfIndex's (writeArtifacts, artifactCtes,
+  * hashStrideSample, probeQuery).
   */
 object IvfStream {
 
@@ -62,26 +66,17 @@ object IvfStream {
       // FAISS-style capped training sample, like the batch build
       // (256·nlist budget — VERDICT r10 punch 2: the one-off base fit
       // dominated the 30× streamed build). The base half is ITSELF a
-      // vec_id stride (even ids), so composing another vec_id stride
-      // would silently not reduce at all for even moduli — hash-stride
-      // is id-distribution-free; the count guard falls back to the full
-      // base half if it ever undersamples. Gate and ≤30× corpora sit
-      // under the budget (tm == 1): fit, artifacts, hashes bit-unchanged.
-      val train = {
-        val tm = IvfIndex.trainMod(n, nl)
-        if (tm <= 1L) base
-        else {
-          val h = base.filter(pmod(hash(col("vec_id")), lit(tm)) === 0)
-          if (h.count() >= nl) h else base
-        }
-      }
+      // vec_id stride (even ids), so it takes the hash-stride half of
+      // the sampling rule only. Gate and ≤30× corpora sit under the
+      // budget (tm == 1): fit, artifacts, hashes bit-unchanged.
+      val train = IvfIndex.hashStrideSample(base, IvfIndex.trainMod(n, nl), minRows = nl)
       (n, nl, IvfIndex.fitModel(train, nl))
     }
     val root = graft.functions.Scratch.fresh("ivfstream", dir)
     val indexPath = s"$root/index"
 
     // initial build: assign + write the base half, partitioned by centroid
-    IvfIndex.writeIndex(IvfIndex.assign(model, emb.filter(col("vec_id") % 2 === 0)), indexPath)
+    IvfIndex.writeIndex(IvfIndex.assign(model, base), indexPath)
 
     // streaming upsert of the odd half
     Streaming.drain(Streaming.source(s, dir, "embeddings").filter(col("vec_id") % 2 === 1)) {
@@ -104,33 +99,11 @@ object IvfStream {
     // oracle artifacts: what the streamed AT-REST layout actually
     // contains (read back), plus this build's centroid dictionary
     val centroids = model.clusterCenters.map(_.toArray)
-    // O(corpus) dump: shard by vec_id hash with an EXPLICIT partition
-    // count — an expression-only repartition lets AQE coalesce a small
-    // shuffle back to a single write task, exactly what this avoids.
-    // Count derived from the assignment table's own size (~16 B/row),
-    // not the core-count-floored session shuffle partitions — see
-    // GraftSession.artifactShards.
-    val shards = graft.GraftSession.artifactShards(baseN * 2L * 16L)
-    IvfIndex.readIndex(s, indexPath).select(col("vec_id"), col("centroid_id"))
-      .repartition(shards, col("vec_id"))
-      .write.mode("overwrite").parquet(s"$root/dump/assign.parquet")
-    locally {
-      import s.implicits._
-      centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cid", "cvec").coalesce(1).write.mode("overwrite")
-        .parquet(s"$root/dump/centroids.parquet")
-    }
+    IvfIndex.writeArtifacts(s, s"$root/dump", IvfIndex.readIndex(s, indexPath),
+      centroids, baseN * 2L)
 
-    probe(s, dir, indexPath, centroids)
-  }
-
-  /** Top-10 for the vec_id=0 query over an at-rest index layout. */
-  def probe(s: SparkSession, dir: String, indexPath: String,
-      centroids: Array[Array[Double]]): DataFrame = {
-    val query = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
-      .select("embedding").collect()(0).getSeq[Float](0).toArray
-    val index = IvfIndex.readIndex(s, indexPath).filter(col("vec_id") =!= 0)
-    IvfIndex.search(s, index, centroids, query, k = 10)
+    // top-10 for the vec_id=0 query over the at-rest layout
+    IvfIndex.probeQuery(s, dir, IvfIndex.readIndex(s, indexPath), centroids, 0)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -141,10 +114,7 @@ object IvfStream {
     * engine-specific). */
   val oracleSql: Map[String, String] = Map(
     "stream_index_upsert" ->
-      s"""WITH a AS (SELECT vec_id, centroid_id
-         |     FROM read_parquet('__IVFSDIR__/assign.parquet/*.parquet')),
-         |c AS (SELECT cid, cvec
-         |     FROM read_parquet('__IVFSDIR__/centroids.parquet/*.parquet')),
+      s"""WITH ${IvfIndex.artifactCtes("__IVFSDIR__")},
          |q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
          |cd AS (SELECT cid, ${graft.operators.VectorSearch.dCosine("cvec", "qv")} AS cdist FROM c, q),
          |probes AS (

@@ -189,20 +189,10 @@ object Streaming {
     readBack(agg.sparkSession, out, agg.schema)
   }
 
-  /** events.parquet as a bounded file stream with normalized ts. */
-  def eventStream(s: SparkSession, dir: String): DataFrame = {
-    val raw = source(s, dir, "events")
-    raw.schema("ts").dataType match {
-      case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        // watermarks require an instant TimestampType; naive micros are
-        // UTC wall time (sessions pin spark.sql.session.timeZone=UTC).
-        raw.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
-  }
+  /** events.parquet as a bounded file stream, with ts normalized as
+    * the batch [[graft.Tables.events]] normalizes it. */
+  def eventStream(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.eventTime(source(s, dir, "events"))
 
   /** Tumbling 1-hour windows by event type — streaming twin of
     * Analytics.qEventsHourly. Complete mode so the bounded drain

@@ -112,6 +112,15 @@ class ArtifactsSpec extends AnyFunSuite {
     assert((persisted & mine).isEmpty, "Artifacts.clear must release the census")
   }
 
+  test("a file: URI and the plain path of a corpus dir are one entry and one size") {
+    val spellings = Seq(sf, s"file:$sf", s"file://$sf")
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    spellings.foreach(d => graft.functions.Artifacts.get(spark, "dirSpellings", d)(builds.incrementAndGet()))
+    assert(builds.get == 1, s"${builds.get} builds for ${spellings.mkString(", ")}")
+    val sizes = spellings.map(GraftSession.dirBytes)
+    assert(sizes.head > 0 && sizes.distinct.size == 1, s"dirBytes per spelling: $sizes")
+  }
+
   test("a racing miss builds once: two threads released together share one IVF fit") {
     val dir = corpusCopy()
     val before = persisted

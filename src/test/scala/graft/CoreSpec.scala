@@ -306,6 +306,33 @@ class CoreSpec extends AnyFunSuite {
     }
   }
 
+  test("one IVF index format: its artifact names and centroid frame live in IvfIndex alone") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    assert(files.size > 50, s"source tree not found under ${root.toAbsolutePath}")
+    val owner = root.resolve("graft/operators/IvfIndex.scala")
+    val lines = files.map(f => f -> java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq)
+    def hits(keep: String => Boolean): Seq[String] = lines.flatMap { case (f, ls) =>
+      ls.indices.filter(i => keep(ls(i))).map(i => s"$f:${i + 1}")
+    }
+    def outside(keep: String => Boolean): Seq[String] =
+      hits(keep).filterNot(_.startsWith(s"$owner:"))
+    Seq("assign.parquet", "centroids.parquet").foreach { name =>
+      assert(hits(_.contains(name)).nonEmpty, s"$name not found in $owner")
+      assert(outside(_.contains(name)).isEmpty, s"$name outside IvfIndex: ${outside(_.contains(name))}")
+    }
+    // a "cvec" column outside the oracle SQL text (whose lines start
+    // with the stripMargin bar) is a centroid frame built in Scala
+    val frame = (l: String) => l.contains("\"cvec\"") && !l.trim.startsWith("|")
+    assert(hits(frame).nonEmpty, s"no centroid frame in $owner")
+    assert(outside(frame).isEmpty, s"centroid frames outside IvfIndex: ${outside(frame)}")
+  }
+
   test("bench previous-round parser reads the dump format") {
     // the correlated-noise escalation depends on this parse: a format
     // drift that silently yields an empty map would disable the

@@ -86,6 +86,22 @@ class StreamingSpec extends AnyFunSuite {
       "a corrupted streamed-layout assignment row must change the probed answer")
   }
 
+  test("the streamed dump and the batch dump are one format") {
+    IvfIndex.build(spark, sf)
+    IvfStream.indexUpsert(spark, sf).collect()
+    val streamed = IvfStream.scratchRoot(sf) + "/dump"
+    Seq("assign.parquet", "centroids.parquet").foreach { t =>
+      def columns(dump: String) =
+        spark.read.parquet(s"$dump/$t").schema.fields.map(f => (f.name, f.dataType)).toSeq
+      assert(columns(streamed) == columns(IvfIndex.dumpDir(sf)), t)
+    }
+    val assigned = spark.read.parquet(s"$streamed/assign.parquet").select("vec_id")
+    val ids = Tables.embeddings(spark, sf).select("vec_id")
+    assert(assigned.count() == ids.count(), "one streamed assignment row per vec_id")
+    assert(assigned.distinct().count() == ids.count(), "no vec_id assigned twice")
+    assert(ids.except(assigned).isEmpty, "every corpus vec_id assigned")
+  }
+
   test("streaming minhash candidates equal the batch band-candidate set") {
     val streamed = graft.streaming.DedupStream.candidates(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
