@@ -52,7 +52,8 @@ object GraftExtensions {
     } :+ ("url_canonicalize" ->
       arity("url_canonicalize", 1)(args => graft.functions.UrlCanonicalize(args(0))))
 
-  /** Idempotent programmatic registration on a live session. */
+  /** Idempotent programmatic registration on a live session: a name
+    * already bound to its builder here is left as it is. */
   def register(spark: SparkSession): Unit = {
     graft.plans.KnnJoin.ensureStrategy(spark)
     builders.foreach { case (name, b) =>

@@ -21,9 +21,9 @@ object Tables {
     *
     * Every `spark.read.parquet(path)` pays a driver-side file listing
     * plus a parquet footer read for schema inference — measured at
-    * ~60 ms per call on this corpus (DecompProbe), and the per-query
-    * bench harness constructs every table it touches afresh, so the
-    * suite paid it thousands of times per run. A real deployment
+    * ~60 ms per call on this corpus (OPTIMIZATION_r17.md §6), and the
+    * per-query bench harness constructs every table it touches afresh,
+    * so the suite paid it thousands of times per run. A real deployment
     * reads these tables through a catalog whose manifest carries the
     * schema and file list (guide §6 — the practical argument for
     * table formats at scale); this cache is the local stand-in:

@@ -42,8 +42,8 @@ object BinaryVector {
   def knnHamming(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), binarize(col("embedding")).as("bv"))
-    val q = emb.filter(col("vec_id") === 0).select(col("bv").as("qbv"))
-    emb.filter(col("vec_id") =!= 0)
+    val q = VectorSearch.queryRow(emb).select(col("bv").as("qbv"))
+    VectorSearch.withoutQuery(emb)
       .crossJoin(broadcast(q))
       .select(col("vec_id"),
         popSum(zip_with(col("bv"), col("qbv"), (x, y) => x.bitwiseXOR(y))).as("hdist"),

@@ -103,12 +103,10 @@ object EmbeddingLsh {
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val dim = emb.select(size(col("embedding"))).first().getInt(0)
     val pl = planes(dim)
-    val query = emb.filter(col("vec_id") === 0)
-      .select("embedding").first().getSeq[Float](0).toArray
+    val query = VectorSearch.queryVector(s, dir)
     val qsk = sketch(query, pl)
-    val sketches = Tables.spread(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-      .filter(col("vec_id") =!= 0).as[(Long, Array[Float])]
+    val sketches = VectorSearch.withoutQuery(Tables.spread(s, dir, "embeddings")
+      .select(col("vec_id"), col("embedding"))).as[(Long, Array[Float])]
       .mapPartitions(_.map { case (id, v) => (id, v, sketch(v, pl)) })
       .toDF("vec_id", "embedding", "sk")
     val sharesBand = (0 until NumBands)
@@ -142,7 +140,7 @@ object EmbeddingLsh {
       df.select(col("*"), explode(sequence(lit(0), lit(NumBands - 1))).as("band"))
         .withColumn("bkey", expr(s"shiftrightunsigned($skc, band * $BandBits)") % (1 << BandBits))
     val qside = banded(
-      sketches.filter(col("vec_id") % 50 === 0)
+      VectorSearch.batchRows(sketches)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("sk").as("qsk")),
       "qid", "qsk")
     val iside = banded(sketches, "vec_id", "sk")
@@ -172,17 +170,9 @@ object EmbeddingLsh {
     * query SAMPLE only); the comparison is an answer-sized equi-join. */
   def recallReport(s: SparkSession, dir: String): DataFrame = {
     val ann = annServe(s, dir).select(col("qid"), col("vec_id"))
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val qs = emb.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val exact = Tables.spread(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding")).crossJoin(broadcast(qs))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        round(FloatVecDistance.cosine(col("embedding"), col("qv")), 4).as("dist"))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("vec_id"), 5).as("top"))
-      .select(col("qid"), explode(col("top.id")).as("vec_id"))
+    val exact = VectorSearch.exactTruth(
+      Tables.spread(s, dir, "embeddings").select(col("vec_id"), col("embedding")),
+      VectorSearch.batchQueries(s, dir), 5)
     val hits = exact.join(ann, Seq("qid", "vec_id"), "left_semi")
       .groupBy("qid").agg(count(lit(1)).as("n_hit"))
     exact.groupBy(col("qid")).agg(count(lit(1)).as("n_exact"))

@@ -199,10 +199,9 @@ object HybridSearch {
     val nCand = 20
     val k = 5
     val emb = Tables.embeddings(s, dir)
-    val query = emb.filter(col("vec_id") === 0)
-      .select("embedding").first().getSeq[Float](0).toArray
+    val query = VectorSearch.queryVector(s, dir)
     val qlit = array(query.map(f => lit(f)).toIndexedSeq: _*).cast("array<float>")
-    val cands = emb.filter(col("vec_id") =!= 0)
+    val cands = VectorSearch.withoutQuery(emb)
       .select(col("vec_id"),
         round(lit(1.0) - graft.functions.FloatVecDistance.cosine(col("embedding"), qlit), 4).as("qsim"),
         col("embedding"))

@@ -37,8 +37,8 @@ import graft.functions.{FloatVecDistance, VecMath}
   * The one writer ([[writeArtifacts]]) and reader ([[artifactCtes]])
   * of the oracle-checked format, for batch and streamed
   * ([[graft.streaming.IvfStream]]) dumps alike, and of the probe
-  * inputs every IVF and IVF-PQ caller shares: [[queryVector]],
-  * [[centroidFrame]], [[centroidRanks]].
+  * inputs every IVF and IVF-PQ caller shares: [[centroidFrame]],
+  * [[centroidRanks]].
   */
 object IvfIndex {
   /** Floor for the adaptive geometry. The floor binds only for corpora
@@ -354,17 +354,12 @@ object IvfIndex {
       |c AS (SELECT cid, cvec
       |     FROM read_parquet('$dirToken/centroids.parquet/*.parquet'))""".stripMargin
 
-  /** The vec_id = 0 row's embedding: the query of every single-probe
-    * IVF and PQ query. */
-  private[graft] def queryVector(s: SparkSession, dir: String): Array[Float] =
-    Tables.embeddings(s, dir).filter(col("vec_id") === 0)
-      .select("embedding").collect()(0).getSeq[Float](0).toArray
-
-  /** Top-10 for [[queryVector]] over `index` minus its own row, at
-    * `nprobe` (0 = adaptive). */
+  /** Top-10 for [[VectorSearch.queryVector]] over `index` minus its
+    * own row, at `nprobe` (0 = adaptive). */
   private[graft] def probeQuery(s: SparkSession, dir: String, index: DataFrame,
       centroids: Array[Array[Double]], nprobe: Int): DataFrame =
-    search(s, index.filter(col("vec_id") =!= 0), centroids, queryVector(s, dir), k = 10, nprobe)
+    search(s, VectorSearch.withoutQuery(index), centroids,
+      VectorSearch.queryVector(s, dir), k = 10, nprobe)
 
   /** (qid, centroid_id, crank) for a (qid, qv) frame: every cell ranked
     * per query by (cosine distance, cell id), windowed per query. */
@@ -613,10 +608,7 @@ object IvfIndex {
     * explicit nprobe. */
   def knnIvfBatch(s: SparkSession, dir: String): DataFrame = {
     val (index, centroids) = build(s, dir)
-    val queriesDf = Tables.embeddings(s, dir)
-      .filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    searchBatch(s, index, centroids, queriesDf, k = 5)
+    searchBatch(s, index, centroids, VectorSearch.batchQueries(s, dir), k = 5)
   }
 
   /** dedup_embedding_ivf: embedding near-dup pair detection blocked by

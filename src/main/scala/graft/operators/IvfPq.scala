@@ -110,16 +110,7 @@ object IvfPq {
       // (dist, id) ordering — otherwise a rounding-induced tie could
       // demote a true neighbor only on one side and the "GUARANTEED
       // recovered" lower bound would not be strict (ADVICE r11).
-      val truthIds = index.crossJoin(broadcast(sample))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"),
-          graft.functions.SafeRound.round(
-            graft.functions.FloatVecDistance.cosine(col("embedding"), col("qv")), 4)
-            .as("dist"),
-          col("vec_id"))
-        .groupBy(col("qid"))
-        .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("vec_id"), k).as("top"))
-        .select(col("qid"), explode(col("top.id")).as("vec_id"))
+      val truthIds = VectorSearch.exactTruth(index, sample, k)
       // per-query centroid ranking (sample × nlist, windowed per query)
       val cranks = IvfIndex.centroidRanks(s, sample, centroids)
       // full-probe ADC score of every candidate for every sample
@@ -192,7 +183,7 @@ object IvfPq {
     import s.implicits._
     val (index, centroids) = IvfIndex.build(s, dir)
     val (codes, codebooks, offsets) = PqIndex.buildResidual(s, dir, index, centroids)
-    val qRaw = IvfIndex.queryVector(s, dir).map(_.toDouble)
+    val qRaw = VectorSearch.queryVector(s, dir).map(_.toDouble)
     // probe ranking and cell restriction: IvfIndex.search's, so a
     // warm probe compiles nothing per query
     val probes = IvfIndex.rankProbes(centroids, qRaw, nprobe)
@@ -207,7 +198,7 @@ object IvfPq {
       .toDF("centroid_id", "adc")
     val cand = IvfIndex.restrictToCells(index, probes)
       .select(col("vec_id"), col("centroid_id"))
-    val short = codes.filter(col("vec_id") =!= 0)
+    val short = VectorSearch.withoutQuery(codes)
       .join(cand, Seq("vec_id"))
       .join(broadcast(probeAdc), "centroid_id")
       .select(col("vec_id"),
@@ -269,9 +260,7 @@ object IvfPq {
           codebooks, offsets, t, k, shortlist, forceMode)
       case None => (nprobe, shortlist)
     }
-    val queriesDf = Tables.embeddings(s, dir)
-      .filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    val queriesDf = VectorSearch.batchQueries(s, dir)
     // the (qid, probed-centroid) pair table drives BOTH the candidate
     // join and the per-(query, cell) residual ADC tables
     val pairs = IvfIndex.probePairs(s, queriesDf, centroids, np)
@@ -315,9 +304,7 @@ object IvfPq {
     short.join(Tables.embeddings(s, dir), "vec_id")
       .join(queriesDf.select(col("qid"), col("qv")), "qid")
       .select(col("qid"), col("vec_id"),
-        graft.functions.SafeRound.round(
-          graft.functions.FloatVecDistance.cosine(col("embedding"), col("qv")), 4)
-          .as("dist"))
+        graft.functions.SafeRound.round(VectorSearch.queryCosine, 4).as("dist"))
       .transform(graft.functions.TopKAgg.perKey(col("qid"), col("dist"), col("vec_id"), k))
       .withColumnRenamed("id", "vec_id")
       .orderBy("qid", "rnk")

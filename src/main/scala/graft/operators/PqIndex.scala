@@ -6,7 +6,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.FloatVecDistance
 
 /** Product quantization (PQ) — the memory-compression scale path for
   * ANN serving (Jégou et al., "Product Quantization for Nearest
@@ -454,30 +453,21 @@ object PqIndex {
     * vectors only for the shortlist). */
   def knnPq(s: SparkSession, dir: String, k: Int = 10, shortlist: Int = 50): DataFrame = {
     val (codes, codebooks) = build(s, dir)
-    val q = l2norm(IvfIndex.queryVector(s, dir).map(_.toDouble))
-    val cand = adcScores(codes.filter(col("vec_id") =!= 0), codebooks, q)
+    val q = l2norm(VectorSearch.queryVector(s, dir).map(_.toDouble))
+    val cand = adcScores(VectorSearch.withoutQuery(codes), codebooks, q)
       .orderBy(col("adist"), col("vec_id"))
       .limit(shortlist)
     rerankQuery(s, dir, cand, k)
   }
 
   /** Exact re-rank of an ADC `shortlist` (vec_id) against the RAW
-    * vec_id = 0 row: top-`k` by rounded cosine — the identical
-    * formulation (and therefore identical rounded doubles) as
-    * vs_knn_cosine, which the oracle's dCosine fragment mirrors.
-    * Shared by vs_knn_pq and vs_knn_ivf_pq. */
+    * query row: vs_knn_cosine's scorer ([[VectorSearch.exactTopK]]),
+    * which the oracle's dCosine fragment mirrors. Shared by vs_knn_pq
+    * and vs_knn_ivf_pq. */
   private[graft] def rerankQuery(s: SparkSession, dir: String, shortlist: DataFrame,
-      k: Int): DataFrame = {
-    val qdf = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
-      .select(col("embedding").as("qv"))
-    shortlist.join(Tables.embeddings(s, dir), "vec_id")
-      .crossJoin(broadcast(qdf))
-      .select(col("vec_id"),
-        graft.functions.SafeRound.round(
-          FloatVecDistance.cosine(col("embedding"), col("qv")), 4).as("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
-  }
+      k: Int): DataFrame =
+    VectorSearch.exactTopK(shortlist.join(Tables.embeddings(s, dir), "vec_id"),
+      VectorSearch.queryFrame(s, dir), VectorSearch.queryCosine, k)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "vs_knn_pq" -> ((s, dir) => knnPq(s, dir)))

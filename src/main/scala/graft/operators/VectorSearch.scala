@@ -35,18 +35,66 @@ object VectorSearch {
   private def corpus(s: SparkSession, dir: String): DataFrame =
     Tables.spread(s, dir, "embeddings")
 
-  /** Top-k rows by a distance column vs the query vector vec_id=0. */
+  // ---- the query set and the exact scorer every index shares --------
+
+  /** The vec_id of the single query every single-probe search serves. */
+  val QueryId = 0L
+
+  /** `df`'s query row (vec_id [[QueryId]]). */
+  private[graft] def queryRow(df: DataFrame): DataFrame = df.filter(col("vec_id") === QueryId)
+
+  /** `df` without the query row: the candidates a single query is scored against. */
+  private[graft] def withoutQuery(df: DataFrame): DataFrame = df.filter(col("vec_id") =!= QueryId)
+
+  /** The one-row (qv) query frame. */
+  private[graft] def queryFrame(s: SparkSession, dir: String): DataFrame =
+    queryRow(Tables.embeddings(s, dir)).select(col("embedding").as("qv"))
+
+  /** The query's embedding on the driver: one collect. */
+  private[graft] def queryVector(s: SparkSession, dir: String): Array[Float] =
+    queryFrame(s, dir).collect()(0).getSeq[Float](0).toArray
+
+  /** `df`'s batch query rows: every [[IvfIndex.DefaultSampleMod]]th vec_id. */
+  private[graft] def batchRows(df: DataFrame): DataFrame =
+    df.filter(col("vec_id") % IvfIndex.DefaultSampleMod === 0)
+
+  /** The (qid, qv) batch query set. */
+  private[graft] def batchQueries(s: SparkSession, dir: String): DataFrame =
+    batchRows(Tables.embeddings(s, dir)).select(col("vec_id").as("qid"), col("embedding").as("qv"))
+
+  /** Cosine distance of a candidate's embedding to the query's qv. */
+  private[graft] def queryCosine: Column = FloatVecDistance.cosine(col("embedding"), col("qv"))
+
+  /** The single-query exact scorer: every `cands` row against the
+    * broadcast one-row `query`, `dist` rounded to 4 dp as column
+    * `as`, ordered by (distance, vec_id). */
+  private def ranked(cands: DataFrame, query: DataFrame, dist: Column,
+      as: String = "dist"): DataFrame =
+    cands.crossJoin(broadcast(query))
+      .select(col("vec_id"), round(dist, 4).as(as))
+      .orderBy(col(as), col("vec_id"))
+
+  /** [[ranked]]'s first `k` rows: a TakeOrderedAndProject. */
+  private[graft] def exactTopK(cands: DataFrame, query: DataFrame, dist: Column, k: Int,
+      as: String = "dist"): DataFrame =
+    ranked(cands, query, dist, as).limit(k)
+
+  /** The sampled exact truth: per (qid, qv) query of `queries`, the
+    * ids of its `k` nearest `corpus` rows other than itself by
+    * (rounded cosine, vec_id), as (qid, vec_id). */
+  private[graft] def exactTruth(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    corpus.crossJoin(broadcast(queries))
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id"), round(queryCosine, 4).as("dist"))
+      .groupBy(col("qid"))
+      .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("vec_id"), k).as("top"))
+      .select(col("qid"), explode(col("top.id")).as("vec_id"))
+
+  /** Top-k rows by a distance column vs the query vector. */
   private def knn(s: SparkSession, dir: String,
-      dist: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column,
-      k: Int = 10): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    corpus(s, dir).filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), round(dist(col("embedding"), col("qv")), 4).as("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
-  }
+      dist: (Column, Column) => Column, k: Int = 10): DataFrame =
+    exactTopK(withoutQuery(corpus(s, dir)), queryFrame(s, dir),
+      dist(col("embedding"), col("qv")), k)
 
   def knnCosine(s: SparkSession, dir: String): DataFrame = knn(s, dir, FloatVecDistance.cosine)
   /** Exact cosine top-k at caller-chosen depth (spec ground truth). */
@@ -58,15 +106,9 @@ object VectorSearch {
 
   /** All vectors within cosine distance ≤ radius of the query — the
     * similarity-threshold form of vector search. */
-  def rangeSearch(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    corpus(s, dir).filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), round(FloatVecDistance.cosine(col("embedding"), col("qv")), 4).as("dist"))
+  def rangeSearch(s: SparkSession, dir: String): DataFrame =
+    ranked(withoutQuery(corpus(s, dir)), queryFrame(s, dir), queryCosine)
       .filter(col("dist") <= 0.8)
-      .orderBy(col("dist"), col("vec_id"))
-  }
 
   /** Batch similarity search: top-5 neighbors for EVERY vector (bulk
     * form of online knn serving — the part of the reference workload
@@ -96,17 +138,10 @@ object VectorSearch {
     * the predicate and pruned columns push down to the scans and the
     * dim join broadcasts. */
   def knnFiltered(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
     val docs = Tables.documents(s, dir)
       .filter(col("lang") === "fr").select(col("doc_id"))
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    corpus(s, dir).filter(col("vec_id") =!= 0)
-      .join(broadcast(docs), col("vec_id") === col("doc_id"))
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(FloatVecDistance.cosine(col("embedding"), col("qv")), 4).as("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(10)
+    exactTopK(withoutQuery(corpus(s, dir)).join(broadcast(docs), col("vec_id") === col("doc_id")),
+      queryFrame(s, dir), queryCosine, 10)
   }
 
   /** POST-filter counterpart of knnFiltered: over-fetch the global
@@ -116,16 +151,9 @@ object VectorSearch {
     * by design. Both engines apply the identical over-fetch rule, so
     * the (approximate) result is still hash-checked. */
   def knnPostFiltered(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
     val docs = Tables.documents(s, dir)
       .filter(col("lang") === "fr").select(col("doc_id"))
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    corpus(s, dir).filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(FloatVecDistance.cosine(col("embedding"), col("qv")), 4).as("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(50)
+    knn(s, dir, FloatVecDistance.cosine, 50)
       .join(broadcast(docs), col("vec_id") === col("doc_id"))
       .select(col("vec_id"), col("dist"))
       .orderBy(col("dist"), col("vec_id"))
@@ -182,17 +210,12 @@ object VectorSearch {
     val base = emb.select(col("vec_id"), col("embedding"),
       scaleOf(col("embedding")).as("sc"))
       .select(col("vec_id"), col("sc"), quant(col("embedding"), col("sc")).as("q"))
-    val qv = base.filter(col("vec_id") === 0)
-      .select(col("q").as("qq"), col("sc").as("qsc"))
+    val qv = queryRow(base).select(col("q").as("qq"), col("sc").as("qsc"))
     val intDot = aggregate(zip_with(col("q"), col("qq"), (x, y) => x * y), lit(0L), (a, v) => a + v)
     val qnorm = sqrt(aggregate(transform(col("q"), x => x * x), lit(0L), (a, v) => a + v).cast("double"))
     val qqnorm = sqrt(aggregate(transform(col("qq"), x => x * x), lit(0L), (a, v) => a + v).cast("double"))
-    base.filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(qv))
-      .select(col("vec_id"),
-        round(lit(1.0) - intDot.cast("double") / (qnorm * qqnorm), 4).as("qdist"))
-      .orderBy(col("qdist"), col("vec_id"))
-      .limit(10)
+    exactTopK(withoutQuery(base), qv,
+      lit(1.0) - intDot.cast("double") / (qnorm * qqnorm), 10, as = "qdist")
   }
 
   /** Same batch-knn result through the custom KnnJoin operator
@@ -238,16 +261,9 @@ object VectorSearch {
     * starve it and need the pre-filter join. One top-50 pass (bounded
     * TakeOrderedAndProject) + one broadcast dim join + two tiny aggs. */
   def filterSelectivity(s: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(s, dir)
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("lang"))
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    val top50 = corpus(s, dir).filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(FloatVecDistance.cosine(col("embedding"), col("qv")), 4).as("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(50)
-    val pop = emb.filter(col("vec_id") =!= 0)
+    val top50 = knn(s, dir, FloatVecDistance.cosine, 50)
+    val pop = withoutQuery(Tables.embeddings(s, dir))
       .join(broadcast(docs), col("vec_id") === col("doc_id"))
       .groupBy(col("lang")).agg(count(lit(1)).as("n_vecs"))
     val hits = top50.join(broadcast(docs), col("vec_id") === col("doc_id"))

@@ -35,10 +35,13 @@ object GraftColumnBridge {
       execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false)), rdd)
   }
 
-  /** Register a scalar function on a live session (the
+  /** Register a scalar function on a live session unless `builder`
+    * is already the one registered under `name` (the
     * non-.withExtensions path; sessionState is private[sql]). */
   def registerFunction(spark: SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "scala_udf")
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.lookupFunctionBuilder(catalyst.FunctionIdentifier(name)).contains(builder))
+      registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+  }
 }

@@ -275,22 +275,30 @@ class CoreSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("environment reads in library code:\n", "\n", ""))
   }
 
-  test("one bounded drain: the stream writer and its checkpoint appear once, inside it") {
+  private val mainRoot = java.nio.file.Paths.get("src/main/scala")
+
+  /** Every main-tree Scala file with its lines, for the source scans. */
+  private lazy val mainSources: List[(java.nio.file.Path, IndexedSeq[String])] = {
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val files = {
-      val walk = java.nio.file.Files.walk(root)
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    val walk = java.nio.file.Files.walk(mainRoot)
+    val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
       finally walk.close()
-    }
-    assert(files.size > 50, s"source tree not found under ${root.toAbsolutePath}")
-    val lines = files.map(f => f -> java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq)
-    def hits(needle: String): Seq[(java.nio.file.Path, Int)] = lines.flatMap { case (f, ls) =>
+    assert(files.size > 50, s"source tree not found under ${mainRoot.toAbsolutePath}")
+    files.map(f => f -> java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq)
+  }
+
+  /** "file:line" of every main-tree line `keep` accepts. */
+  private def sourceHits(keep: String => Boolean): Seq[String] = mainSources.flatMap { case (f, ls) =>
+    ls.indices.filter(i => keep(ls(i))).map(i => s"$f:${i + 1}")
+  }
+
+  test("one bounded drain: the stream writer and its checkpoint appear once, inside it") {
+    def hits(needle: String): Seq[(java.nio.file.Path, Int)] = mainSources.flatMap { case (f, ls) =>
       ls.indices.filter(i => ls(i).contains(needle)).map(f -> _)
     }
     // the helper's body: from its def to the next member def
-    val helper = root.resolve("graft/streaming/Streaming.scala")
-    val ls = lines.toMap.apply(helper)
+    val helper = mainRoot.resolve("graft/streaming/Streaming.scala")
+    val ls = mainSources.toMap.apply(helper)
     val from = ls.indexWhere(_.contains("def drain("))
     val to = ls.indexWhere(l => l.trim.startsWith("/**") || l.contains(" def "), from + 1)
     assert(from >= 0 && to > from, "Streaming.drain not found")
@@ -307,30 +315,29 @@ class CoreSpec extends AnyFunSuite {
   }
 
   test("one IVF index format: its artifact names and centroid frame live in IvfIndex alone") {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val files = {
-      val walk = java.nio.file.Files.walk(root)
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }
-    assert(files.size > 50, s"source tree not found under ${root.toAbsolutePath}")
-    val owner = root.resolve("graft/operators/IvfIndex.scala")
-    val lines = files.map(f => f -> java.nio.file.Files.readAllLines(f).asScala.toIndexedSeq)
-    def hits(keep: String => Boolean): Seq[String] = lines.flatMap { case (f, ls) =>
-      ls.indices.filter(i => keep(ls(i))).map(i => s"$f:${i + 1}")
-    }
+    val owner = mainRoot.resolve("graft/operators/IvfIndex.scala")
     def outside(keep: String => Boolean): Seq[String] =
-      hits(keep).filterNot(_.startsWith(s"$owner:"))
+      sourceHits(keep).filterNot(_.startsWith(s"$owner:"))
     Seq("assign.parquet", "centroids.parquet").foreach { name =>
-      assert(hits(_.contains(name)).nonEmpty, s"$name not found in $owner")
+      assert(sourceHits(_.contains(name)).nonEmpty, s"$name not found in $owner")
       assert(outside(_.contains(name)).isEmpty, s"$name outside IvfIndex: ${outside(_.contains(name))}")
     }
     // a "cvec" column outside the oracle SQL text (whose lines start
     // with the stripMargin bar) is a centroid frame built in Scala
     val frame = (l: String) => l.contains("\"cvec\"") && !l.trim.startsWith("|")
-    assert(hits(frame).nonEmpty, s"no centroid frame in $owner")
+    assert(sourceHits(frame).nonEmpty, s"no centroid frame in $owner")
     assert(outside(frame).isEmpty, s"centroid frames outside IvfIndex: ${outside(frame)}")
+  }
+
+  test("one query set: the vec_id=0 query and the every-50th batch live in VectorSearch alone") {
+    // Scala column forms only: the oracle SQL spells `vec_id = 0` and
+    // `% 50 = 0`, which none of these needles match
+    val needles = Seq("col(\"vec_id\") === 0", "col(\"vec_id\") =!= 0", "% 50 ===")
+    val owner = mainRoot.resolve("graft/operators/VectorSearch.scala")
+    val outside = sourceHits(l => needles.exists(l.contains)).filterNot(_.startsWith(s"$owner:"))
+    assert(outside.isEmpty, s"query-set rules outside VectorSearch: $outside")
+    assert(sourceHits(_.contains("val QueryId")).exists(_.startsWith(s"$owner:")),
+      s"no QueryId in $owner")
   }
 
   test("bench previous-round parser reads the dump format") {

@@ -47,10 +47,16 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("knn top-k plans as TakeOrderedAndProject, not a global sort") {
-    val p = plan(VectorSearch.knnCosine(spark, sf))
-    assert(p.contains("TakeOrderedAndProject"), p)
-    // the query side is a broadcast, the data side must not shuffle
-    assert(!p.contains("Exchange hashpartitioning"), p)
+    // every single-probe query scored by VectorSearch.exactTopK
+    val probes: Seq[(org.apache.spark.sql.SparkSession, String) => DataFrame] = Seq(
+      VectorSearch.knnCosine, VectorSearch.knnL2, VectorSearch.knnDot,
+      VectorSearch.knnManhattan, VectorSearch.knnPostFiltered, PqIndex.knnPq(_, _))
+    probes.foreach { q =>
+      val p = plan(q(spark, sf))
+      assert(p.contains("TakeOrderedAndProject"), p)
+      // the query side is a broadcast, the data side must not shuffle
+      assert(!p.contains("Exchange hashpartitioning"), p)
+    }
   }
 
   test("dedup band joins are equi-joins (shuffle or broadcast), never cartesian") {

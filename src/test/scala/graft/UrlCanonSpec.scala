@@ -105,6 +105,30 @@ class UrlCanonSpec extends AnyFunSuite {
     assert(n.head().isNullAt(0))
   }
 
+  test("register is idempotent: a second call replaces no registered function") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val replaced = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val spy = new AbstractAppender("graft-register-spy", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val msg = e.getMessage.getFormattedMessage
+        if (msg.contains("replaced a previously registered function")) replaced.add(msg)
+      }
+    }
+    spy.start()
+    GraftExtensions.register(spark)
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    root.addAppender(spy)
+    try GraftExtensions.register(spark)
+    finally { root.removeAppender(spy); spy.stop() }
+    assert(replaced.isEmpty, s"second register re-registered: $replaced")
+    assert(spark.sql("SELECT vec_l2_distance(CAST(array(0, 3) AS ARRAY<FLOAT>), " +
+        "CAST(array(4, 0) AS ARRAY<FLOAT>)) AS d")
+      .head().getDouble(0) == 5.0)
+  }
+
   test("warcToText composes with url canonicalization (the real crawl front door)") {
     import spark.implicits._
     // two fetches of the same page under messy URL variants, via the
