@@ -6,6 +6,15 @@ package graft.functions
 object VecMath {
   val metrics: Set[String] = Set("cosine", "l2", "dot", "manhattan")
 
+  /** `a` L2-normalized: the squares summed left to right from 0.0,
+    * then each component divided by the root. */
+  def l2norm(a: Array[Double]): Array[Double] = {
+    var ss = 0.0; var i = 0
+    while (i < a.length) { ss += a(i) * a(i); i += 1 }
+    val n = math.sqrt(ss)
+    a.map(_ / n)
+  }
+
   /** Double-array variant (mixed float/double sides widen first).
     * Same loops, same left-to-right double accumulation — a float
     * widened to double is exact, so dist == distD on the same data. */

@@ -100,10 +100,9 @@ object EmbeddingLsh {
     * band-bucketed layout the filter prunes partitions like IVF. */
   def annSearch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val dim = emb.select(size(col("embedding"))).first().getInt(0)
-    val pl = planes(dim)
+    // the query's length is the corpus dimension: no separate job sizes the planes
     val query = VectorSearch.queryVector(s, dir)
+    val pl = planes(query.length)
     val qsk = sketch(query, pl)
     val sketches = VectorSearch.withoutQuery(Tables.spread(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))).as[(Long, Array[Float])]

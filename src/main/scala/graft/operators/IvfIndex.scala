@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.ml.clustering.KMeans
+import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -19,10 +19,11 @@ import graft.functions.{FloatVecDistance, VecMath}
   * the nearest partitions; target-accuracy tunes how many.
   *
   * On Spark the index is the assigned rows, held once built:
-  *  - build: k-means|| (MLlib) fits centroids — a few passes over the
-  *    data, all distributed; assignment is one narrow map with the
-  *    broadcast centroid set, run ONCE per build: the assigned
-  *    (vec_id, embedding, centroid_id) rows are persisted
+  *  - build: k-means fits centroids on a capped training sample
+  *    ([[TrainPointsPerCentroid]]), collected in one job and fit on
+  *    the driver ([[graft.functions.KMeansFit]]); assignment is one
+  *    narrow map with the broadcast centroid set, run ONCE per build:
+  *    the assigned (vec_id, embedding, centroid_id) rows are persisted
   *    (memory, spilling to disk) and every consumer reads them.
   *  - probe: rank centroids against the query driver-side (k floats,
   *    tiny), take nprobe, and filter the resident rows to those cells
@@ -130,7 +131,7 @@ object IvfIndex {
     s"greatest($NumProbe, CAST(round(sqrt((SELECT count(*) FROM c))) AS INT))"
 
   /** Default calibration-sample stride (every Nth vec_id). ONE shared
-    * constant for the engine ([[calibrationSample]]'s default) and
+    * constant for the engine ([[VectorSearch.batchRows]]'s default) and
     * the oracle ([[sqlCalibMod]]) — a literal 50 on either side would
     * let the twins drift apart silently (ADVICE r8). */
   val DefaultSampleMod = 50
@@ -172,17 +173,15 @@ object IvfIndex {
     math.max(sampleMod.toLong,
       math.ceil(n.toDouble / CalibrationSampleCap).toLong)
 
-  /** The calibration query sample: a deterministic stride over vec_id
-    * at the absolutely-capped modulus. Split out so specs can pin the
-    * cap without running a full calibration. */
+  /** The calibration query sample: the batch query set
+    * ([[VectorSearch.batchQueries]]) at the absolutely-capped modulus.
+    * Split out so specs can pin the cap without running a full
+    * calibration. The corpus count is cached — calibration always
+    * follows a build for the same (session, dir) — so this launches no
+    * extra count job. */
   private[graft] def calibrationSample(s: SparkSession, dir: String,
-      sampleMod: Int = DefaultSampleMod): DataFrame = {
-    // cached corpus count — calibration always follows a build for
-    // the same (session, dir), so this launches no extra count job
-    val effMod = calibrationMod(corpusCount(s, dir), sampleMod)
-    Tables.embeddings(s, dir).filter(col("vec_id") % effMod === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-  }
+      sampleMod: Int = DefaultSampleMod): DataFrame =
+    VectorSearch.batchQueries(s, dir, calibrationMod(corpusCount(s, dir), sampleMod))
 
   /** At-rest location of the persisted index artifacts (assignments +
     * centroids) for a corpus dir; the oracle SQL binds __IVFDIR__ to
@@ -192,20 +191,23 @@ object IvfIndex {
     * independently by the DuckDB oracle. */
   def dumpDir(dir: String): String = graft.functions.Scratch.pathOf("ivf", dir)
 
-  /** Fit centroids on `emb` (k-means||, cosine). The model is the
+  /** Fit `k` unit-norm centroids on all of `emb` (cosine k-means,
+    * seeded [[Seed]]): one count, then [[fitSample]]. The model is the
     * reusable "index definition": batch builds and streaming upserts
     * both assign with it. */
-  def fitModel(emb: DataFrame, k: Int = NumCentroids): org.apache.spark.ml.clustering.KMeansModel =
-    new KMeans()
-      .setK(k).setSeed(Seed).setMaxIter(20)
-      .setDistanceMeasure("cosine")
-      .setFeaturesCol("features").setPredictionCol("centroid_id")
-      .fit(emb.withColumn("features", array_to_vector(col("embedding"))))
+  def fitModel(emb: DataFrame, k: Int = NumCentroids): KMeansModel =
+    fitSample(emb, emb.count(), k)
+
+  /** [[fitModel]] on a training sample of known size `rows`:
+    * [[graft.functions.KMeansFit.cosine]], on the driver unless the
+    * sample's Lloyd pass is over its budget. */
+  private[graft] def fitSample(train: DataFrame, rows: Long, k: Int): KMeansModel =
+    graft.functions.KMeansFit.cosine(train, rows, k, Seed)
 
   /** Assign every vector of `emb` to its nearest centroid — one narrow
     * map with the broadcast centroid set; works identically on a batch
     * frame and a micro-batch inside foreachBatch. */
-  def assign(model: org.apache.spark.ml.clustering.KMeansModel, emb: DataFrame): DataFrame =
+  def assign(model: KMeansModel, emb: DataFrame): DataFrame =
     model.transform(emb.withColumn("features", array_to_vector(col("embedding"))))
       .select(col("vec_id"), col("embedding"), col("centroid_id"))
 
@@ -241,11 +243,15 @@ object IvfIndex {
     math.max(1L, math.ceil(
       n.toDouble / (TrainPointsPerCentroid.toLong * nlist)).toLong)
 
+  /** Rows of a stride-`tm` sample of `n` dense vec_ids (0 until n):
+    * ceil(n/tm), the size a capped fit states for its sample. */
+  private[graft] def strideRows(n: Long, tm: Long): Long = (n + tm - 1) / tm
+
   /** Training sample at stride `tm`, guarded against sparse or
     * already-strided id spaces (ADVICE r10): `vec_id % tm` assumes
     * dense contiguous ids, and on e.g. an id space that is itself a
     * multiple-of-`tm` stride it silently returns a skewed or empty
-    * sample (KMeans throws on an empty fit). If the stride yields
+    * sample (an empty fit throws). If the stride yields
     * fewer than `minRows` survivors, fall back to the id-distribution-
     * free hash stride `pmod(hash(vec_id), tm) = 0`, and if even that
     * undersamples (adversarially tiny corpora), to the full frame.
@@ -305,18 +311,17 @@ object IvfIndex {
       val emb = Tables.embeddings(s, dir)
       val tm = trainMod(n, nlist)
       val train = guardedStrideSample(emb, tm, minRows = nlist)
-      val model = fitModel(train, nlist)
+      val model = fitSample(train, strideRows(n, tm), nlist)
       val (indexed, rows) = org.apache.spark.sql.GraftColumnBridge.persisted(
         assign(model, emb), org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // the one assignment pass: fills the cache whether or not the
-      // artifacts below are written; the write then reads held rows
-      rows.count()
       val centroids = model.clusterCenters.map(_.toArray)
-      // persist the oracle-checkable artifacts for the default index:
-      // the (vec_id → centroid) assignment table and the centroid
-      // dictionary. Everything downstream of the fit is derived from
-      // these two tables in BOTH engines.
+      // the one assignment pass fills the cache: the artifact write's
+      // scan of the held rows for the default index, one count for any
+      // other. The artifacts are the (vec_id → centroid) assignment
+      // table and the centroid dictionary; everything downstream of
+      // the fit is derived from these two tables in BOTH engines.
       if (nlist == default) writeArtifacts(s, dumpDir(dir), indexed, centroids, n)
+      else rows.count()
       (indexed, centroids, rows)
     }
     (index, centroids)
@@ -414,8 +419,16 @@ object IvfIndex {
   def writeIndex(index: DataFrame, path: String): Unit =
     index.write.mode("overwrite").partitionBy("centroid_id").parquet(path)
 
+  /** The [[writeIndex]] layout's schema: [[assign]]'s columns, each
+    * nullable, as parquet inference reads them back. */
+  private[graft] val IndexSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "vec_id BIGINT, embedding ARRAY<FLOAT>, centroid_id INT")
+
+  /** The at-rest layout, read with its fixed [[IndexSchema]]: no
+    * schema-inference job per call. */
   def readIndex(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
+    s.read.schema(IndexSchema).parquet(path)
 
   /** vs_knn_ivf: approximate top-10 for the vec_id=0 query vector.
     * Oracle-checked end-to-end from the persisted artifacts (probe

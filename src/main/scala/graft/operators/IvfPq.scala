@@ -190,7 +190,7 @@ object IvfPq {
     // residual-capable ADC needs q̂ and each probed cell's encode
     // offset (unit centroid or 0⃗ — see PqIndex.buildResidual;
     // distances are ‖(q̂ − ô) − r‖²).
-    val qNorm = PqIndex.l2norm(qRaw)
+    val qNorm = graft.functions.VecMath.l2norm(qRaw)
     // one flat 128-double ADC row per probed cell — nprobe rows,
     // driver-built, broadcast against the pruned candidate stream
     val probeAdc = probes.toSeq

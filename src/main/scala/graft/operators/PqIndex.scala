@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.{KMeansFit, VecMath}
 
 /** Product quantization (PQ) — the memory-compression scale path for
   * ANN serving (Jégou et al., "Product Quantization for Nearest
@@ -21,9 +20,10 @@ import graft.Tables
   * the standard billion-vector serving layout.
   *
   * Spark shape:
-  *  - build: one k-means|| fit per subspace over the corpus slice
-  *    (distributed; 8 small fits, built once like the IVF model);
-  *    codebooks are 8×16×8 doubles — trivially broadcast.
+  *  - build: one k-means per subspace over a capped training sample
+  *    ([[TrainPointsPerCodeword]]), collected once and fit on the
+  *    driver ([[graft.functions.KMeansFit]]), built once like the IVF
+  *    model; codebooks are 8×16×8 doubles — trivially broadcast.
   *  - encode: one narrow typed map per vector (argmin over 16
   *    codewords per subspace), emitting (vec_id, packed int).
   *  - search (ADC, asymmetric distance computation): the query builds
@@ -92,37 +92,31 @@ object PqIndex {
     math.max(1L, math.ceil(
       n.toDouble / (TrainPointsPerCodeword.toLong * NumCodewords)).toLong)
 
-  /** Fit the per-subspace codebooks on an already-normalized frame.
+  /** Fit the per-subspace codebooks on an already-normalized frame of
+    * `rows` rows: all m subspaces from one collected capped sample
+    * ([[KMeansFit.subspaces]], subspace `mi` seeded `Seed + mi`).
     * NOT memoized — AnnSpec fits twice to assert that a fixed seed on
     * fixed data yields bit-identical codebooks, the reproducibility
     * property an incremental 100 TB index rebuild relies on. */
-  private[graft] def fitOn(norm: DataFrame, dim: Int,
+  private[graft] def fitOn(norm: DataFrame, rows: Long, dim: Int,
       m: Int = NumSubspaces): Codebooks = {
     // same fail-loud divisibility contract as buildResidual (ADVICE
     // r12): a non-divisor would silently drop the trailing dims
     require(dim % m == 0,
       s"PQ subspace count $m must divide the embedding dim $dim")
-    val dsub = dim / m
-    val tm = trainMod(norm.count())
+    val tm = trainMod(rows)
     // undersample guard shared with the IVF fit (ADVICE r10): sparse
     // id spaces fall back to hash-stride, then to the full frame
     val train = IvfIndex.guardedStrideSample(norm, tm, minRows = NumCodewords)
-    (0 until m).toArray.map { mi =>
-      val sliced = train.select(
-        array_to_vector(slice(col("nvec"), mi * dsub + 1, dsub)).as("features"))
-      new KMeans().setK(NumCodewords).setSeed(Seed + mi).setMaxIter(20)
-        .setFeaturesCol("features").setPredictionCol("cw")
-        .fit(sliced).clusterCenters.map(_.toArray)
-    }
+    KMeansFit.subspaces(train, "nvec", IvfIndex.strideRows(rows, tm), dim, m,
+      NumCodewords, Seed)
   }
 
   /** Convenience: normalize + fit, from scratch every call. */
   def fitCodebooks(s: SparkSession, dir: String): Codebooks = {
-    val norm = normalized(Tables.embeddings(s, dir)).cache()
+    val norm = normalized(Tables.embeddings(s, dir))
     val dim = norm.select(size(col("nvec"))).head().getInt(0)
-    val out = fitOn(norm, dim)
-    norm.unpersist()
-    out
+    fitOn(norm, IvfIndex.corpusCount(s, dir), dim)
   }
 
   /** Nearest-codeword encode of one vector against the codebooks —
@@ -185,7 +179,7 @@ object PqIndex {
     graft.functions.Artifacts.get(s, "pq", dir) {
       val norm = normalized(Tables.embeddings(s, dir)).cache()
       val dim = norm.select(size(col("nvec"))).head().getInt(0)
-      val codebooks: Codebooks = fitOn(norm, dim)
+      val codebooks: Codebooks = fitOn(norm, IvfIndex.corpusCount(s, dir), dim)
       import s.implicits._
       val bc = s.sparkContext.broadcast(codebooks)
       val codes = norm.as[(Long, Seq[Double])]
@@ -199,17 +193,6 @@ object PqIndex {
       norm.unpersist()
       (out, codebooks)
     }
-
-  /** L2-normalize one vector driver-side: the squares summed left to
-    * right from 0.0, then each component divided by the root. The
-    * centroid side of the residual and the query side of every ADC
-    * table. */
-  private[graft] def l2norm(a: Array[Double]): Array[Double] = {
-    var ss = 0.0; var i = 0
-    while (i < a.length) { ss += a(i) * a(i); i += 1 }
-    val n = math.sqrt(ss)
-    a.map(_ / n)
-  }
 
   /** RESIDUAL-capable build for the composed IVF-PQ layout — FAISS
     * IVFPQ's `by_residual` switch (Jégou et al. 2011 §IV) made
@@ -274,7 +257,7 @@ object PqIndex {
     graft.functions.Artifacts.held[Res](s, s"pqResidual:${centroids.length}:$forceMode:$m", dir,
         _._1.unpersist()) {
       import s.implicits._
-      val ncent = centroids.map(l2norm)
+      val ncent = centroids.map(VecMath.l2norm)
       val bcCent = s.sparkContext.broadcast(ncent)
       val dim = ncent(0).length
       // dsub = dim/m drops the trailing dim % m dimensions from fit,
@@ -312,7 +295,8 @@ object PqIndex {
           val c = bcOff.value(cid)
           (id, v.toArray.zipWithIndex.map { case (x, j) => x - c(j) }.toSeq)
         }.toDF("vec_id", "nvec").cache()
-      val codebooks: Codebooks = fitOn(resid, dim, m)
+      // resid holds one row per corpus vector (the index assigns each)
+      val codebooks: Codebooks = fitOn(resid, IvfIndex.corpusCount(s, dir), dim, m)
       val bc = s.sparkContext.broadcast(codebooks)
       // m ≤ 8 keeps the 32-bit at-rest code (bit-identical default
       // artifacts); a finer codec needs the 64-bit packing
@@ -453,7 +437,7 @@ object PqIndex {
     * vectors only for the shortlist). */
   def knnPq(s: SparkSession, dir: String, k: Int = 10, shortlist: Int = 50): DataFrame = {
     val (codes, codebooks) = build(s, dir)
-    val q = l2norm(VectorSearch.queryVector(s, dir).map(_.toDouble))
+    val q = VecMath.l2norm(VectorSearch.queryVector(s, dir).map(_.toDouble))
     val cand = adcScores(VectorSearch.withoutQuery(codes), codebooks, q)
       .orderBy(col("adist"), col("vec_id"))
       .limit(shortlist)

@@ -54,13 +54,17 @@ object VectorSearch {
   private[graft] def queryVector(s: SparkSession, dir: String): Array[Float] =
     queryFrame(s, dir).collect()(0).getSeq[Float](0).toArray
 
-  /** `df`'s batch query rows: every [[IvfIndex.DefaultSampleMod]]th vec_id. */
-  private[graft] def batchRows(df: DataFrame): DataFrame =
-    df.filter(col("vec_id") % IvfIndex.DefaultSampleMod === 0)
+  /** `df`'s batch query rows: every `mod`th vec_id, by default every
+    * [[IvfIndex.DefaultSampleMod]]th (the calibration sample passes
+    * its capped modulus, [[IvfIndex.calibrationMod]]). */
+  private[graft] def batchRows(df: DataFrame, mod: Long = IvfIndex.DefaultSampleMod): DataFrame =
+    df.filter(col("vec_id") % mod === 0)
 
-  /** The (qid, qv) batch query set. */
-  private[graft] def batchQueries(s: SparkSession, dir: String): DataFrame =
-    batchRows(Tables.embeddings(s, dir)).select(col("vec_id").as("qid"), col("embedding").as("qv"))
+  /** The (qid, qv) batch query set at stride `mod`. */
+  private[graft] def batchQueries(s: SparkSession, dir: String,
+      mod: Long = IvfIndex.DefaultSampleMod): DataFrame =
+    batchRows(Tables.embeddings(s, dir), mod)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
 
   /** Cosine distance of a candidate's embedding to the query's qv. */
   private[graft] def queryCosine: Column = FloatVecDistance.cosine(col("embedding"), col("qv"))

@@ -69,8 +69,9 @@ object IvfStream {
       // vec_id stride (even ids), so it takes the hash-stride half of
       // the sampling rule only. Gate and ≤30× corpora sit under the
       // budget (tm == 1): fit, artifacts, hashes bit-unchanged.
-      val train = IvfIndex.hashStrideSample(base, IvfIndex.trainMod(n, nl), minRows = nl)
-      (n, nl, IvfIndex.fitModel(train, nl))
+      val tm = IvfIndex.trainMod(n, nl)
+      val train = IvfIndex.hashStrideSample(base, tm, minRows = nl)
+      (n, nl, IvfIndex.fitSample(train, IvfIndex.strideRows(n, tm), nl))
     }
     val root = graft.functions.Scratch.fresh("ivfstream", dir)
     val indexPath = s"$root/index"

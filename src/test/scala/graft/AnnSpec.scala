@@ -53,6 +53,16 @@ class AnnSpec extends AnyFunSuite {
     assert(probed.collect().map(_.toSeq).toSeq == mem)
   }
 
+  test("readIndex reads the layout with its fixed schema: the inferred one, no job before an action") {
+    val (index, _) = IvfIndex.build(spark, sf)
+    val path = java.nio.file.Files.createTempDirectory("graft_ivf").toString + "/idx"
+    IvfIndex.writeIndex(index, path)
+    val (read, jobs) = org.apache.spark.GraftJobCount.of(spark.sparkContext)(IvfIndex.readIndex(spark, path))
+    assert(jobs == 0, s"readIndex ran $jobs jobs")
+    assert(read.schema == spark.read.parquet(path).schema)
+    assert(read.count() == index.count())
+  }
+
   test("embedding lsh: verified subset of exact pairs, usable recall") {
     val exact = Dedup.embedding(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

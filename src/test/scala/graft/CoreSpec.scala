@@ -340,6 +340,18 @@ class CoreSpec extends AnyFunSuite {
       s"no QueryId in $owner")
   }
 
+  test("one k-means fit: KMeans is constructed in KMeansFit alone, LocalKMeans named in its bridge alone") {
+    def confinedTo(owner: String, pattern: scala.util.matching.Regex): Unit = {
+      val at = sourceHits(l => pattern.findFirstIn(l).nonEmpty)
+      val file = mainRoot.resolve(owner)
+      assert(at.nonEmpty, s"$pattern not found in $file")
+      assert(at.forall(_.startsWith(s"$file:")), s"$pattern outside $file: $at")
+    }
+    confinedTo("graft/functions/KMeansFit.scala",
+      """new\s+(org\.apache\.spark\.ml\.clustering\.)?KMeans\(""".r)
+    confinedTo("org/apache/spark/mllib/clustering/GraftLocalKMeans.scala", """\bLocalKMeans\b""".r)
+  }
+
   test("bench previous-round parser reads the dump format") {
     // the correlated-noise escalation depends on this parse: a format
     // drift that silently yields an empty map would disable the
