@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * collected in one job, sorted by `vec_id` (the fit is then a pure
   * function of the sample and the seed), and fit on the driver with
   * MLlib's own k-means++ seeding and Lloyd rounds (the mllib bridge,
-  * [[GraftLocalKMeans]]). The distributed `KMeans` stays for a sample
-  * whose Lloyd pass is over [[DriverPassBudget]] ([[onDriver]]).
+  * [[GraftLocalKMeans]]). The distributed `KMeans` stays for an IVF
+  * sample whose Lloyd pass is over [[DriverPassBudget]] ([[onDriver]]).
   *
   * As MLlib's k-means|| does, a sample with no more than k distinct
   * rows yields those rows as its centers: min(k, distinct) of them.
@@ -28,22 +28,33 @@ object KMeansFit {
   val MaxIter = 20
 
   /** Multiply-adds one Lloyd pass may cost on the driver: sample rows
-    * × k × dim. At 2^28 the whole fit (seeding and 20 rounds) took
-    * 6.4 s on one core of a 4-vCPU VM (65,536 random 64-d unit
-    * vectors, k = 64), 0.3 s a pass. The IVF fits at sf0.1
-    * (2,000 × 45 × 64 ≈ 5.8M) and sf1 (20,000 × 141 × 64 ≈ 180M,
-    * 3.6–5.5 s) and every PQ fit (4,096 × 16 × 64 at most) sit under
-    * it. */
+    * × k × dim. The split point is measured, not guessed
+    * (`graft.KMeansFitTimer`, test scope: the specs' local[4] session
+    * on a 4-vCPU VM, 64-d clustered points, IVF-build shapes, median of
+    * three fits per side). At 2^28 (26,000 × 161 × 64) the driver fit
+    * still wins, 7.2 s against 9.5 s distributed; at 32,768 × 181 × 64
+    * ≈ 3.8e8 it loses, 8.2 s against 7.3 s, and at 50,000 × 316 × 64 ≈
+    * 1.0e9 (a 100,000-vector corpus), 26.0 s against 18.8 s. The
+    * driver fit uses one core, so a session with more executor cores
+    * moves the crossover lower. The IVF fits at sf0.1
+    * (2,000 × 45 × 64 ≈ 5.8e6) and sf1 (20,000 × 141 × 64 ≈ 1.8e8:
+    * 4.3 s against 6.4 s) sit under it. */
   val DriverPassBudget: Long = 1L << 28
 
   /** True iff a sample of `rows` × `dim` fits its k-means on the driver. */
   def onDriver(rows: Long, k: Int, dim: Int): Boolean =
     BigInt(rows) * k * dim <= DriverPassBudget
 
-  /** Cosine k-means of `sample`'s `embedding` column (`rows` rows), as
-    * a model that maps `features` to `centroid_id`. Unit-norm centers,
-    * as cosine `KMeans` leaves them: the driver fit normalizes the
-    * sample and renormalizes the centers. */
+  /** IVF centers for `sample`'s `embedding` column (`rows` rows), as
+    * a model that maps `features` to `centroid_id` by cosine distance,
+    * with unit-norm centers. On the driver this is Euclidean k-means
+    * (k-means++ and Lloyd rounds) of the L2-normalized sample, whose
+    * final centers are renormalized: inside the rounds the centers
+    * are plain means, so a point's nearest center depends on the
+    * center's norm and the fit is not spherical k-means. Past the
+    * budget it is MLlib's distributed cosine k-means||, which
+    * normalizes the centers every round. The two agree on a separable
+    * sample (KMeansFitSpec), not center for center. */
   def cosine(sample: DataFrame, rows: Long, k: Int, seed: Long): KMeansModel = {
     val dim = sample.select(size(col("embedding"))).head(1).headOption.fold(0)(_.getInt(0))
     val model =
@@ -56,18 +67,17 @@ object KMeansFit {
   }
 
   /** Euclidean k-means of each of `m` equal slices of `sample`'s `vec`
-    * column (`rows` rows of `dim` doubles): `k` centers per slice,
-    * slice `mi` seeded `seed + mi`. One collect serves every slice. */
-  def subspaces(sample: DataFrame, vec: String, rows: Long, dim: Int, m: Int, k: Int,
+    * column (rows of `dim` doubles), on the driver: `k` centers per
+    * slice, slice `mi` seeded `seed + mi`. One collect serves every
+    * slice. A PQ sample is capped at 256 × 16 rows for 16 codewords
+    * ([[graft.operators.PqIndex.TrainPointsPerCodeword]]), so its
+    * Lloyd pass (4,096 × 16 × dim) stays under [[DriverPassBudget]] up
+    * to dim 4,096. */
+  def subspaces(sample: DataFrame, vec: String, dim: Int, m: Int, k: Int,
       seed: Long): Array[Array[Array[Double]]] = {
     val dsub = dim / m
-    if (onDriver(rows, k, dim)) {
-      val pts = collectSorted(sample, vec)
-      Array.tabulate(m)(mi => local(pts.map(_.slice(mi * dsub, (mi + 1) * dsub)), k, seed + mi))
-    } else Array.tabulate(m) { mi =>
-      distributed(sample.select(array_to_vector(slice(col(vec), mi * dsub + 1, dsub)).as("features")),
-        k, seed + mi, "euclidean").clusterCenters.map(_.toArray)
-    }
+    val pts = collectSorted(sample, vec)
+    Array.tabulate(m)(mi => local(pts.map(_.slice(mi * dsub, (mi + 1) * dsub)), k, seed + mi))
   }
 
   /** `sample`'s `vec` column as doubles, in `vec_id` order: one job. */

@@ -191,18 +191,12 @@ object IvfIndex {
     * independently by the DuckDB oracle. */
   def dumpDir(dir: String): String = graft.functions.Scratch.pathOf("ivf", dir)
 
-  /** Fit `k` unit-norm centroids on all of `emb` (cosine k-means,
-    * seeded [[Seed]]): one count, then [[fitSample]]. The model is the
-    * reusable "index definition": batch builds and streaming upserts
-    * both assign with it. */
+  /** Fit `k` unit-norm centroids on all of `emb` (one count, then
+    * [[graft.functions.KMeansFit.cosine]] seeded [[Seed]]). The model
+    * is the reusable "index definition": batch builds and streaming
+    * upserts both assign with it. */
   def fitModel(emb: DataFrame, k: Int = NumCentroids): KMeansModel =
-    fitSample(emb, emb.count(), k)
-
-  /** [[fitModel]] on a training sample of known size `rows`:
-    * [[graft.functions.KMeansFit.cosine]], on the driver unless the
-    * sample's Lloyd pass is over its budget. */
-  private[graft] def fitSample(train: DataFrame, rows: Long, k: Int): KMeansModel =
-    graft.functions.KMeansFit.cosine(train, rows, k, Seed)
+    graft.functions.KMeansFit.cosine(emb, emb.count(), k, Seed)
 
   /** Assign every vector of `emb` to its nearest centroid — one narrow
     * map with the broadcast centroid set; works identically on a batch
@@ -311,7 +305,7 @@ object IvfIndex {
       val emb = Tables.embeddings(s, dir)
       val tm = trainMod(n, nlist)
       val train = guardedStrideSample(emb, tm, minRows = nlist)
-      val model = fitSample(train, strideRows(n, tm), nlist)
+      val model = graft.functions.KMeansFit.cosine(train, strideRows(n, tm), nlist, Seed)
       val (indexed, rows) = org.apache.spark.sql.GraftColumnBridge.persisted(
         assign(model, emb), org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val centroids = model.clusterCenters.map(_.toArray)

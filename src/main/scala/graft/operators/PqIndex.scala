@@ -108,8 +108,7 @@ object PqIndex {
     // undersample guard shared with the IVF fit (ADVICE r10): sparse
     // id spaces fall back to hash-stride, then to the full frame
     val train = IvfIndex.guardedStrideSample(norm, tm, minRows = NumCodewords)
-    KMeansFit.subspaces(train, "nvec", IvfIndex.strideRows(rows, tm), dim, m,
-      NumCodewords, Seed)
+    KMeansFit.subspaces(train, "nvec", dim, m, NumCodewords, Seed)
   }
 
   /** Convenience: normalize + fit, from scratch every call. */

@@ -71,7 +71,8 @@ object IvfStream {
       // budget (tm == 1): fit, artifacts, hashes bit-unchanged.
       val tm = IvfIndex.trainMod(n, nl)
       val train = IvfIndex.hashStrideSample(base, tm, minRows = nl)
-      (n, nl, IvfIndex.fitSample(train, IvfIndex.strideRows(n, tm), nl))
+      (n, nl, graft.functions.KMeansFit.cosine(train, IvfIndex.strideRows(n, tm), nl,
+        IvfIndex.Seed))
     }
     val root = graft.functions.Scratch.fresh("ivfstream", dir)
     val indexPath = s"$root/index"

@@ -28,13 +28,16 @@ class KMeansFitSpec extends AnyFunSuite {
     // the gate and benchmark fits sit on the driver
     assert(KMeansFit.onDriver(2000L, IvfIndex.defaultNlist(2000L), 64))
     assert(KMeansFit.onDriver(20000L, IvfIndex.defaultNlist(20000L), 64))
-    assert(KMeansFit.onDriver(256L * PqIndex.NumCodewords, PqIndex.NumCodewords, 64))
     // a billion vectors blocked at uncapped √N cells: the capped sample
     // (256 per cell) still has a Lloyd pass far past the budget
     val n = 1000000000L
     val nlist = IvfIndex.blockingNlist(n)
     val rows = IvfIndex.strideRows(n, IvfIndex.trainMod(n, nlist))
     assert(!KMeansFit.onDriver(rows, nlist, 64), s"$rows rows × $nlist cells")
+    // the measured crossover (KMeansFitTimer): 26,000 vectors fit
+    // faster on the driver, 32,768 faster distributed
+    assert(KMeansFit.onDriver(26000L, IvfIndex.defaultNlist(26000L), 64))
+    assert(!KMeansFit.onDriver(32768L, IvfIndex.defaultNlist(32768L), 64))
     // the edge is the constant itself, and the product cannot overflow
     assert(KMeansFit.onDriver(KMeansFit.DriverPassBudget, 1, 1))
     assert(!KMeansFit.onDriver(KMeansFit.DriverPassBudget + 1, 1, 1))
@@ -64,7 +67,7 @@ class KMeansFitSpec extends AnyFunSuite {
     val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
     intercept[IllegalArgumentException](KMeansFit.cosine(empty, 0L, 4, IvfIndex.Seed))
     intercept[IllegalArgumentException](
-      KMeansFit.subspaces(empty.withColumnRenamed("embedding", "nvec"), "nvec", 0L, 4, 2, 4, PqIndex.Seed))
+      KMeansFit.subspaces(empty.withColumnRenamed("embedding", "nvec"), "nvec", 4, 2, 4, PqIndex.Seed))
     // three distinct directions repeated: k-means|| and the driver fit both stop at three
     val three = (0 until 30).map(i => (i.toLong, axes(i % 3))).toDF("vec_id", "embedding")
     val local = KMeansFit.cosine(three, 30L, 8, IvfIndex.Seed)
@@ -74,7 +77,7 @@ class KMeansFitSpec extends AnyFunSuite {
     assert(local.clusterCenters.length == 3)
     assert(dist.clusterCenters.length == 3)
     val cbs = KMeansFit.subspaces(three.select(col("vec_id"), col("embedding").cast("array<double>").as("nvec")),
-      "nvec", 30L, 3, 3, PqIndex.NumCodewords, PqIndex.Seed)
+      "nvec", 3, 3, PqIndex.NumCodewords, PqIndex.Seed)
     assert(cbs.map(_.length).toSeq == Seq(2, 2, 2), cbs.map(_.length).toSeq)
   }
 
