@@ -45,8 +45,8 @@ object KMeansFit {
   def onDriver(rows: Long, k: Int, dim: Int): Boolean =
     BigInt(rows) * k * dim <= DriverPassBudget
 
-  /** IVF centers for `sample`'s `embedding` column (`rows` rows), as
-    * a model that maps `features` to `centroid_id` by cosine distance,
+  /** IVF centers for `sample`'s `embedding` column (`rows` rows of
+    * `dim` floats, both known to the caller from its count), as a model that maps `features` to `centroid_id` by cosine distance,
     * with unit-norm centers. On the driver this is Euclidean k-means
     * (k-means++ and Lloyd rounds) of the L2-normalized sample, whose
     * final centers are renormalized: inside the rounds the centers
@@ -55,8 +55,7 @@ object KMeansFit {
     * budget it is MLlib's distributed cosine k-means||, which
     * normalizes the centers every round. The two agree on a separable
     * sample (KMeansFitSpec), not center for center. */
-  def cosine(sample: DataFrame, rows: Long, k: Int, seed: Long): KMeansModel = {
-    val dim = sample.select(size(col("embedding"))).head(1).headOption.fold(0)(_.getInt(0))
+  def cosine(sample: DataFrame, rows: Long, dim: Int, k: Int, seed: Long): KMeansModel = {
     val model =
       if (onDriver(rows, k, dim)) {
         val pts = collectSorted(sample, "embedding").map(VecMath.l2norm)
@@ -67,16 +66,20 @@ object KMeansFit {
   }
 
   /** Euclidean k-means of each of `m` equal slices of `sample`'s `vec`
-    * column (rows of `dim` doubles), on the driver: `k` centers per
-    * slice, slice `mi` seeded `seed + mi`. One collect serves every
-    * slice. A PQ sample is capped at 256 × 16 rows for 16 codewords
+    * column (rows of doubles, whose width `m` must divide), on the
+    * driver: `k` centers per slice, slice `mi` seeded `seed + mi`. One
+    * collect serves every slice and gives the width. A PQ sample is capped at 256 × 16 rows for 16 codewords
     * ([[graft.operators.PqIndex.TrainPointsPerCodeword]]), so its
     * Lloyd pass (4,096 × 16 × dim) stays under [[DriverPassBudget]] up
     * to dim 4,096. */
-  def subspaces(sample: DataFrame, vec: String, dim: Int, m: Int, k: Int,
+  def subspaces(sample: DataFrame, vec: String, m: Int, k: Int,
       seed: Long): Array[Array[Array[Double]]] = {
-    val dsub = dim / m
     val pts = collectSorted(sample, vec)
+    require(pts.nonEmpty, "k-means sample is empty")
+    val dim = pts(0).length
+    // a non-divisor would silently drop the trailing dims
+    require(dim % m == 0, s"PQ subspace count $m must divide the embedding dim $dim")
+    val dsub = dim / m
     Array.tabulate(m)(mi => local(pts.map(_.slice(mi * dsub, (mi + 1) * dsub)), k, seed + mi))
   }
 

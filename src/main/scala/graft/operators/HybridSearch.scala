@@ -184,11 +184,13 @@ object HybridSearch {
 
   /** MMR (maximal marginal relevance) diversity re-rank over the dense
     * embeddings table: the distributed side scores the corpus and
-    * takes the top-20 candidates (TakeOrderedAndProject); the greedy
-    * selection then runs on the driver over that k-bounded set — the
+    * takes the top-20 candidates (TakeOrderedAndProject, whose output
+    * is one partition); the greedy selection then runs over that
+    * k-bounded set in one `mapPartitions` task of the same plan — the
     * standard RAG post-processing topology (candidate generation
-    * distributes, the O(k²) rerank is trivially driver-side).
-    * Deterministic: rounded sims, id tie-breaks. Oracle-checked — the
+    * distributes, the O(k²) rerank is one small task), and the frame
+    * stays lazy. Deterministic: rounded sims, id tie-breaks, so the
+    * candidates' order does not matter. Oracle-checked — the
     * sequential greedy argmax is expressed as a DuckDB recursive CTE
     * whose accumulated selection rides along as a list; CoreSpec
     * additionally asserts top-1 fidelity, size, and diversity vs the
@@ -201,14 +203,21 @@ object HybridSearch {
     val emb = Tables.embeddings(s, dir)
     val query = VectorSearch.queryVector(s, dir)
     val qlit = array(query.map(f => lit(f)).toIndexedSeq: _*).cast("array<float>")
-    val cands = VectorSearch.withoutQuery(emb)
+    VectorSearch.withoutQuery(emb)
       .select(col("vec_id"),
         round(lit(1.0) - graft.functions.FloatVecDistance.cosine(col("embedding"), qlit), 4).as("qsim"),
         col("embedding"))
       .orderBy(col("qsim").desc, col("vec_id"))
       .limit(nCand)
-      .collect()
-      .map(r => (r.getLong(0), r.getDouble(1), r.getSeq[Float](2).toArray))
+      .as[(Long, Double, Array[Float])]
+      .mapPartitions(cands => mmrSelect(cands.toSeq, lambda, k).iterator)
+      .toDF("rnk", "vec_id", "mmr_score")
+  }
+
+  /** The greedy MMR selection over (vec_id, qsim, embedding)
+    * candidates: up to `k` (rnk, vec_id, mmr_score) rows, rnk from 1. */
+  private def mmrSelect(cands: Seq[(Long, Double, Array[Float])], lambda: Double,
+      k: Int): Seq[(Long, Long, Double)] = {
     def sim(a: Array[Float], b: Array[Float]): Double =
       1.0 - graft.functions.VecMath.dist("cosine", a, b)
     val selected = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Array[Float])]
@@ -226,9 +235,7 @@ object HybridSearch {
       selected += ((best._1, best._4, best._3))
       remaining --= remaining.filter(_._1 == best._1)
     }
-    selected.zipWithIndex
-      .map { case ((id, mmr, _), i) => (i + 1L, id, mmr) }
-      .toSeq.toDF("rnk", "vec_id", "mmr_score")
+    selected.zipWithIndex.map { case ((id, mmr, _), i) => (i + 1L, id, mmr) }.toSeq
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

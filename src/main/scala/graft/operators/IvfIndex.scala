@@ -2,8 +2,7 @@ package graft.operators
 
 import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.SafeRound.round
 
@@ -74,9 +73,9 @@ object IvfIndex {
     * mm_pair_mining_ivf): √N with NO serving cap. The cap is a
     * per-query latency trade — a probe ranks all nlist centroids
     * before touching data — but blocking ranks centroids ONCE PER
-    * CORPUS ROW inside a distributed broadcast join
-    * ([[probePairs]]: N × nlist rows through a bounded top-nprobe
-    * agg), so there is no latency constraint to trade against.
+    * CORPUS ROW in a narrow per-row step ([[probePairs]]: nlist
+    * distances per row, no exchange), so there is no latency
+    * constraint to trade against.
     * Inheriting the capped serving default instead would freeze the
     * candidate fraction at nprobe/nlist = 1/64 past N ≈ 17M vectors
     * and silently revert the pair producers to N²/64 candidates —
@@ -191,12 +190,14 @@ object IvfIndex {
     * independently by the DuckDB oracle. */
   def dumpDir(dir: String): String = graft.functions.Scratch.pathOf("ivf", dir)
 
-  /** Fit `k` unit-norm centroids on all of `emb` (one count, then
-    * [[graft.functions.KMeansFit.cosine]] seeded [[Seed]]). The model
-    * is the reusable "index definition": batch builds and streaming
-    * upserts both assign with it. */
-  def fitModel(emb: DataFrame, k: Int = NumCentroids): KMeansModel =
-    graft.functions.KMeansFit.cosine(emb, emb.count(), k, Seed)
+  /** Fit `k` unit-norm centroids on all of `emb` (one [[shape]] job,
+    * then [[graft.functions.KMeansFit.cosine]] seeded [[Seed]]). The
+    * model is the reusable "index definition": batch builds and
+    * streaming upserts both assign with it. */
+  def fitModel(emb: DataFrame, k: Int = NumCentroids): KMeansModel = {
+    val (n, dim) = shape(emb)
+    graft.functions.KMeansFit.cosine(emb, n, dim, k, Seed)
+  }
 
   /** Assign every vector of `emb` to its nearest centroid — one narrow
     * map with the broadcast centroid set; works identically on a batch
@@ -205,11 +206,21 @@ object IvfIndex {
     model.transform(emb.withColumn("features", array_to_vector(col("embedding"))))
       .select(col("vec_id"), col("embedding"), col("centroid_id"))
 
-  /** Corpus row count, an artifact of the corpus dir: the adaptive
-    * geometry needs it on every build call, and it only changes when
-    * the corpus does. */
-  private[graft] def corpusCount(s: SparkSession, dir: String): Long =
-    graft.functions.Artifacts.get(s, "corpusCount", dir)(Tables.embeddings(s, dir).count())
+  /** (rows, dim) of an embeddings frame in one job: the count a fit
+    * needs for its geometry, with the vector width read in the same
+    * pass (0 for an empty frame). */
+  private[graft] def shape(emb: DataFrame): (Long, Int) = {
+    val r = emb.agg(count(lit(1)), coalesce(max(size(col("embedding"))), lit(0))).head()
+    (r.getLong(0), r.getInt(1))
+  }
+
+  /** [[shape]] of the corpus, an artifact of the corpus dir: the
+    * adaptive geometry needs the count on every build call, and it
+    * only changes when the corpus does. */
+  private[graft] def corpusShape(s: SparkSession, dir: String): (Long, Int) =
+    graft.functions.Artifacts.get(s, "corpusShape", dir)(shape(Tables.embeddings(s, dir)))
+
+  private[graft] def corpusCount(s: SparkSession, dir: String): Long = corpusShape(s, dir)._1
 
   /** Training-sample budget per centroid for the k-means fit — the
     * FAISS convention (max_points_per_centroid = 256 in faiss's
@@ -296,7 +307,7 @@ object IvfIndex {
     * when the entry leaves the cache. */
   def build(s: SparkSession, dir: String,
       k: Int = 0): (DataFrame, Array[Array[Double]]) = {
-    val n = corpusCount(s, dir)
+    val (n, dim) = corpusShape(s, dir)
     val default = defaultNlist(n)
     val nlist = if (k > 0) k else default
     type Held = (DataFrame, Array[Array[Double]], org.apache.spark.rdd.RDD[_])
@@ -305,7 +316,7 @@ object IvfIndex {
       val emb = Tables.embeddings(s, dir)
       val tm = trainMod(n, nlist)
       val train = guardedStrideSample(emb, tm, minRows = nlist)
-      val model = graft.functions.KMeansFit.cosine(train, strideRows(n, tm), nlist, Seed)
+      val model = graft.functions.KMeansFit.cosine(train, strideRows(n, tm), dim, nlist, Seed)
       val (indexed, rows) = org.apache.spark.sql.GraftColumnBridge.persisted(
         assign(model, emb), org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val centroids = model.clusterCenters.map(_.toArray)
@@ -361,17 +372,11 @@ object IvfIndex {
       VectorSearch.queryVector(s, dir), k = 10, nprobe)
 
   /** (qid, centroid_id, crank) for a (qid, qv) frame: every cell ranked
-    * per query by (cosine distance, cell id), windowed per query. */
+    * per query by [[rankProbes]] at full depth, crank from 1. */
   private[graft] def centroidRanks(s: SparkSession, queries: DataFrame,
-      centroids: Array[Array[Double]]): DataFrame = {
-    val cdf = centroidFrame(s, centroids).select(col("cid").as("centroid_id"), col("cvec"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cdist"), col("centroid_id"))
-    queries.crossJoin(broadcast(cdf))
-      .select(col("qid"), col("centroid_id"),
-        FloatVecDistance.cosine(col("qv"), col("cvec")).as("cdist"))
-      .withColumn("crank", row_number().over(w))
-      .select(col("qid"), col("centroid_id"), col("crank"))
-  }
+      centroids: Array[Array[Double]]): DataFrame =
+    queries.select(col("qid"), posexplode(probeRanking(s, centroids, centroids.length)(col("qv"))))
+      .select(col("qid"), col("col").as("centroid_id"), (col("pos") + 1).as("crank"))
 
   /** One query's probe set, ranked driver-side: the `nprobe` cells
     * whose centroids are nearest `q` by (cosine distance, cell id)
@@ -382,6 +387,16 @@ object IvfIndex {
       .map { case (c, i) => (i, VecMath.distD("cosine", c, q)) }
       .sortBy { case (i, d) => (d, i) }
       .take(resolveNprobe(centroids.length, nprobe)).map(_._1)
+
+  /** [[rankProbes]] as a function of a query-vector column (float or
+    * double elements; floats widen exactly, as in [[search]]). The
+    * centroids ship once per call as a broadcast, not inside each task. */
+  private def probeRanking(s: SparkSession, centroids: Array[Array[Double]],
+      nprobe: Int): Column => Column = {
+    val bc = s.sparkContext.broadcast(centroids)
+    val ranked = udf((q: Seq[Double]) => rankProbes(bc.value, q.toArray, nprobe))
+    qv => ranked(qv.cast("array<double>"))
+  }
 
   /** `index` restricted to the rows of `cells`: a row filter over
     * [[build]]'s resident rows, partition pruning over the at-rest
@@ -433,84 +448,51 @@ object IvfIndex {
     probeQuery(s, dir, index, centroids, 0)
   }
 
-  /** Distributed probe ranking for a TABLE of query vectors: the
-    * (tiny, nlist-row) centroid dictionary is broadcast against the
-    * query table, and a bounded top-nprobe agg picks each query's
-    * probe set — shuffle volume = queries × nprobe, i.e. the answer
-    * size, thanks to map-side partial aggregation in TopKAgg. Returns
-    * (qid, centroid_id) pairs ready to equi-join the assigned index
-    * (the cell restriction expressed as a join key). Bit-identical to
-    * `search`'s driver-side ranking (same left-to-right double
-    * accumulation, same (dist, id) tie-break).
-    * Shared by batch serving ([[searchBatch]]) and IVF-blocked mining
-    * ([[Multimodal.pairMiningIvf]]) so a probe-ranking fix lands
-    * exactly once. `queriesDf` needs (qid, qv); extra columns pass
-    * through the ranking unprojected. */
+  /** Probe ranking for a TABLE of query vectors: `queriesDf` plus a
+    * `centroid_id` column, one row per (query, probed cell). Each
+    * query's cells come from [[rankProbes]], the single probe's own
+    * ranking, in one narrow per-row generator: every input column
+    * passes through, so callers need no payload re-join, and nothing
+    * is shuffled. The rows then equi-join the assigned index (the cell
+    * restriction expressed as a join key). Shared by batch serving
+    * ([[searchBatch]]), IVF-PQ batch serving, blocked dedup
+    * ([[dedupPairsAt]]) and IVF-blocked mining
+    * ([[Multimodal.pairMiningIvf]]). `queriesDf` needs a `qv` column. */
   def probePairs(s: SparkSession, queriesDf: DataFrame,
-      centroids: Array[Array[Double]], nprobe: Int = 0): DataFrame = {
-    val np = resolveNprobe(centroids.length, nprobe)
-    // TopKByDist carries a Long id
-    val cdf = centroidFrame(s, centroids).select(col("cid").cast("long").as("cid"), col("cvec"))
-    queriesDf
-      .crossJoin(broadcast(cdf))
-      .select(col("qid"),
-        // codegen'd mixed float/double kernel: corpus-sized query
-        // tables rank against the centroid dictionary here, and the
-        // interpreted zip_with path measured ~25 s of a 35 s mining
-        // job at corpus × nlist rows. Bit-identical result.
-        FloatVecDistance.cosine(col("qv"), col("cvec")).as("cdist"),
-        col("cid"))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("cdist"), col("cid"), np).as("probes"))
-      .select(col("qid"), explode(col("probes.id")).as("cid"))
-      .select(col("qid"), col("cid").cast("int").as("centroid_id"))
-  }
+      centroids: Array[Array[Double]], nprobe: Int = 0): DataFrame =
+    queriesDf.withColumn("centroid_id", explode(probeRanking(s, centroids, nprobe)(col("qv"))))
 
   /** Batch serving against the IVF layout: a TABLE of query vectors,
-    * each probing only its nprobe nearest centroids' partitions.
-    * Fully distributed — the query table never touches the driver:
-    * the (tiny, k-row) centroid table is broadcast against the query
-    * table and a bounded top-nprobe agg picks each query's probe set
-    * (shuffle volume = queries × nprobe, i.e. the answer size, thanks
-    * to map-side partial aggregation in TopKByDist). The data side is
-    * one equi-join of the (query, probed-centroid) pairs against the
-    * assigned index — the cell restriction expressed as a join key —
-    * then the exact kernel and a bounded top-k agg per
-    * query. Both query-sized joins (probe pairs → index, qid → qv)
-    * are left un-hinted: AQE broadcasts them at local scale and falls
-    * back to high-cardinality shuffle joins for a 100 TB-sized query
-    * table. The distributed centroid
-    * ranking is bit-identical to `search`'s driver-side ranking (same
-    * left-to-right double accumulation, same (dist, id) tie-break).
-    * Oracle-checked from the persisted artifacts; AnnSpec asserts the
-    * full-probe form equals brute force per query. */
+    * each probing only its nprobe nearest centroids' partitions, as
+    * unordered (qid, vec_id, dist, rnk) rows (rnk from 1 carries each
+    * query's order, as in [[graft.plans.KnnJoin]]). Fully distributed
+    * — the query table never touches the driver: [[probePairs]] ranks
+    * each query's cells in a narrow per-row step that keeps the query
+    * vector, those (query, cell) rows equi-join the assigned index —
+    * the cell restriction expressed as a join key — and the exact
+    * kernel feeds a bounded top-k agg per query, whose exchange
+    * carries queries × k rows and is the plan's only shuffle. The
+    * probe sets are the single probe's ([[search]]), so a query's
+    * rows equal its [[search]] at the same nprobe. Oracle-checked
+    * from the persisted artifacts; AnnSpec asserts the full-probe form
+    * equals brute force per query. */
   def searchBatch(s: SparkSession, index: DataFrame,
       centroids: Array[Array[Double]],
-      queriesDf: DataFrame, k: Int, nprobe: Int = 0): DataFrame = {
-    // the query payload joins onto the (qid, centroid) PAIR table —
-    // |queries|×nprobe rows — BEFORE the index join explodes
-    // candidates: every join precedes the explosion, so the candidate
-    // stream flows straight into the codegen kernel and the map-side
-    // partial agg, never through a sort or shuffle (joining qv onto
-    // the exploded stream instead lets AQE pick a sort-merge join
-    // there once the query table outgrows broadcast, sorting the
-    // candidate stream — the measured 30× mining failure mode).
-    val pp = probePairs(s, queriesDf, centroids, nprobe)
-      .join(queriesDf.select(col("qid"), col("qv")), "qid")
+      queriesDf: DataFrame, k: Int, nprobe: Int = 0): DataFrame =
     index
       // the pair join stays UN-HINTED: AQE broadcasts it at local
       // scale (plan-pinned in AnnSpec) and falls back to a shuffle
       // equi-join when the query table grows. A forced broadcast()
-      // here overflowed exactly that case.
-      .join(pp, "centroid_id")
+      // here overflowed exactly that case. It is the only join, and
+      // it precedes the scoring, so the candidate stream flows
+      // straight into the codegen kernel and the map-side partial agg.
+      .join(probePairs(s, queriesDf, centroids, nprobe), "centroid_id")
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
         graft.functions.SafeRound.round(
           FloatVecDistance.cosine(col("embedding"), col("qv")), 4).as("dist"))
       .transform(graft.functions.TopKAgg.perKey(col("qid"), col("dist"), col("vec_id"), k))
       .withColumnRenamed("id", "vec_id")
-      .orderBy("qid", "rnk")
-  }
 
   /** TARGET ACCURACY → nprobe calibration — the reference's actual
     * index-tuning interface (/root/reference/scripts/
@@ -572,8 +554,8 @@ object IvfIndex {
     }
     val truth = truthIds
       .join(index.select(col("vec_id"), col("centroid_id")), "vec_id")
-    // per-query centroid ranking: sample × nlist rows, windowed per
-    // query — bounded work, parallel across queries
+    // per-query centroid ranking: one narrow step per sample query,
+    // sample × nlist rows out — bounded work, parallel across queries
     val cranks = centroidRanks(s, sample, centroids)
     val nQueries = sample.count()
     val byRank = truth.join(cranks, Seq("qid", "centroid_id"))
@@ -616,6 +598,7 @@ object IvfIndex {
   def knnIvfBatch(s: SparkSession, dir: String): DataFrame = {
     val (index, centroids) = build(s, dir)
     searchBatch(s, index, centroids, VectorSearch.batchQueries(s, dir), k = 5)
+      .orderBy("qid", "rnk")
   }
 
   /** dedup_embedding_ivf: embedding near-dup pair detection blocked by
@@ -667,9 +650,9 @@ object IvfIndex {
     * candidate stream) and verified the survivors through two
     * embedding re-joins (two more candidate-stream shuffles). That
     * distinct dominated the 30× default run (449.5 s, SURVEY §6).
-    * Now the query payload joins the PAIR table before the cell join
-    * — the searchBatch/mining reorder — so every candidate row
-    * already carries both embeddings and the exact kernel + radius
+    * Now the probe rows carry the query vector from [[probePairs]]
+    * into the one cell join, so every candidate row already carries
+    * both embeddings and the exact kernel + radius
     * filter run MAP-SIDE on the exploded stream; only the
     * answer-sized survivors (actual near-dup pairs) reach the
     * distinct that unions the two probe directions. Zero shuffles of
@@ -693,13 +676,12 @@ object IvfIndex {
       index: DataFrame, centroids: Array[Array[Double]], np: Int): DataFrame = {
     val probes = Tables.embeddings(s, dir)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    // corpus-sized probe table: both joins stay un-hinted (AQE
-    // broadcasts at local scale, shuffle equi-join at 100 TB) and
-    // both PRECEDE the explosion — the exploded stream itself never
+    // corpus-sized probe table: the one cell join stays un-hinted
+    // (AQE broadcasts at local scale, shuffle equi-join at 100 TB) and
+    // the probe rows already carry qv, so the exploded stream never
     // crosses a sort or shuffle before the radius filter.
-    val pp = probePairs(s, probes, centroids, np).join(probes, "qid")
     index
-      .join(pp, "centroid_id")
+      .join(probePairs(s, probes, centroids, np), "centroid_id")
       .filter(col("qid") =!= col("vec_id"))
       // two-phase radius: RAW-kernel prefilter first (strict superset
       // — see SafeRound.PreRoundSlack), exact rounded filter after.

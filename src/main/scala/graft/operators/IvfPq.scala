@@ -111,7 +111,7 @@ object IvfPq {
       // demote a true neighbor only on one side and the "GUARANTEED
       // recovered" lower bound would not be strict (ADVICE r11).
       val truthIds = VectorSearch.exactTruth(index, sample, k)
-      // per-query centroid ranking (sample × nlist, windowed per query)
+      // per-query centroid ranking (sample × nlist, narrow per query)
       val cranks = IvfIndex.centroidRanks(s, sample, centroids)
       // full-probe ADC score of every candidate for every sample
       // query: residual tables for ALL (query, cell) pairs (sample ×
@@ -217,8 +217,9 @@ object IvfPq {
     * is the one you deploy.
     *
     * Fully distributed — no query ever touches the driver:
-    *  - probe ranking is the shared [[IvfIndex.probePairs]] (broadcast
-    *    centroid dictionary, bounded top-nprobe agg, codegen kernel);
+    *  - probe ranking is the shared [[IvfIndex.probePairs]] (a narrow
+    *    per-query step over the broadcast centroid dictionary that keeps
+    *    the query vector for the ADC tables);
     *  - candidates are one equi-join of the (qid, probed-centroid)
     *    pairs against the assigned index — the cell restriction
     *    expressed as a join key, candidate volume
@@ -261,8 +262,8 @@ object IvfPq {
       case None => (nprobe, shortlist)
     }
     val queriesDf = VectorSearch.batchQueries(s, dir)
-    // the (qid, probed-centroid) pair table drives BOTH the candidate
-    // join and the per-(query, cell) residual ADC tables
+    // the (qid, qv, probed-centroid) pair table drives BOTH the
+    // candidate join and the per-(query, cell) residual ADC tables
     val pairs = IvfIndex.probePairs(s, queriesDf, centroids, np)
     // MATERIALIZATION BOUNDARY, not just reuse: without the persist,
     // the build-side projection that constructs each (query, cell)'s
@@ -278,7 +279,7 @@ object IvfPq {
     val adc = graft.functions.Artifacts.frame(s,
       s"ivfPqAdcRes:${centroids.length}:" +
         s"${IvfIndex.resolveNprobe(centroids.length, np)}:$forceMode:$m", dir)(
-      PqIndex.adcTableResidual(pairs.join(queriesDf, "qid"), offsets, codebooks))
+      PqIndex.adcTableResidual(pairs, offsets, codebooks))
     // every join precedes the candidate explosion (the searchBatch /
     // pairMiningIvfAt rule): codes attach to the assignment table on
     // the 8-byte vec_id (corpus-sized × corpus-sized equi-join — both

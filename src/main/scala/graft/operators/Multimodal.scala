@@ -331,17 +331,14 @@ object Multimodal {
     // (IvfIndex.probePairs); unlike searchBatch the pair table here is
     // anchors × nprobe = corpus-sized, so the index join stays
     // un-hinted (shuffle join at scale) instead of broadcast. The
-    // anchor payload (qv, source) joins onto the PAIR table — N×nprobe
-    // rows — BEFORE the index join explodes candidates: every join
-    // then precedes the explosion and the candidate stream flows
-    // straight into the codegen kernel and the map-side partial agg,
-    // never through a sort or shuffle. (The previous order joined
-    // anchors onto the exploded stream; at the 30× calibrated depth
-    // AQE picked a sort-merge join there and SORTED the ~1B-row
-    // candidate stream — measured heap exhaustion. Join order only;
-    // same rows, oracle untouched.)
+    // probe rows keep the anchor payload (qv, source), so every join
+    // precedes the explosion and the candidate stream flows straight
+    // into the codegen kernel and the map-side partial agg, never
+    // through a sort or shuffle. (An earlier order joined anchors onto
+    // the exploded stream; at the 30× calibrated depth AQE picked a
+    // sort-merge join there and SORTED the ~1B-row candidate stream —
+    // measured heap exhaustion.)
     val pp = IvfIndex.probePairs(s, anchors, centroids, np)
-      .join(anchors.select(col("qid"), col("qv"), col("q_source")), "qid")
     index
       .join(src.select(col("doc_id"), col("source").as("neg_source")),
         col("vec_id") === col("doc_id")).drop("doc_id")

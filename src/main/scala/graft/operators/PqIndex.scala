@@ -94,28 +94,23 @@ object PqIndex {
 
   /** Fit the per-subspace codebooks on an already-normalized frame of
     * `rows` rows: all m subspaces from one collected capped sample
-    * ([[KMeansFit.subspaces]], subspace `mi` seeded `Seed + mi`).
+    * ([[KMeansFit.subspaces]], subspace `mi` seeded `Seed + mi`), whose
+    * width is the embedding dim, which `m` must divide.
     * NOT memoized — AnnSpec fits twice to assert that a fixed seed on
     * fixed data yields bit-identical codebooks, the reproducibility
     * property an incremental 100 TB index rebuild relies on. */
-  private[graft] def fitOn(norm: DataFrame, rows: Long, dim: Int,
+  private[graft] def fitOn(norm: DataFrame, rows: Long,
       m: Int = NumSubspaces): Codebooks = {
-    // same fail-loud divisibility contract as buildResidual (ADVICE
-    // r12): a non-divisor would silently drop the trailing dims
-    require(dim % m == 0,
-      s"PQ subspace count $m must divide the embedding dim $dim")
     val tm = trainMod(rows)
     // undersample guard shared with the IVF fit (ADVICE r10): sparse
     // id spaces fall back to hash-stride, then to the full frame
     val train = IvfIndex.guardedStrideSample(norm, tm, minRows = NumCodewords)
-    KMeansFit.subspaces(train, "nvec", dim, m, NumCodewords, Seed)
+    KMeansFit.subspaces(train, "nvec", m, NumCodewords, Seed)
   }
 
   /** Convenience: normalize + fit, from scratch every call. */
   def fitCodebooks(s: SparkSession, dir: String): Codebooks = {
-    val norm = normalized(Tables.embeddings(s, dir))
-    val dim = norm.select(size(col("nvec"))).head().getInt(0)
-    fitOn(norm, IvfIndex.corpusCount(s, dir), dim)
+    fitOn(normalized(Tables.embeddings(s, dir)), IvfIndex.corpusCount(s, dir))
   }
 
   /** Nearest-codeword encode of one vector against the codebooks —
@@ -177,8 +172,7 @@ object PqIndex {
   def build(s: SparkSession, dir: String): (DataFrame, Codebooks) =
     graft.functions.Artifacts.get(s, "pq", dir) {
       val norm = normalized(Tables.embeddings(s, dir)).cache()
-      val dim = norm.select(size(col("nvec"))).head().getInt(0)
-      val codebooks: Codebooks = fitOn(norm, IvfIndex.corpusCount(s, dir), dim)
+      val codebooks: Codebooks = fitOn(norm, IvfIndex.corpusCount(s, dir))
       import s.implicits._
       val bc = s.sparkContext.broadcast(codebooks)
       val codes = norm.as[(Long, Seq[Double])]
@@ -295,7 +289,7 @@ object PqIndex {
           (id, v.toArray.zipWithIndex.map { case (x, j) => x - c(j) }.toSeq)
         }.toDF("vec_id", "nvec").cache()
       // resid holds one row per corpus vector (the index assigns each)
-      val codebooks: Codebooks = fitOn(resid, IvfIndex.corpusCount(s, dir), dim, m)
+      val codebooks: Codebooks = fitOn(resid, IvfIndex.corpusCount(s, dir), m)
       val bc = s.sparkContext.broadcast(codebooks)
       // m ≤ 8 keeps the 32-bit at-rest code (bit-identical default
       // artifacts); a finer codec needs the 64-bit packing

@@ -175,6 +175,67 @@ class AnnSpec extends AnyFunSuite {
       s"batch ivf recall collapsed: ${(part & exactPairs).size}/${exactPairs.size}")
   }
 
+  test("ivf batch search per held-out query equals the single probe at the same depth") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val (index, centroids) = IvfIndex.build(spark, sf)
+    // perturbed copies of every 40th vector, under qids no corpus row has
+    val held = Tables.embeddings(spark, sf).filter(col("vec_id") % 40 === 0)
+      .orderBy("vec_id").select("vec_id", "embedding").collect()
+      .map(r => (1000000000L + r.getLong(0),
+        r.getSeq[Float](1).zipWithIndex.map { case (x, j) => x + 0.01f * ((j % 3) - 1) }.toArray))
+    val queriesDf = held.toSeq.toDF("qid", "qv")
+    for (np <- Seq(1, 3, 0)) {
+      val batch = IvfIndex.searchBatch(spark, index, centroids, queriesDf, k = 10, nprobe = np)
+        .collect().groupBy(_.getLong(0))
+        .map { case (q, rs) => q -> rs.sortBy(_.getLong(3)).map(r => (r.getLong(1), r.getDouble(2))).toSeq }
+      assert(batch.size == held.length, s"nprobe $np")
+      held.foreach { case (qid, qv) =>
+        val single = IvfIndex.search(spark, index, centroids, qv, k = 10, nprobe = np)
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        assert(batch(qid) == single, s"query $qid at nprobe $np")
+      }
+    }
+  }
+
+  test("centroid ranks: the narrow ranking equals the windowed cross-join ranking") {
+    import org.apache.spark.sql.functions._
+    val (_, centroids) = IvfIndex.build(spark, sf)
+    val sample = IvfIndex.calibrationSample(spark, sf)
+    // the earlier form: every cell scored per query, row_number per qid
+    val cdf = IvfIndex.centroidFrame(spark, centroids).select(col("cid").as("centroid_id"), col("cvec"))
+    val windowed = sample.crossJoin(broadcast(cdf))
+      .select(col("qid"), col("centroid_id"),
+        graft.functions.FloatVecDistance.cosine(col("qv"), col("cvec")).as("cdist"))
+      .withColumn("crank", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("qid"))
+          .orderBy(col("cdist"), col("centroid_id"))))
+      .select("qid", "centroid_id", "crank")
+    val ranks = IvfIndex.centroidRanks(spark, sample, centroids)
+    assert(ranks.schema == windowed.schema, ranks.schema.treeString)
+    val got = ranks.collect().map(_.toSeq).toSet
+    assert(got.size == sample.count() * centroids.length)
+    assert(got == windowed.collect().map(_.toSeq).toSet)
+  }
+
+  test("warm ivf batch search compiles nothing") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import spark.implicits._
+    val (index, centroids) = IvfIndex.build(spark, sf)
+    val vecs = Tables.embeddings(spark, sf).orderBy("vec_id").select("vec_id", "embedding")
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    // six query tables of ten, each at its own probe depth: one warms up
+    val calls = (0 until 6).map { i =>
+      val qs = vecs.slice(i * 10, i * 10 + 10).toSeq.toDF("qid", "qv")
+      () => IvfIndex.searchBatch(spark, index, centroids, qs, k = 5, nprobe = i + 1).collect()
+    }
+    calls.head()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    calls.tail.foreach(_())
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"compiles in 5 warm batch searches: $compiled")
+  }
+
   test("ivf batch probe ranking is distributed: broadcast centroids, bounded agg, no cartesian") {
     import org.apache.spark.sql.functions._
     val (index, centroids) = IvfIndex.build(spark, sf)
@@ -187,7 +248,8 @@ class AnnSpec extends AnyFunSuite {
     // the k-row centroid table is the broadcast side of the ranking
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"), p)
     assert(!p.contains("CartesianProduct"), p)
-    // probe selection + final top-k both via the bounded heap agg
+    // the final top-k is the bounded heap agg, partial and final (the
+    // probe selection is a narrow per-query step, no agg)
     assert("topk_by_dist".r.findAllIn(p).size >= 2, p)
   }
 
@@ -564,7 +626,6 @@ class AnnSpec extends AnyFunSuite {
       import org.apache.spark.sql.functions._
       index.join(IvfIndex.probePairs(spark, sample, centroids, np), "centroid_id")
         .filter(col("qid") =!= col("vec_id"))
-        .join(sample, "qid")
         .select(col("qid"), col("vec_id"),
           graft.functions.SafeRound.round(
             graft.functions.FloatVecDistance.cosine(col("embedding"), col("qv")), 4)
@@ -716,7 +777,7 @@ class AnnSpec extends AnyFunSuite {
       .filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val exact = IvfIndex.searchBatch(spark, index, centroids, queriesDf, k = 5,
-      nprobe = centroids.length).collect()
+      nprobe = centroids.length).orderBy("qid", "rnk").collect()
     assert(full.map(_.toSeq).toSeq == exact.map(_.toSeq).toSeq,
       "full-probe full-shortlist ivf-pq batch must equal exact batch serving")
     // default geometry: mean per-query recall@5 vs exact stays usable
@@ -766,7 +827,7 @@ class AnnSpec extends AnyFunSuite {
       .filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val exact = IvfIndex.searchBatch(spark, index, centroids, queriesDf, k = 5,
-      nprobe = centroids.length).collect()
+      nprobe = centroids.length).orderBy("qid", "rnk").collect()
     assert(full.map(_.toSeq).toSeq == exact.map(_.toSeq).toSeq,
       "full-probe full-shortlist m=16 ivf-pq batch must equal exact batch serving")
     // finer codec at default serving knobs: recall not below the m=8

@@ -46,7 +46,7 @@ class KMeansFitSpec extends AnyFunSuite {
 
   test("driver and distributed fits find the same clusters on a separable sample") {
     val df = clustered(80, axes)
-    val local = KMeansFit.cosine(df, 80L, 4, IvfIndex.Seed)
+    val local = KMeansFit.cosine(df, 80L, 3, 4, IvfIndex.Seed)
     val dist = KMeansFit.distributed(
       df.select(org.apache.spark.ml.functions.array_to_vector(col("embedding")).as("features")),
       4, IvfIndex.Seed, "cosine").setPredictionCol("centroid_id")
@@ -65,19 +65,19 @@ class KMeansFitSpec extends AnyFunSuite {
 
   test("degenerate samples: empty fails, fewer distinct rows than k give min(k, distinct) centers") {
     val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
-    intercept[IllegalArgumentException](KMeansFit.cosine(empty, 0L, 4, IvfIndex.Seed))
+    intercept[IllegalArgumentException](KMeansFit.cosine(empty, 0L, 0, 4, IvfIndex.Seed))
     intercept[IllegalArgumentException](
-      KMeansFit.subspaces(empty.withColumnRenamed("embedding", "nvec"), "nvec", 4, 2, 4, PqIndex.Seed))
+      KMeansFit.subspaces(empty.withColumnRenamed("embedding", "nvec"), "nvec", 2, 4, PqIndex.Seed))
     // three distinct directions repeated: k-means|| and the driver fit both stop at three
     val three = (0 until 30).map(i => (i.toLong, axes(i % 3))).toDF("vec_id", "embedding")
-    val local = KMeansFit.cosine(three, 30L, 8, IvfIndex.Seed)
+    val local = KMeansFit.cosine(three, 30L, 3, 8, IvfIndex.Seed)
     val dist = KMeansFit.distributed(
       three.select(org.apache.spark.ml.functions.array_to_vector(col("embedding")).as("features")),
       8, IvfIndex.Seed, "cosine")
     assert(local.clusterCenters.length == 3)
     assert(dist.clusterCenters.length == 3)
     val cbs = KMeansFit.subspaces(three.select(col("vec_id"), col("embedding").cast("array<double>").as("nvec")),
-      "nvec", 3, 3, PqIndex.NumCodewords, PqIndex.Seed)
+      "nvec", 3, PqIndex.NumCodewords, PqIndex.Seed)
     assert(cbs.map(_.length).toSeq == Seq(2, 2, 2), cbs.map(_.length).toSeq)
   }
 
@@ -89,5 +89,16 @@ class KMeansFitSpec extends AnyFunSuite {
     assert(buildJobs <= 6, s"IvfIndex.build ran $buildJobs jobs")
     val (_, pqJobs) = GraftJobCount.of(spark.sparkContext)(PqIndex.fitCodebooks(spark, sf))
     assert(pqJobs <= 2, s"PqIndex.fitCodebooks ran $pqJobs jobs")
+  }
+
+  test("a fit learns the dimension from jobs it runs anyway: IvfIndex.build ≤ 4, PqIndex.fitCodebooks 1") {
+    Artifacts.clear()
+    // the corpus count job also reads the width, and is cached
+    assert(IvfIndex.corpusShape(spark, sf)._2 == 64)
+    val (_, buildJobs) = GraftJobCount.of(spark.sparkContext)(IvfIndex.build(spark, sf))
+    assert(buildJobs <= 4, s"IvfIndex.build ran $buildJobs jobs")
+    // the collected sample gives the PQ width: one job, the collect
+    val (_, pqJobs) = GraftJobCount.of(spark.sparkContext)(PqIndex.fitCodebooks(spark, sf))
+    assert(pqJobs == 1, s"PqIndex.fitCodebooks ran $pqJobs jobs")
   }
 }

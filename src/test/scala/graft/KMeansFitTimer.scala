@@ -46,7 +46,7 @@ object KMeansFitTimer {
     // rows = 0 states a sample small enough for the driver whatever its
     // real size, so `cosine` takes the driver branch at every size
     def driver(train: org.apache.spark.sql.DataFrame, k: Int) =
-      KMeansFit.cosine(train, 0L, k, IvfIndex.Seed).clusterCenters.length
+      KMeansFit.cosine(train, 0L, dim, k, IvfIndex.Seed).clusterCenters.length
     def distributed(train: org.apache.spark.sql.DataFrame, k: Int) =
       KMeansFit.distributed(train.select(array_to_vector(col("embedding")).as("features")),
         k, IvfIndex.Seed, "cosine").clusterCenters.length

@@ -420,6 +420,48 @@ class PlanSpec extends AnyFunSuite {
     assert(!pMine.contains("CartesianProduct"), pMine)
   }
 
+  test("ivf batch search: one shuffle (the per-query top-k), no sort, window or nested-loop join") {
+    import org.apache.spark.sql.execution.{SortExec, window}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    val (index, centroids) = IvfIndex.build(spark, sf)
+    val df = IvfIndex.searchBatch(spark, index, centroids, VectorSearch.batchQueries(spark, sf), k = 5)
+    df.collect()
+    val ns = nodes(df.queryExecution.executedPlan, intoCached = false)
+    val p = df.queryExecution.executedPlan.toString
+    assert(ns.count(_.isInstanceOf[ShuffleExchangeExec]) == 1, p)
+    assert(!ns.exists(n => n.isInstanceOf[SortExec] || n.isInstanceOf[window.WindowExec] ||
+      n.isInstanceOf[BroadcastNestedLoopJoinExec]), p)
+  }
+
+  test("blocked dedup and pair mining: the probe rows carry their payload, no join keyed on qid") {
+    import org.apache.spark.sql.execution.joins.{HashJoin, SortMergeJoinExec}
+    val (index, centroids) = IvfIndex.build(spark, sf)
+    def joinKeys(df: DataFrame): Seq[String] = {
+      df.collect()
+      nodes(df.queryExecution.executedPlan, intoCached = false).flatMap {
+        case j: HashJoin => j.leftKeys ++ j.rightKeys
+        case j: SortMergeJoinExec => j.leftKeys ++ j.rightKeys
+        case _ => Nil
+      }.flatMap(_.references.map(_.name))
+    }
+    Seq(
+      "dedupPairsAt" -> IvfIndex.dedupPairsAt(spark, sf, index, centroids, 0),
+      "pairMiningIvfAt" -> Multimodal.pairMiningIvfAt(spark, sf, index, centroids, 0)).foreach {
+      case (name, df) =>
+        val keys = joinKeys(df)
+        assert(keys.contains("centroid_id"), s"$name: $keys")
+        assert(!keys.contains("qid"), s"$name joins on qid: $keys")
+    }
+  }
+
+  test("mmr rerank: the top-20 candidate scan stays in the plan") {
+    val p = plan(HybridSearch.mmrRerank(spark, sf))
+    assert(p.contains("TakeOrderedAndProject"), p)
+    assert(p.contains("MapPartitions"), p)
+    assert(!p.contains("LocalTableScan"), p)
+  }
+
   test("doc_extract_report: pruned scan, narrow decode, partial agg before the only hash exchange") {
     // the r14 ExplainAudit narrative, pinned (VERDICT r14 item 6): the
     // gate query reads documents with ReadSchema pruned to
